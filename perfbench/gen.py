@@ -79,6 +79,17 @@ class IngestPlan:
     def n_files(self) -> int:
         return sum(len(d.csvs) + len(d.jsons) for d in self.drops)
 
+    @property
+    def pending_rows(self) -> int:
+        """Data rows of accepted files whose metadata has not arrived yet
+        (the fact keeps them with a NULL ``simulation_num`` until it does)."""
+        landed = {s for d in self.drops for s in d.jsons}
+        return sum(c.rows - len(c.malformed) for c in self.csvs() if not c.bad_header and c.sid not in landed)
+
+    def prefix(self, k: int) -> "IngestPlan":
+        """The first ``k`` drops (the ones a run delivered)."""
+        return IngestPlan(self.drops[:k])
+
 
 def plan_ingest(
     rng: np.random.Generator,
@@ -86,40 +97,36 @@ def plan_ingest(
     files_per_drop: int,
     rows_per_file: int,
     drops_per_day: int = 8,
-    late_drop_share: float = 0.25,
-    bad_header_files: int = 2,
-    malformed_file_share: float = 0.05,
+    bad_header_drops: tuple[int, ...] = (0, 1),
     malformed_row_share: float = 0.005,
 ) -> IngestPlan:
-    """Drop schedule with seeded defects: ~``malformed_file_share`` of the
-    files carry ~``malformed_row_share`` malformed rows, ``bad_header_files``
-    files lack a required column, and in ~``late_drop_share`` of the drops
-    (never the last) some metadata arrives one drop late."""
-    n_csv = n_drops * files_per_drop
-    # drop 0 is the warm-up backlog; bad headers land in the timed drops
-    first_timed = files_per_drop if n_drops > 1 else 0
-    bad = set(rng.choice(np.arange(first_timed, n_csv), size=bad_header_files, replace=False).tolist())
+    """Drop schedule with a fixed shape and seeded content. Every drop
+    holds back a quarter of its metadata, which arrives with the next
+    drop, so every cycle after the first commits a late-metadata update;
+    one seeded file per drop carries ~``malformed_row_share`` malformed
+    rows; one seeded file in each of ``bad_header_drops`` lacks a required
+    column. The last drop holds nothing back. Every seed gives the same
+    shape, so runs on different seeds do the same work."""
     n_malformed_rows = max(1, round(rows_per_file * malformed_row_share))
+    n_late = max(1, files_per_drop // 4)
     drops: list[Drop] = []
     held: list[str] = []
     base = int(rng.integers(1, 2**62))
-    # late metadata in a seeded ~late_drop_share of the timed drops, at least one
-    late = [d for d in range(1, n_drops - 1) if rng.random() < late_drop_share]
-    if not late and n_drops > 2:
-        late = [int(rng.integers(1, n_drops - 1))]
     for d in range(n_drops):
+        bad = int(rng.integers(files_per_drop)) if d in bad_header_drops else -1
+        malformed_at = int(rng.integers(files_per_drop))
+        if malformed_at == bad:
+            malformed_at = (bad + 1) % files_per_drop
         csvs = []
         for i in range(files_per_drop):
-            n = d * files_per_drop + i
-            sid = str(uuid.UUID(int=base + n))
+            sid = str(uuid.UUID(int=base + d * files_per_drop + i))
             malformed = []
-            if n not in bad and rng.random() < malformed_file_share:
+            if i == malformed_at:
                 malformed = sorted(rng.choice(rows_per_file, size=n_malformed_rows, replace=False).tolist())
-            csvs.append(CsvSpec(sid, rows_per_file, malformed, bad_header=n in bad))
+            csvs.append(CsvSpec(sid, rows_per_file, malformed, bad_header=i == bad))
         jsons = held + [c.sid for c in csvs]
         held = []
-        if d in late:
-            n_late = max(1, files_per_drop // 4)
+        if d < n_drops - 1:
             held = jsons[-n_late:]
             jsons = jsons[:-n_late]
         day = f"2026-03-{d // drops_per_day + 1:02d}"
@@ -181,8 +188,8 @@ def _metadata_text(sid: str, n: int, day: str) -> str:
 def stage_drops(rng: np.random.Generator, plan: IngestPlan, staging: str) -> list[list[tuple[str, str]]]:
     """Write every drop's files under ``staging`` (temporary names) and
     return, per drop, the (staged path, final relative path) renames that
-    deliver it. Delivering is then a rename, so the generator never runs
-    late on file formatting."""
+    deliver it. Delivering is then a rename, so a drop's freshness does
+    not include file formatting."""
     rows = max(c.rows for c in plan.csvs())
     bodies = _csv_templates(rng, rows)
     os.makedirs(staging, exist_ok=True)

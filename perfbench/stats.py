@@ -28,6 +28,10 @@ def median(values: list[float]) -> float:
     return statistics.median(values) if values else float("nan")
 
 
+def geomean(values: list[float]) -> float:
+    return statistics.geometric_mean(values) if values else float("nan")
+
+
 def self_times(spans: list[tuple[float, float, int | None]]) -> list[float]:
     """Per span (start, end, parent index): its duration minus the part
     of its interval that its direct children cover."""

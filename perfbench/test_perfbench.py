@@ -43,18 +43,27 @@ def test_parse_metric_forms():
 
 
 def test_ingest_plan_is_seeded_and_delivers_every_file(tmp_path):
-    a = gen.plan_ingest(np.random.default_rng(7), 6, 4, 50)
-    b = gen.plan_ingest(np.random.default_rng(7), 6, 4, 50)
+    a = gen.plan_ingest(np.random.default_rng(7), 7, 4, 50)
+    b = gen.plan_ingest(np.random.default_rng(7), 7, 4, 50)
     assert a == b
     assert a.rejected_files == 2
     sids = [c.sid for c in a.csvs()]
     assert sorted(sids) == sorted(s for d in a.drops for s in d.jsons)
-    assert any(len(d.jsons) < len(d.csvs) for d in a.drops[1:-1]), "no late metadata drop"
+    assert all({c.sid for c in d.csvs} - set(d.jsons) for d in a.drops[:-1]), "a drop without late metadata"
+    assert a.pending_rows == 0 and a.prefix(3).pending_rows == 50 - sum(len(c.malformed) for c in a.drops[2].csvs[-1:])
     moves = gen.stage_drops(np.random.default_rng(1), a, str(tmp_path / "staging"))
     for m in moves:
         gen.deliver(m, str(tmp_path / "incoming"))
     listed = [f for _, _, fs in os.walk(tmp_path / "incoming") for f in fs]
     assert len(listed) == a.n_files
+
+
+def test_ingest_plan_shape_does_not_depend_on_the_seed():
+    shape = lambda p: [(len(d.csvs), len(d.jsons), sum(c.bad_header for c in d.csvs),
+                        sum(len(c.malformed) for c in d.csvs)) for d in p.drops]
+    a = gen.plan_ingest(np.random.default_rng(1), 12, 8, 2000)
+    b = gen.plan_ingest(np.random.default_rng(2), 12, 8, 2000)
+    assert shape(a) == shape(b) and a.csvs()[0].sid != b.csvs()[0].sid
 
 
 def test_corpus_shape():
@@ -77,14 +86,14 @@ def spark(tmp_path_factory):
     _stop_spark(s)
 
 
-@pytest.mark.parametrize("name", ["ingest_incremental", "corpus_build", "query_mix"])
+@pytest.mark.parametrize("name", ["ingest_incremental", "analytics_mix"])
 @pytest.mark.parametrize("traced", [False, True])
 def test_workload_tiny(spark, tmp_path, monkeypatch, name, traced):
     from perfbench.trace import Tracer
     from perfbench.workloads import WORKLOADS
 
     cls = WORKLOADS[name]
-    tiny = {"FILES": 3, "ROWS": 200, "INTERVAL_S": 0.5, "ORIGINALS": 120, "SF": 0.001,
+    tiny = {"FILES": 3, "ROWS": 200, "ORIGINALS": 120, "SF": 0.001,
             "QUERIES": cls.QUERIES[:3] if hasattr(cls, "QUERIES") else ()}
     for k, v in tiny.items():
         if hasattr(cls, k):
@@ -98,7 +107,7 @@ def test_workload_tiny(spark, tmp_path, monkeypatch, name, traced):
     finally:
         tracer.uninstall()
     assert wl.units and wl.failed == 0, [c for c in wl.checks if not c[1]]
-    assert wl.latency_samples()
+    assert wl.latency() > 0
     if traced:
         walls = [u["wall"] for u in wl.units]
         layers = tracer.layer_metrics(len(walls), sum(walls), 2)

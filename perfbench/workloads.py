@@ -1,5 +1,5 @@
 """The benchmark's workloads. Each one generates its inputs from the seed
-(``setup``, which ends with one untimed warm-up unit), runs units for a
+(``setup``, which ends with untimed warm-up units), runs units for a
 fixed time (``measure``) and checks the program's outputs (``check``).
 
 Only public entry points are called: ``ReactionLake.run_once`` /
@@ -11,13 +11,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import threading
 import time
 
 import numpy as np
 
 from perfbench import gen
-from perfbench.stats import median, tail
+from perfbench.stats import geomean, median, tail
 
 
 class Workload:
@@ -68,31 +67,32 @@ class Workload:
 
 
 class IngestIncremental(Workload):
-    """An open loop against one long-lived lake: a generator thread drops
-    ``FILES`` CSVs plus their metadata every ``INTERVAL_S``; one loader
-    loop runs run_once → materialize_enrichment → a fixed lake read."""
+    """One long-lived lake fed by one loader loop: each cycle renames the
+    next drop (``FILES`` CSVs plus metadata, a quarter of it for the
+    previous drop) into incoming/, then runs run_once →
+    materialize_enrichment → a fixed lake read. A drop's freshness is its
+    delivery → the end of the cycle that committed it."""
 
-    name, loop = "ingest_incremental", "open"
-    FILES, ROWS, INTERVAL_S = 8, 2000, 1.0
+    name, loop = "ingest_incremental", "closed"
+    FILES, ROWS, WARMUP = 4, 1000, 2
 
     def setup(self, seconds: float) -> None:
         from reactionetl_etl_spark.etl.pipeline import ReactionLake
 
-        # drops are due in the first half of the window only: a loader cycle
-        # takes ~6 s on a 4-core host, so every run batches them the same
-        # way (first drop alone, the rest in the next cycle) instead of a
-        # drop landing on either side of a cycle start from run to run
-        self.n_timed = max(2, int(seconds / (2 * self.INTERVAL_S)))
-        self.plan = gen.plan_ingest(self.rng, 1 + self.n_timed, self.FILES, self.ROWS)
+        # the warm-up drops and at most one timed drop per second
+        self.plan = gen.plan_ingest(self.rng, self.WARMUP + int(seconds) + 1, self.FILES, self.ROWS)
         self.incoming = os.path.join(self.work, "incoming")
         self.moves = gen.stage_drops(self.rng, self.plan, os.path.join(self.work, "staging"))
         self.lake = ReactionLake(os.path.join(self.work, "lake"), log_dir=os.path.join(self.work, "logs"))
-        self.input_bytes = gen.deliver(self.moves[0], self.incoming)
-        self._cycle()  # warm-up: the first drop, untimed
-        self.facts.update(
-            drop_interval_s=self.INTERVAL_S, files_per_drop=self.FILES, rows_per_file=self.ROWS,
-            timed_drops=self.n_timed, drop_bytes=self.input_bytes,
-        )
+        self.input_bytes = 0
+        # untimed warm-up cycles; the second commits the first one's late
+        # metadata, so every code path of a timed cycle has run once, and
+        # the bad-header files land here
+        for k in range(self.WARMUP):
+            self.input_bytes += gen.deliver(self.moves[k], self.incoming)
+            self._cycle()
+        self.delivered = self.WARMUP
+        self.facts.update(files_per_drop=self.FILES, rows_per_file=self.ROWS, warmup_drops=self.WARMUP, warmup_bytes=self.input_bytes)
 
     def _cycle(self) -> dict:
         from pyspark.sql import functions as F
@@ -118,63 +118,28 @@ class IngestIncremental(Workload):
         return {"load_s": t1 - t0, "read_s": t2 - t1, "files": res.files_processed, "reactions": len(per_rxn), "statuses": len(status)}
 
     def measure(self, seconds: float) -> None:
-        scheduled = [0.0] * (self.n_timed + 1)
-        self.late: list[float] = []
-        n_delivered = [1]
-        t0 = time.perf_counter()
-        stop = threading.Event()
-
-        def generator():
-            for k in range(1, self.n_timed + 1):
-                due = t0 + (k - 1) * self.INTERVAL_S
-                scheduled[k] = due
-                if stop.wait(max(0.0, due - time.perf_counter())):
-                    return
-                self.late.append(time.perf_counter() - due)
-                self.input_bytes_timed[0] += gen.deliver(self.moves[k], self.incoming)
-                n_delivered[0] = k + 1
-
-        self.input_bytes_timed = [0]
-        thread = threading.Thread(target=generator, name="perfbench-generator")
-        thread.start()
-        committed = 1
         self.freshness: list[float] = []
-        deadline = t0 + seconds + 120
-        try:
-            while committed <= self.n_timed:
-                if time.perf_counter() > deadline:
-                    self.failed_units += self.n_timed + 1 - committed
+        self.input_bytes_timed = 0
+        t0 = time.perf_counter()
+        while self.delivered < len(self.plan.drops) and (time.perf_counter() - t0 < seconds or not self.units):
+            t_in = time.perf_counter()
+            self.input_bytes_timed += gen.deliver(self.moves[self.delivered], self.incoming)
+            self.delivered += 1
+            try:
+                out, wall = self.unit("cycle", self._cycle)
+            except Exception as e:  # a failed cycle is counted, the loop goes on
+                self.failed_units += 1
+                self.check_that("cycle_raised", False, repr(e)[:200])
+                if self.failed_units > 2:
                     break
-                visible = n_delivered[0]
-                if visible <= committed:
-                    time.sleep(0.02)
-                    continue
-                try:
-                    out, wall = self.unit("cycle", self._cycle)
-                except Exception as e:  # a failed cycle is counted, the loop goes on
-                    self.failed_units += 1
-                    self.check_that("cycle_raised", False, repr(e)[:200])
-                    continue
-                end = time.perf_counter()
-                self.units.append({"wall": wall, **out})
-                self.freshness += [end - scheduled[k] for k in range(committed, visible)]
-                committed = visible
-        finally:
-            stop.set()
-            thread.join()
-        # every file that was delivered is committed by one more cycle
-        if n_delivered[0] > committed:
-            self._cycle()
-        self.facts["generator_late_s"] = max(self.late) if self.late else 0.0
+                continue
+            self.units.append({"wall": wall, **out})
+            self.freshness.append(time.perf_counter() - t_in)
 
     def check(self) -> None:
         from pyspark.sql import functions as F
 
-        spark, lake, plan = self.spark, self.lake, self.plan
-        self.check_that(
-            "generator_on_time", self.facts["generator_late_s"] <= self.INTERVAL_S,
-            f"late {self.facts['generator_late_s']:.3f}s",
-        )
+        spark, lake, plan = self.spark, self.lake, self.plan.prefix(self.delivered)
         fact_rows = lake.fact(spark).count()
         q = lake.quarantine(spark)
         bad_rows = q.filter(F.col("reason").startswith("malformed row")).count()
@@ -200,7 +165,10 @@ class IngestIncremental(Workload):
             f"{term['n']}/{term['d']} vs {plan.n_files}",
         )
         nulls = lake.fact(spark).filter(F.col("simulation_num").isNull()).count()
-        self.check_that("no_null_simulation_num_after_metadata", nulls == 0, f"{nulls} rows")
+        self.check_that(
+            "null_simulation_num_only_while_metadata_pending", nulls == plan.pending_rows,
+            f"{nulls} vs {plan.pending_rows} rows",
+        )
         self.facts["rows_quarantined"] = bad_rows
         lake_bytes, lake_files = 0, {}
         for table in ("fact_sim", "dim_rxn", "audit", "manifest"):
@@ -216,132 +184,64 @@ class IngestIncremental(Workload):
 
     def report(self) -> dict:
         loads = [u["load_s"] for u in self.units]
-        total_in = self.input_bytes + self.input_bytes_timed[0]
+        total_in = self.input_bytes + self.input_bytes_timed
         t = tail(self.freshness)
         return {
-            "ingest_mb_per_s": (self.input_bytes_timed[0] / 1e6 / sum(loads)) if loads else None,
+            "ingest_mb_per_s": (self.input_bytes_timed / 1e6 / sum(loads)) if loads else None,
             "freshness_p50_s": median(self.freshness),
             "freshness_tail_s": t and {"value": t[1], "percentile": t[0], "n": t[2]},
             "lake_query_p50_s": median([u["read_s"] for u in self.units]),
-            "generator_late_s": self.facts["generator_late_s"],
             "cycles": len(self.units),
             "cycle_walls_s": [round(u["wall"], 3) for u in self.units],
             "lake_bytes_per_input_byte": self.facts["lake_bytes"] / max(1, total_in),
         }
 
-    def latency_samples(self) -> list[float]:
-        return self.freshness
+    def latency(self) -> float:
+        """The run's fastest freshness: host interference only ever adds
+        time, and a run holds few cycles."""
+        return min(self.freshness)
 
 
-# -- corpus_build -----------------------------------------------------------
+# -- analytics_mix ----------------------------------------------------------
 
 
-class CorpusBuild(Workload):
-    """``build_training_corpus`` end to end, in a closed loop."""
+class AnalyticsMix(Workload):
+    """A closed loop, one client. Each pass runs a fixed set of the
+    catalog's ``bench=True`` queries on seeded TPC-H-shaped tables, each
+    to the noop sink, plus one ``build_training_corpus`` over a seeded
+    corpus with injected near-duplicates, in a seeded order per pass."""
 
-    name, loop = "corpus_build", "closed"
-    ORIGINALS = 1600
+    name, loop = "analytics_mix", "closed"
+    SF, ORIGINALS = 0.002, 400
+    BUILD = "training_corpus_build"
+    # relational, events, text and similarity queries; the build covers
+    # the dedup, graph and contamination operators
+    QUERIES = (
+        "pricing_summary", "shipping_priority_top10", "totalprice_percent_rank", "events_hourly_by_type",
+        "asof_click_to_purchase", "text_stats_by_lang", "cosine_topk_bruteforce", "tfidf_top_terms",
+    )
 
     def setup(self, seconds: float) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        c = gen.make_corpus(self.rng, self.ORIGINALS)
-        self.corpus = c
-        src = os.path.join(self.work, "corpus")
-        os.makedirs(src, exist_ok=True)
-        pq.write_table(pa.table({"doc_id": c.doc_ids, "text": c.texts}), os.path.join(src, "docs.parquet"))
-        pq.write_table(pa.table({"doc_id": c.eval_ids, "text": c.eval_texts}), os.path.join(src, "eval.parquet"))
-        self.docs = self.spark.read.parquet(os.path.join(src, "docs.parquet"))
-        self.eval_set = self.spark.read.parquet(os.path.join(src, "eval.parquet"))
-        self.n_builds = 0
-        self.stats: list = []
-        self.shard_stats: list = []
-        self._build(check=False)  # warm-up, untimed
-        self.facts.update(documents=len(c.texts), originals=self.ORIGINALS, injected_near_dups=c.n_near_dups)
-
-    def _build(self, check: bool = True):
-        from reactionetl_etl_spark.pipelines.training import build_training_corpus
-
-        out = os.path.join(self.work, f"out{self.n_builds}")
-        self.n_builds += 1
-        tr = self.tracer
-
-        def run():
-            with tr.span("training.build"):
-                return build_training_corpus(self.spark, self.docs, out, eval_set=self.eval_set)
-
-        stats, wall = self.unit("build", run)
-        if check:
-            self.units.append({"wall": wall})
-            self._check_build(stats, out)
-        shutil.rmtree(out, ignore_errors=True)
-        return stats
-
-    def _check_build(self, s, out: str) -> None:
-        drops = s.n_quality_dropped + s.n_dup_dropped + s.n_contaminated_dropped
-        self.check_that("n_input_equals_exported_plus_dropped", s.n_input == s.n_exported + drops, str(s))
-        ledger = self.spark.read.parquet(f"{out}/ledger").count()
-        self.check_that("ledger_rows_equal_drops", ledger == drops, f"{ledger} vs {drops}")
-        inj = self.corpus.n_near_dups
-        self.check_that(
-            "dup_drops_near_injected", 0.85 * inj <= s.n_dup_dropped <= 1.05 * inj, f"{s.n_dup_dropped} vs {inj}"
-        )
-        shard = sorted(tuple(r) for r in self.spark.read.parquet(f"{out}/shard_stats").collect())
-        if self.stats:
-            self.check_that("identical_across_repetitions", s == self.stats[0] and shard == self.shard_stats[0])
-        self.stats.append(s)
-        self.shard_stats.append(shard)
-
-    def measure(self, seconds: float) -> None:
-        t0 = time.perf_counter()
-        while time.perf_counter() - t0 < seconds or len(self.units) < 2:
-            try:
-                self._build()
-            except Exception as e:
-                self.failed_units += 1
-                self.check_that("build_raised", False, repr(e)[:200])
-                if self.failed_units > 2:
-                    break
-
-    def report(self) -> dict:
-        walls = [u["wall"] for u in self.units]
-        n = self.stats[0].n_input if self.stats else 0
-        return {
-            "corpus_docs_per_s": n / median(walls) if walls else None,
-            "build_p50_s": median(walls),
-            "builds": len(walls),
-            "stats": self.stats[0].__dict__ if self.stats else None,
-        }
-
-    def latency_samples(self) -> list[float]:
-        return [u["wall"] for u in self.units]
-
-
-# -- query_mix --------------------------------------------------------------
-
-
-class QueryMix(Workload):
-    """A closed loop, one client, over a fixed set of the catalog's
-    ``bench=True`` queries in a seeded order per pass; each query runs to
-    the noop sink."""
-
-    name, loop = "query_mix", "closed"
-    SF = 0.002
-    QUERIES = (
-        "pricing_summary", "shipping_priority_top10", "local_supplier_volume",
-        "returned_items_top_customers", "totalprice_percent_rank", "events_hourly_by_type",
-        "asof_click_to_purchase", "text_stats_by_lang", "duplicate_clusters",
-        "cross_doc_dup_rate", "contamination_check_4gram", "cosine_topk_bruteforce", "tfidf_top_terms",
-    )
-
-    def setup(self, seconds: float) -> None:
         from reactionetl_etl_spark.plans.catalog import bench_queries
 
         self.sf_dir = os.path.join(self.work, "sf")
         self.facts["table_rows"] = gen.write_tables(self.rng, self.sf_dir, self.SF)
         specs = bench_queries()
         self.specs = {n: specs[n] for n in self.QUERIES}
+        c = self.corpus = gen.make_corpus(self.rng, self.ORIGINALS)
+        src = os.path.join(self.work, "corpus")
+        os.makedirs(src, exist_ok=True)
+        pq.write_table(pa.table({"doc_id": c.doc_ids, "text": c.texts}), os.path.join(src, "docs.parquet"))
+        pq.write_table(pa.table({"doc_id": c.eval_ids, "text": c.eval_texts}), os.path.join(src, "eval.parquet"))
+        self.docs = self.spark.read.parquet(os.path.join(src, "docs.parquet"))
+        self.eval_set = self.spark.read.parquet(os.path.join(src, "eval.parquet"))
+        self.facts.update(documents=len(c.texts), originals=self.ORIGINALS, injected_near_dups=c.n_near_dups)
+        self.n_builds = 0
+        self.stats: list = []
+        self.shard_stats: list = []
         self.oracle_pass()
 
     def oracle_pass(self) -> None:
@@ -371,44 +271,80 @@ class QueryMix(Workload):
         finally:
             con.close()
 
-    def _query(self, name: str) -> tuple[float, float]:
+    def _query(self, name: str) -> None:
         tr = self.tracer
-        t0 = time.perf_counter()
         with tr.span("catalog.plan"):
             df = self.specs[name].builder(self.spark, self.sf_dir)
-        t1 = time.perf_counter()
         with tr.span("catalog.exec"):
             df.write.format("noop").mode("overwrite").save()
-        return t1 - t0, time.perf_counter() - t1
+
+    def _build(self) -> None:
+        """One corpus build into a scratch directory, its outputs checked."""
+        from reactionetl_etl_spark.pipelines.training import build_training_corpus
+
+        out = os.path.join(self.work, f"out{self.n_builds}")
+        self.n_builds += 1
+        with self.tracer.span("training.build"):
+            s = build_training_corpus(self.spark, self.docs, out, eval_set=self.eval_set)
+        drops = s.n_quality_dropped + s.n_dup_dropped + s.n_contaminated_dropped
+        self.check_that("n_input_equals_exported_plus_dropped", s.n_input == s.n_exported + drops, str(s))
+        ledger = self.spark.read.parquet(f"{out}/ledger").count()
+        self.check_that("ledger_rows_equal_drops", ledger == drops, f"{ledger} vs {drops}")
+        inj = self.corpus.n_near_dups
+        self.check_that(
+            "dup_drops_near_injected", 0.85 * inj <= s.n_dup_dropped <= 1.15 * inj, f"{s.n_dup_dropped} vs {inj}"
+        )
+        shard = sorted(tuple(r) for r in self.spark.read.parquet(f"{out}/shard_stats").collect())
+        if self.stats:
+            self.check_that("identical_across_repetitions", s == self.stats[0] and shard == self.shard_stats[0])
+        self.stats.append(s)
+        self.shard_stats.append(shard)
+        shutil.rmtree(out, ignore_errors=True)
 
     def measure(self, seconds: float) -> None:
         t0 = time.perf_counter()
         self.passes: list[float] = []
-        while time.perf_counter() - t0 < seconds or not self.passes:
+        kinds = [*self.specs, self.BUILD]
+        # at least two passes, so every kind's fastest wall has two samples
+        while time.perf_counter() - t0 < seconds or len(self.passes) < 2:
             tp = time.perf_counter()
-            for name in self.rng.permutation(list(self.specs)):
+            for kind in self.rng.permutation(kinds):
+                kind = str(kind)
+                run = self._build if kind == self.BUILD else lambda: self._query(kind)
                 try:
-                    (plan_s, exec_s), wall = self.unit("query", lambda: self._query(name))
+                    _, wall = self.unit("build" if kind == self.BUILD else "query", run)
                 except Exception as e:
                     self.failed_units += 1
-                    self.check_that(f"query_raised:{name}", False, repr(e)[:200])
+                    self.check_that(f"raised:{kind}", False, repr(e)[:200])
                     continue
-                self.units.append({"wall": wall, "query": str(name), "plan_s": plan_s})
+                self.units.append({"wall": wall, "kind": kind})
             self.passes.append(time.perf_counter() - tp)
 
+    def _walls(self, build: bool) -> list[float]:
+        return [u["wall"] for u in self.units if (u["kind"] == self.BUILD) == build]
+
     def report(self) -> dict:
-        walls = [u["wall"] for u in self.units]
-        t = tail(walls)
+        queries, builds = self._walls(False), self._walls(True)
+        t = tail(queries)
         return {
-            "query_p50_s": median(walls),
+            "query_p50_s": median(queries),
             "query_tail_s": t and {"value": t[1], "percentile": t[0], "n": t[2]},
             "query_pass_s": median(self.passes),
+            "corpus_docs_per_s": self.stats[0].n_input / median(builds) if builds else None,
+            "build_p50_s": median(builds),
             "passes": len(self.passes),
             "queries": len(self.specs),
+            "stats": self.stats[0].__dict__ if self.stats else None,
         }
 
-    def latency_samples(self) -> list[float]:
-        return [u["wall"] for u in self.units]
+    def latency(self) -> float:
+        """Geometric mean over the unit kinds (each query, the build) of
+        each kind's fastest wall in the run: every kind weighs the same,
+        and host interference, which only ever adds time, is left out."""
+        walls: dict[str, list[float]] = {}
+        for u in self.units:
+            walls.setdefault(u["kind"], []).append(u["wall"])
+        return geomean([min(w) for w in walls.values()])
 
 
 def same_result(got, want) -> tuple[bool, str]:
@@ -439,4 +375,4 @@ def same_result(got, want) -> tuple[bool, str]:
     return (True, "") if rows(got) == rows(want) else (False, "values differ")
 
 
-WORKLOADS = {w.name: w for w in (IngestIncremental, CorpusBuild, QueryMix)}
+WORKLOADS = {w.name: w for w in (IngestIncremental, AnalyticsMix)}
