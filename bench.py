@@ -168,9 +168,9 @@ def host_calibration(spark=None) -> float:
 
 # Amortized-ingest batch size. The default 64-file batch measures the
 # per-batch FIXED costs floor (driver listing, commit, audit jobs) as
-# much as throughput; the decomposition curves (tools/
-# ingest_decompose.py) show the same pipeline at 17+ MB/s at 512 files
-# and 29 MB/s at 2048 — the number a daily 20 GB drop actually sees.
+# much as throughput; per-phase decomposition runs (PERF_NOTES.md) show
+# the same pipeline at 17+ MB/s at 512 files and 29 MB/s at 2048 — the
+# number a daily 20 GB drop actually sees.
 # Both are reported so the fixed-cost floor and the amortized path are
 # visible side by side. 0 disables the large run.
 N_ETL_FILES_LARGE = int(os.environ.get("SPARK_GRAFT_BENCH_ETL_LARGE", "512"))

@@ -40,7 +40,6 @@ touches only unenriched partitions.
 
 from __future__ import annotations
 
-import time
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -88,10 +87,6 @@ class ReactionLake:
         # parity: rotating info.log + error.log under <lake>/logs unless
         # pointed elsewhere. The audit table stays the queryable record.
         setup_logging(log_dir or f"{self.root}/logs")
-        # wall-clock seconds per run_once phase, refreshed each call —
-        # the decomposition handle tools/ingest_decompose.py reads so
-        # ingest perf work targets the right phase instead of guessing
-        self.last_phase_timings: dict[str, float] = {}
 
     # -- table readers ----------------------------------------------------
 
@@ -162,24 +157,21 @@ class ReactionLake:
         spark: SparkSession,
         incoming_root: str,
         now: datetime | None = None,
-        enrich_inline: bool = True,
     ) -> RunResult:
         """Process every not-yet-processed file under incoming/<day>/.
 
-        ``enrich_inline`` (default): fact rows pick up their dim's
-        simulation_num DURING the fact write — the metadata JSONs are
-        cleansed first, and the fact append runs through the same
-        broadcast update-join (`enrich_fact`, J1) that
-        `materialize_enrichment` uses. The reference's main() also ends
-        every invocation with facts enriched (clean → load →
-        update_fact_simulations in one run); inlining reaches the same
-        end state without writing the fact table twice — at 512
-        bench files the separate enrichment rewrite was ~4 s of a 13 s
-        ingest. Facts whose metadata hasn't arrived stay NULL and
-        `materialize_enrichment` remains the late-metadata gap-filler
-        (the staged atomic partition-swap path, exercised by the
-        late-dim tests). ``enrich_inline=False`` restores the strict
-        load-then-rewrite sequence."""
+        Fact rows pick up their dim's simulation_num DURING the fact
+        write — the metadata JSONs are cleansed first, and the fact
+        append runs through the same broadcast update-join
+        (`enrich_fact`, J1) that `materialize_enrichment` uses. The
+        reference's main() also ends every invocation with facts
+        enriched (clean → load → update_fact_simulations in one run);
+        inlining reaches the same end state without writing the fact
+        table twice — at 512 bench files the separate enrichment
+        rewrite was ~4 s of a 13 s ingest. Facts whose metadata hasn't
+        arrived stay NULL and `materialize_enrichment` remains the
+        late-metadata gap-filler (the staged atomic partition-swap path,
+        exercised by the late-dim tests)."""
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         # one nonce per run_once call: etl_ids stay deterministic WITHIN
         # a run (audit + manifest writes of the same status frame agree)
@@ -187,8 +179,6 @@ class ReactionLake:
         # longer collide in the append-only audit log
         run_token = f"{now.isoformat()}|{uuid.uuid4().hex}"
         now_col = F.lit(now.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp_ntz")
-        _pt = self.last_phase_timings = {}
-        _t0 = time.perf_counter()
         all_csvs = list_raw_files(incoming_root, ".csv")
         all_jsons = list_raw_files(incoming_root, ".json")
         csvs = self._new_files(spark, all_csvs)
@@ -202,7 +192,6 @@ class ReactionLake:
         # take the per-path read.
         csv_dir_read = len(csvs) == len(all_csvs)
         json_dir_read = len(jsons) == len(all_jsons)
-        _pt["listing"] = time.perf_counter() - _t0
         log.info(
             "run_once: %d new reaction CSVs, %d new metadata JSONs under %s",
             len(csvs), len(jsons), incoming_root,
@@ -217,7 +206,6 @@ class ReactionLake:
         # 1-row tally aggregate per branch for RunResult.
         csv_st = json_st = None
         fact_loaded = dim_loaded = quarantined_files = 0
-        _t0 = time.perf_counter()
 
         # Overlap (r14, guide-§2.6 shape): the CSV PARSE does not depend
         # on the dims phase — only the fact append's inline enrich join
@@ -227,9 +215,7 @@ class ReactionLake:
         # branch below joins the by-then-appended dim exactly as
         # before. count() on the clean projection populates the persist
         # of the full parsed scan (InMemoryRelation materializes every
-        # column). NOTE: the per-phase wall timers overlap under this —
-        # rp_dims absorbs parse time that previously showed under
-        # rp_fact_cleanse_write.
+        # column).
         from concurrent.futures import ThreadPoolExecutor
 
         csv_result = None
@@ -253,7 +239,7 @@ class ReactionLake:
 
         # ---- metadata JSONs → dim_rxn (V3 + W3 + X4) ----
         # Dims are processed BEFORE the facts so the fact append can
-        # pick up this batch's simulation_nums inline (enrich_inline).
+        # pick up this batch's simulation_nums inline.
         try:
             if jsons:
                 result = cleanse_metadata_jsons(spark, jsons, dir_read=json_dir_read)
@@ -348,13 +334,10 @@ class ReactionLake:
                     log.warning("quarantined %d metadata files (validation failed)", int(tally["q"]))
                 log.info("metadata: %d files, %d dim rows loaded", len(jsons), int(tally["loaded"] or 0))
                 result.release()
-
-            _pt["dims"] = time.perf_counter() - _t0
         except BaseException:
             _abort_csv_pool()
             raise
         # ---- reaction CSVs → fact_sim (EP2 + W2; + inline J1) ----
-        _t0 = time.perf_counter()
         if csvs:
             result = csv_result
             if _csv_warm is not None:
@@ -384,13 +367,12 @@ class ReactionLake:
                     "simulation_num": F.lit(None).cast("int"),
                 }
             ).select(*fact_cols)
-            if enrich_inline:
-                # the dim read AFTER the JSON append sees this batch's
-                # rows; facts with absent metadata stay NULL for the
-                # materialize_enrichment gap-filler
-                dim_now = self.dim(spark)
-                if dim_now is not None:
-                    fact_new = enrich_fact(fact_new, dim_now).select(*fact_cols)
+            # the dim read AFTER the JSON append sees this batch's rows;
+            # facts with absent metadata stay NULL for the
+            # materialize_enrichment gap-filler
+            dim_now = self.dim(spark)
+            if dim_now is not None:
+                fact_new = enrich_fact(fact_new, dim_now).select(*fact_cols)
             # overlap (r14): the fact append and the per-file status
             # checkpoint both read the (already-materialized) cleanse
             # cache and nothing else they share, so the status build
@@ -409,8 +391,6 @@ class ReactionLake:
                 )
                 csv_st = self._csv_status_frame(spark, csvs, result, fact_new, run_token)
                 _fact_wr.result()
-            _pt["fact_cleanse_write"] = time.perf_counter() - _t0
-            _t0 = time.perf_counter()
 
             tally = csv_st.agg(
                 F.sum(F.when(F.col("status") == "success", F.col("n_ok")).otherwise(F.lit(0))).alias("ok"),
@@ -437,9 +417,7 @@ class ReactionLake:
             if tally["q"]:
                 log.warning("quarantined %d reaction files (see audit/quarantine tables)", int(tally["q"]))
 
-        _pt["fact_status"] = time.perf_counter() - _t0
         # ---- audit + manifest appends (DataFrame-native, W4/W5) ----
-        _t0 = time.perf_counter()
         # csv-first union order matches the pre-r8 audit row layout
         status_frames = [st for st in (csv_st, json_st) if st is not None]
         if status_frames:
@@ -455,7 +433,6 @@ class ReactionLake:
                 now_col.alias("ingested_at"),
             ).write.mode("append").parquet(self.manifest_path)
 
-        _pt["audit_manifest"] = time.perf_counter() - _t0
         if csv_result is not None:
             csv_result.release()
         log.info(

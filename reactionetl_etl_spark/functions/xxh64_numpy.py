@@ -12,8 +12,10 @@ This module reproduces those two paths over numpy arrays so that
 Arrow-batched operators (the MinHash signature fold) can compute the
 EXACT same 64-bit values Spark's JVM expression produces — the hash
 values ARE the MinHash signatures, so any deviation changes query
-output. Bit-identity is pinned by tests/test_xxh64_numpy.py against
-live `F.xxhash64` evaluations, including every tail-length class.
+output. Bit-identity is pinned by
+tests/test_minhash_arrow.py::test_xxh64_numpy_matches_spark_all_tail_lengths
+against live `F.xxhash64` evaluations, including every tail-length
+class.
 
 Everything is uint64 arithmetic with natural wraparound; numpy uint64
 multiplication/addition wrap silently (no overflow warnings), which is

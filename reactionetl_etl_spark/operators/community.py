@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reactionetl_etl_spark.operators.graph import _local_frame, _small_graph_edges
+
 
 def label_propagation(
     edges: DataFrame,
@@ -38,7 +40,6 @@ def label_propagation(
     rounds: int = 4,
     directed: bool = False,
     checkpoint_every: int = 2,
-    small_graph_max: int | None = 200_000,
 ) -> DataFrame:
     """(node, community) after ``rounds`` synchronous min-label
     propagation rounds. ``directed=False`` symmetrizes the edges, so
@@ -57,66 +58,34 @@ def label_propagation(
     if checkpoint_every < 1:
         raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
 
-    if small_graph_max is not None:
-        # Small-graph fast path (r14; the `connected_components`
-        # discipline verbatim): ONE bounded action on the raw edge plan
-        # doubles as size probe + edge fetch. Community graphs out of
-        # the dedup/co-occurrence builders are usually a sliver of the
-        # table they derive from — the benched co-purchase graph is
-        # ~3.6k edges at sf0.1, yet the distributed loop paid 4 rounds
-        # × (join + min-aggregate) plus eager checkpoints ≈ 2 s of pure
-        # job scheduling for it. At or below the bound (≈ a few MB of
-        # long pairs) the SAME synchronous recurrence runs on the
-        # driver — integer mins over a dict adjacency, bit-equal labels
-        # (pinned by test_label_propagation_matches_python_witness).
-        # Larger graphs fall through to the distributed loop, so the
-        # path caps overhead, never scale. NULL endpoints are dropped
-        # up front (r15, ADVICE): Python min() raises TypeError on
-        # None, and no catalog graph produces NULL node ids (edges
-        # derive from join keys) — the distributed loop's behavior on
-        # a NULL-keyed row is an engine-wide non-contract.
-        head = (
-            edges.select(src, dst)
-            .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .limit(small_graph_max + 1)
-            .collect()
-        )
-        if len(head) <= small_graph_max:
-            out_schema = edges.select(
-                F.col(src).alias("node"), F.col(dst).alias("community")
-            ).schema
-            # nbrs[v] = the label sources v hears each round: itself
-            # (the folded self-loop) + every u with an edge u -> v
-            # (+ v -> u when undirected)
-            nbrs: dict = {}
-            for a, b in head:
-                nbrs.setdefault(a, {a})
-                nbrs.setdefault(b, {b}).add(a)
-                if not directed:
-                    nbrs[a].add(b)
-            lab = {v: v for v in nbrs}
-            for _ in range(rounds):
-                lab = {v: min(lab[u] for u in nbrs[v]) for v in nbrs}
-            rows = sorted(lab.items())
-            # pandas, not a Python list: Arrow turns it into a JVM
-            # LocalRelation, so downstream aggregates run as local
-            # single-stage plans — a list-of-tuples frame round-trips
-            # through parallelize and schedules full-width shuffles
-            # (the r12 coalesce(1)-on-Python-frames lesson)
-            import pandas as pd
-
-            pdf = pd.DataFrame(rows, columns=["node", "community"])
-            # coalesce(1): the pandas conversion slices the local rows
-            # into defaultParallelism (32) partitions, so every consumer
-            # aggregate paid a 32-task scan + 32-reducer exchange for a
-            # few-thousand-row table (~0.26 s of pure scheduling per
-            # job at bench scale, r15). One partition is the right
-            # shape for a <= small_graph_max result; narrow coalesce of
-            # Arrow-backed local slices is cheap (the r12 hazard was
-            # pickled PYTHON-list partitions, not these).
-            return edges.sparkSession.createDataFrame(
-                pdf, schema=out_schema
-            ).coalesce(1)
+    head = _small_graph_edges(edges, src, dst)
+    if head is not None:
+        # Small-graph fast path (r14; see graph.SMALL_GRAPH_MAX_EDGES):
+        # community graphs out of the dedup/co-occurrence builders are
+        # usually a sliver of the table they derive from — the benched
+        # co-purchase graph is ~3.6k edges at sf0.1, yet the distributed
+        # loop paid 4 rounds × (join + min-aggregate) plus eager
+        # checkpoints ≈ 2 s of pure job scheduling for it. The SAME
+        # synchronous recurrence runs on the driver — integer mins over
+        # a dict adjacency, bit-equal labels (pinned by
+        # test_label_propagation_matches_python_witness).
+        #
+        # nbrs[v] = the label sources v hears each round: itself (the
+        # folded self-loop) + every u with an edge u -> v (+ v -> u
+        # when undirected)
+        nbrs: dict = {}
+        for a, b in head:
+            nbrs.setdefault(a, {a})
+            nbrs.setdefault(b, {b}).add(a)
+            if not directed:
+                nbrs[a].add(b)
+        lab = {v: v for v in nbrs}
+        for _ in range(rounds):
+            lab = {v: min(lab[u] for u in nbrs[v]) for v in nbrs}
+        out_schema = edges.select(
+            F.col(src).alias("node"), F.col(dst).alias("community")
+        ).schema
+        return _local_frame(edges.sparkSession, sorted(lab.items()), out_schema)
 
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if not directed:

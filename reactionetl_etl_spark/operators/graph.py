@@ -38,90 +38,102 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# Edge-count bound of the driver-side fast path shared by
+# `connected_components`, `triangle_counts` and
+# `community.label_propagation` (≈ a few MB of id pairs): at or below
+# it the operator runs its recurrence on the driver, above it the
+# distributed loop. The path caps overhead, never scale.
+SMALL_GRAPH_MAX_EDGES = 200_000
+
+
+def _small_graph_edges(edges: DataFrame, src: str, dst: str) -> list | None:
+    """The (src, dst) rows of ``edges`` when there are at most
+    SMALL_GRAPH_MAX_EDGES of them, else None.
+
+    ONE bounded action on the RAW edge plan doubles as size probe + edge
+    fetch: ``limit(max+1).collect()`` either proves the graph is small
+    (and the caller already holds the edges — no symmetrize/distinct
+    shuffle, no checkpoint job, none of the 32 sequential
+    toLocalIterator fetches behind the r6 7x regression) or stops
+    fetching past the bound. NULL endpoints are dropped up front (r15):
+    the distributed loops' `a != b` filters silently drop such edges,
+    while Python's `<`/min/sorted raise TypeError on None."""
+    head = (
+        edges.select(src, dst)
+        .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        .limit(SMALL_GRAPH_MAX_EDGES + 1)
+        .collect()
+    )
+    return head if len(head) <= SMALL_GRAPH_MAX_EDGES else None
+
+
+def _local_frame(spark, rows: list, schema) -> DataFrame:
+    """A driver-computed result as a one-partition DataFrame.
+
+    pandas, not a Python list: Arrow turns it into a JVM LocalRelation,
+    so downstream joins/aggregates run as broadcast/local plans — a
+    list-of-tuples frame round-trips through parallelize and schedules
+    full-width shuffles (the r12 coalesce(1)-on-Python-frames lesson).
+    coalesce(1): the pandas conversion slices the local rows into
+    defaultParallelism (32) partitions, so every consumer aggregate paid
+    a 32-task scan + 32-reducer exchange for a few-thousand-row table
+    (~0.26 s of pure scheduling per job at bench scale, r15). One
+    partition is the right shape for a small-graph result; narrow
+    coalesce of Arrow-backed local slices is cheap (the r12 hazard was
+    pickled PYTHON-list partitions, not these)."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=schema.names)
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    small_graph_max: int = 200_000,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``
     (undirected); component = smallest node id reachable. Deterministic:
     pure min-propagation, no RNG, no partition-id dependence.
 
-    Adaptive strategy, picked from the MATERIALIZED edge count (the
-    checkpoint makes it a metadata read): dedup candidate graphs are
-    usually a sliver of the corpus — thousands of edges even when the
-    table is billions of rows — and the iterative path pays 2-3 Spark
-    jobs per round just in scheduling for such graphs. At or below
-    ``small_graph_max`` edges (≈ a few MB; same bounded-collect
-    discipline as every other driver-side shortcut here) the closure is
-    computed in one pass with a driver union-find — identical labels,
-    zero iterations. Bigger graphs keep the distributed propagation
-    loop, so the path never caps scale, only overhead."""
-    out_schema = edges.select(
-        F.col(src).alias("node"), F.col(dst).alias("component")
-    ).schema
+    Adaptive strategy: dedup candidate graphs are usually a sliver of
+    the corpus — thousands of edges even when the table is billions of
+    rows — and the iterative path pays 2-3 Spark jobs per round just in
+    scheduling for such graphs. At or below ``SMALL_GRAPH_MAX_EDGES``
+    edges the closure is computed in one pass with a driver union-find
+    — identical labels, zero iterations. Bigger graphs keep the
+    distributed propagation loop."""
+    head = _small_graph_edges(edges, src, dst)
+    if head is not None:
+        # Union-find needs neither dedup nor symmetry — repeats and
+        # direction just cost a find() each.
+        parent: dict = {}
 
-    if small_graph_max is not None:
-        # ONE bounded action on the RAW edge plan doubles as size probe
-        # + edge fetch: limit(max+1).collect() either proves the graph
-        # is small (and we already hold the edges — no symmetrize/
-        # distinct shuffle, no checkpoint job, none of the 32 sequential
-        # toLocalIterator fetches behind the r6 7x regression) or stops
-        # fetching past the bound and falls through to the distributed
-        # loop. Union-find needs neither dedup nor symmetry — repeats
-        # and direction just cost a find() each. Bounded at ≈ a few MB.
-        # NULL endpoints are dropped up front (r15, ADVICE): the
-        # distributed loop's `a != b` filter silently drops such edges,
-        # while Python's `<`/min/sorted raise TypeError on None.
-        head = (
-            edges.select(src, dst)
-            .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .limit(small_graph_max + 1)
-            .collect()
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
+
+        for a, b in head:
+            if a == b:  # self-loops are dropped, as in the a != b
+                continue  # filter on the distributed path
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:  # min-label: smaller root wins
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        out_schema = edges.select(
+            F.col(src).alias("node"), F.col(dst).alias("component")
+        ).schema
+        return _local_frame(
+            edges.sparkSession, sorted((n, find(n)) for n in parent), out_schema
         )
-        if len(head) <= small_graph_max:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for a, b in head:
-                if a == b:  # self-loops are dropped, as in the a != b
-                    continue  # filter on the distributed path
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:  # min-label: smaller root wins
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            rows = sorted((n, find(n)) for n in parent)
-            # pandas, not a Python list: Arrow turns it into a JVM
-            # LocalRelation, so downstream joins/aggregates run as
-            # broadcast/local plans — a list-of-tuples frame round-trips
-            # through parallelize and schedules full-width shuffles
-            # (the r12 coalesce(1)-on-Python-frames lesson)
-            import pandas as pd
-
-            pdf = pd.DataFrame(rows, columns=["node", "component"])
-            # coalesce(1): the pandas conversion slices the local rows
-            # into defaultParallelism (32) partitions, so every consumer
-            # aggregate paid a 32-task scan + 32-reducer exchange for a
-            # few-thousand-row table (~0.26 s of pure scheduling per
-            # job at bench scale, r15). One partition is the right
-            # shape for a <= small_graph_max result; narrow coalesce of
-            # Arrow-backed local slices is cheap (the r12 hazard was
-            # pickled PYTHON-list partitions, not these).
-            return edges.sparkSession.createDataFrame(
-                pdf, schema=out_schema
-            ).coalesce(1)
 
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -145,7 +157,7 @@ def connected_components(
         # POINTER HALVING (path compression): v's label jumps to its
         # label's label — min-propagation alone moves a label one hop
         # per round, O(diameter) rounds, and a long-chain graph past
-        # small_graph_max would exhaust max_iter; with the jump, chains
+        # SMALL_GRAPH_MAX_EDGES would exhaust max_iter; with the jump, chains
         # collapse in O(log diameter) rounds (max_iter=20 covers
         # diameter ~2^20). One extra comp-keyed join per round; labels
         # only ever DECREASE toward the true min, so convergence and
@@ -180,7 +192,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    small_graph_max: int | None = 200_000,
 ) -> DataFrame:
     """(node, degree, n_triangles) for every node of an UNDIRECTED
     graph — the local-clustering / community-density primitive (how
@@ -205,72 +216,42 @@ def triangle_counts(
     All keys are node ids or node pairs — nothing is ever keyed on a
     partition-unbounded value. Deterministic: no RNG, ties in the
     degree order broken by node id."""
-    if small_graph_max is not None:
-        # Small-graph fast path (r14; the `connected_components` /
-        # `label_propagation` discipline): one bounded action on the
-        # raw edge plan doubles as size probe + edge fetch. The benched
-        # co-purchase graph is ~3.6k edges, yet the distributed wedge
-        # pipeline paid two eager checkpoints + a degree groupBy + two
-        # rank joins + the wedge self-join + the closing join in
-        # scheduling overhead for it. At or below the bound the SAME
-        # counts come from a driver pass: canonicalize + dedup edges,
-        # count degrees, orient each edge by (degree, id), and close
-        # wedges against a neighbor-set dict — integer-exact, identical
-        # output (value-oracled cross-engine). Larger graphs stop
-        # fetching at the bound and fall through. NULL endpoints are
-        # dropped up front (r15, ADVICE): the distributed pipeline's
-        # `u != v` filter silently drops such edges, while Python's
-        # `(deg, id)` ordering raises TypeError on None.
-        head = (
-            edges.select(src, dst)
-            .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .limit(small_graph_max + 1)
-            .collect()
+    head = _small_graph_edges(edges, src, dst)
+    if head is not None:
+        # Small-graph fast path (r14): the benched co-purchase graph is
+        # ~3.6k edges, yet the distributed wedge pipeline paid two eager
+        # checkpoints + a degree groupBy + two rank joins + the wedge
+        # self-join + the closing join in scheduling overhead for it.
+        # The SAME counts come from a driver pass: canonicalize + dedup
+        # edges, count degrees, orient each edge by (degree, id), and
+        # close wedges against a neighbor-set dict — integer-exact,
+        # identical output (value-oracled cross-engine).
+        es = {(a, b) if a < b else (b, a) for a, b in head if a != b}
+        deg: dict = {}
+        for u, v in es:
+            deg[u] = deg.get(u, 0) + 1
+            deg[v] = deg.get(v, 0) + 1
+        out_nbrs: dict = {}
+        for u, v in es:
+            lo, hi = (u, v) if (deg[u], u) < (deg[v], v) else (v, u)
+            out_nbrs.setdefault(lo, set()).add(hi)
+        tri = {n: 0 for n in deg}
+        for s, outs in out_nbrs.items():
+            for a in outs:
+                for b in outs & out_nbrs.get(a, set()):
+                    tri[s] += 1
+                    tri[a] += 1
+                    tri[b] += 1
+        out_schema = edges.select(
+            F.col(src).alias("node"),
+            F.lit(0).cast("long").alias("degree"),
+            F.lit(0).cast("long").alias("n_triangles"),
+        ).schema
+        return _local_frame(
+            edges.sparkSession,
+            sorted((n, deg[n], tri[n]) for n in deg),
+            out_schema,
         )
-        if len(head) <= small_graph_max:
-            es = {
-                (a, b) if a < b else (b, a)
-                for a, b in head
-                if a != b
-            }
-            deg: dict = {}
-            for u, v in es:
-                deg[u] = deg.get(u, 0) + 1
-                deg[v] = deg.get(v, 0) + 1
-            out_nbrs: dict = {}
-            for u, v in es:
-                lo, hi = (u, v) if (deg[u], u) < (deg[v], v) else (v, u)
-                out_nbrs.setdefault(lo, set()).add(hi)
-            tri = {n: 0 for n in deg}
-            for s, outs in out_nbrs.items():
-                for a in outs:
-                    closing = outs & out_nbrs.get(a, set())
-                    for b in closing:
-                        tri[s] += 1
-                        tri[a] += 1
-                        tri[b] += 1
-            out_schema = edges.select(
-                F.col(src).alias("node"),
-                F.lit(0).cast("long").alias("degree"),
-                F.lit(0).cast("long").alias("n_triangles"),
-            ).schema
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                sorted((n, deg[n], tri[n]) for n in deg),
-                columns=["node", "degree", "n_triangles"],
-            )
-            # coalesce(1): the pandas conversion slices the local rows
-            # into defaultParallelism (32) partitions, so every consumer
-            # aggregate paid a 32-task scan + 32-reducer exchange for a
-            # few-thousand-row table (~0.26 s of pure scheduling per
-            # job at bench scale, r15). One partition is the right
-            # shape for a <= small_graph_max result; narrow coalesce of
-            # Arrow-backed local slices is cheap (the r12 hazard was
-            # pickled PYTHON-list partitions, not these).
-            return edges.sparkSession.createDataFrame(
-                pdf, schema=out_schema
-            ).coalesce(1)
 
     # checkpoint the canonical edge set FIRST: it feeds the degree
     # count, two rank joins, and (via `oriented`) the wedge stages —

@@ -1766,7 +1766,15 @@ def image_dhash(
                     hs = (bits @ pow2).view(np.int64)
                     for j, i in enumerate(part):
                         hashes[i] = int(hs[j])
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), out_col: hashes})
+            # nullable Int64: a plain list mixing ints and None becomes
+            # float64, which rounds every 64-bit hash in a batch holding
+            # an undecodable payload to 53 bits
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy(),
+                    out_col: pd.array(hashes, dtype="Int64"),
+                }
+            )
 
     return df.select(id_col, binary_col).mapInPandas(
         hash_batches, f"{id_col} long, {out_col} long"
@@ -1891,7 +1899,8 @@ def image_phash(
                     h |= b << np.uint64(i)
                 ids.append(mid)
                 hashes.append(int(h.view(np.int64)))
-            yield pd.DataFrame({id_col: ids, out_col: hashes})
+            # nullable Int64, not float64: see image_dhash
+            yield pd.DataFrame({id_col: ids, out_col: pd.array(hashes, dtype="Int64")})
 
     return df.select(id_col, binary_col).mapInPandas(
         hash_batches, f"{id_col} long, {out_col} long"

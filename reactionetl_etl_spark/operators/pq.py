@@ -803,8 +803,8 @@ def write_ivfpq_index(
 
 def read_ivfpq_geometry(spark, path: str) -> tuple[list, list]:
     """(centroids, codebook) of a `write_ivfpq_index` layout — the
-    centroid sidecar shares `write_ivf_index`'s format (including its
-    legacy fallback), the codebook sidecar `write_pq_index`'s."""
+    centroid sidecar shares `write_ivf_index`'s format, the codebook
+    sidecar `write_pq_index`'s."""
     from reactionetl_etl_spark.operators.similarity import read_ivf_centroids
 
     return read_ivf_centroids(spark, path), read_pq_codebook(spark, path)

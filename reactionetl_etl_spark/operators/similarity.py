@@ -807,23 +807,8 @@ def write_ivf_index(
 
 
 def read_ivf_centroids(spark, path: str) -> list[list[float]]:
-    """Centroids of a `write_ivf_index` layout, in (cell, dim) order.
-
-    Reads both sidecar generations: the current flat
-    ``(cell, dim_idx, value)`` rows and the pre-r12 legacy
-    ``(cell, centroid array<double>)`` shape — without the fallback, an
-    index persisted by an older build raises UNRESOLVED_COLUMN on
-    ``dim_idx``, which `ivf_append_batch_writer` cannot distinguish
-    from "index missing", so a resumed stream died with a confusing
-    error instead of appending (ADVICE r12)."""
+    """Centroids of a `write_ivf_index` layout, in (cell, dim) order."""
     sidecar = spark.read.parquet(f"{path}/centroids")
-    if "centroid" in sidecar.columns:
-        # legacy sidecar: one row per cell, centroid as an array column
-        rows = sidecar.orderBy("cell").collect()
-        legacy: list[list[float]] = [[] for _ in range(max(r["cell"] for r in rows) + 1)]
-        for r in rows:
-            legacy[r["cell"]] = [float(x) for x in r["centroid"]]
-        return legacy
     rows = sidecar.orderBy("cell", "dim_idx").collect()
     cents: list[list[float]] = []
     for r in rows:

@@ -128,12 +128,16 @@ def test_enrichment_uses_staged_commit_end_to_end(spark, tmp_path):
     day_dir = os.path.join(incoming, "2026-01-05")
     for n in range(1, 5):
         write_reaction_csv(day_dir, n, 20)
-        write_metadata_json(day_dir, n)
     lake = ReactionLake(str(tmp_path / "lake"))
-    # strict load-then-rewrite so the staged path has real gaps to fill
-    lake.run_once(spark, incoming, enrich_inline=False)
+    lake.run_once(spark, incoming)
+    # metadata one run late: the facts already written stay unenriched,
+    # so the staged path has real gaps to fill
+    for n in range(1, 5):
+        write_metadata_json(day_dir, n)
+    lake.run_once(spark, incoming)
+    assert lake.fact(spark).filter(F.col("simulation_num").isNull()).count() == 80
     n = lake.materialize_enrichment(spark)
-    assert n > 0
+    assert n == 80
     fact = lake.fact(spark)
     assert fact.filter(F.col("simulation_num").isNull()).count() == 0
     assert not [

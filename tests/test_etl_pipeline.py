@@ -107,7 +107,7 @@ def test_dim_contents_and_sequence(spark, lake):
 
 
 def test_enrichment_inline_and_materialization_noop(spark, lake):
-    """EP3: with the default enrich_inline, every fact row whose
+    """EP3: with inline enrichment, every fact row whose
     metadata arrived in the batch lands ALREADY enriched; rows without
     metadata stay NULL; materialize_enrichment then has nothing to do
     (sim 5's facts stay NULL — its metadata never arrives, so its day
@@ -130,7 +130,7 @@ def test_enrichment_inline_and_materialization_noop(spark, lake):
 
 def test_materialize_enrichment_fills_late_metadata(spark, incoming, tmp_path_factory):
     """W6 staged-rewrite path on its production scenario: facts arrive
-    BEFORE their metadata (enrich_inline finds no dim row), the next
+    BEFORE their metadata (inline enrichment finds no dim row), the next
     run loads the metadata, and materialize_enrichment back-fills the
     earlier facts via the atomic partition swap."""
     import shutil
@@ -154,21 +154,6 @@ def test_materialize_enrichment_fills_late_metadata(spark, incoming, tmp_path_fa
     enriched = lk.fact(spark).filter(F.col("simulation_num").isNotNull())
     assert enriched.count() == N_ROWS
     assert lk.materialize_enrichment(spark) == 0  # idempotent
-
-
-def test_enrich_inline_false_defers_to_materialization(
-    spark, incoming, tmp_path_factory
-):
-    """The strict load-then-rewrite sequence is still available
-    (enrich_inline=False) and converges to the same state."""
-    root, _ = incoming
-    lk = ReactionLake(str(tmp_path_factory.mktemp("strict_lake")))
-    lk.run_once(spark, str(root), now=T0, enrich_inline=False)
-    fact = lk.fact(spark)
-    assert fact.filter(F.col("simulation_num").isNotNull()).count() == 0
-    assert lk.materialize_enrichment(spark) == 3 * N_ROWS
-    matched = lk.fact(spark).filter(F.col("simulation_num").isNotNull())
-    assert matched.count() == 3 * N_ROWS
 
 
 def test_quarantine_contents(spark, lake):

@@ -1077,7 +1077,9 @@ def test_image_dhash_batched_matches_scalar_reference(spark):
     the same elementwise operations — pinned here by recomputing every
     hash with a scalar reference (decode_pixels + the retired
     one-image-at-a-time math) over MIXED shapes, formats, an
-    undecodable payload, and both filter-0 and Up-filtered PNG rows."""
+    undecodable payload, and both filter-0 and Up-filtered PNG rows.
+    All rows share one partition, so one Arrow batch holds the
+    undecodable payload beside the valid images on any core count."""
     import numpy as np
 
     from reactionetl_etl_spark.operators.multimodal import (
@@ -1101,7 +1103,7 @@ def test_image_dhash_batched_matches_scalar_reference(spark):
     ]
     rows = [(i, bytearray(b)) for i, b in enumerate(imgs)]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {r["media_id"]: r["dhash"] for r in image_dhash(df).collect()}
+    got = {r["media_id"]: r["dhash"] for r in image_dhash(df.coalesce(1)).collect()}
 
     pow2 = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
     for i, b in enumerate(imgs):
@@ -1113,6 +1115,35 @@ def test_image_dhash_batched_matches_scalar_reference(spark):
         g = resample_nearest(luma, 9, 8)
         bits = (g[:, :-1] > g[:, 1:]).astype(np.uint64).reshape(-1)
         assert got[i] == int(np.dot(bits, pow2).view(np.int64)), i
+
+
+def test_image_phash_exact_beside_undecodable_payload(spark):
+    """An undecodable payload (NULL hash) in the same Arrow batch as
+    valid images must not change their 64-bit hashes: each valid
+    image's phash equals its phash in a batch of valid images only."""
+    import numpy as np
+
+    from reactionetl_etl_spark.operators.multimodal import (
+        encode_bmp,
+        encode_png,
+        image_phash,
+    )
+
+    rng = np.random.default_rng(17)
+    imgs = [
+        encode_bmp(rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)),
+        encode_png(rng.integers(0, 256, (40, 24, 3), dtype=np.uint8)),
+        encode_bmp(rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)),
+    ]
+
+    def phashes(payloads):
+        rows = [(i, bytearray(b)) for i, b in enumerate(payloads)]
+        df = spark.createDataFrame(rows, "media_id long, content binary")
+        return {r["media_id"]: r["phash"] for r in image_phash(df.coalesce(1)).collect()}
+
+    mixed = phashes(imgs + [b"definitely not an image"])
+    assert mixed.pop(len(imgs)) is None
+    assert mixed == phashes(imgs)
 
 
 def test_png_unfilter_filter0_fast_path_exact():

@@ -381,38 +381,6 @@ def test_ivf_index_probe_matches_inplan_batch(spark, tmp_path):
         S.write_ivf_index(second, dim=64, path=path, mode="append")
 
 
-def test_ivf_legacy_centroid_sidecar_reads(spark, tmp_path):
-    """A pre-r12 index whose centroid sidecar used the legacy
-    (cell, centroid array) schema must still load — r12 flattened the
-    sidecar to (cell, dim_idx, value) and without the fallback an old
-    index raises UNRESOLVED_COLUMN on dim_idx, which the streaming
-    append writer misreads as a fatal non-missing-index error
-    (ADVICE r12)."""
-    from reactionetl_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    path = str(tmp_path / "ivf_legacy")
-    cents = S.write_ivf_index(emb, dim=64, path=path, n_cells=4)
-    # rewrite the sidecar in the legacy pre-r12 shape
-    legacy = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    )
-    legacy.repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    assert S.read_ivf_centroids(spark, path) == [
-        [float(x) for x in c] for c in cents
-    ]
-    # and the streaming append writer accepts the legacy index: the
-    # batch lands as an append, not a retrain (centroids unchanged)
-    from reactionetl_etl_spark.streaming.sinks import ivf_append_batch_writer
-
-    writer = ivf_append_batch_writer(path, dim=64, n_cells=4)
-    writer(emb.filter(F.col("vec_id") < 8), batch_id=1)
-    assert S.read_ivf_centroids(spark, path) == [
-        [float(x) for x in c] for c in cents
-    ]
-
-
 def test_lsh_topk_subset_of_corpus(spark, sf_dir):
     from reactionetl_etl_spark.sources.tables import load_table
 
@@ -936,7 +904,15 @@ def test_semdedup_cell_guard_raises(spark, sf_dir):
         semantic_dedup(emb, dim=64, n_cells=2, threshold=0.40, max_cell_rows=3)
 
 
-def test_connected_components_small_graph_path_parity(spark):
+def _force_distributed_graph_loops(monkeypatch):
+    """Send every non-empty graph past the driver fast path of the
+    graph operators, into their distributed loops."""
+    from reactionetl_etl_spark.operators import graph
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_EDGES", 0)
+
+
+def test_connected_components_small_graph_path_parity(spark, monkeypatch):
     """The bounded driver union-find returns labels IDENTICAL to the
     distributed min-propagation loop (same graph, both strategies) —
     chains, cliques, singleton-free nodes, and cross-linking all
@@ -960,9 +936,10 @@ def test_connected_components_small_graph_path_parity(spark):
         (r["node"], r["component"])
         for r in connected_components(df, "id_a", "id_b").collect()
     }
+    _force_distributed_graph_loops(monkeypatch)
     slow = {
         (r["node"], r["component"])
-        for r in connected_components(df, "id_a", "id_b", small_graph_max=0).collect()
+        for r in connected_components(df, "id_a", "id_b").collect()
     }
     assert fast == slow and len(fast) > 0
 
@@ -1330,9 +1307,9 @@ def test_dsir_weights_favor_target_like_docs(spark):
         dsir_log_weights(corpus, target, n_buckets=0)
 
 
-def test_connected_components_long_chain_distributed(spark):
-    """A 1,500-node path graph through the DISTRIBUTED loop
-    (small_graph_max=None): plain min-propagation would need ~1,500
+def test_connected_components_long_chain_distributed(spark, monkeypatch):
+    """A 1,500-node path graph through the DISTRIBUTED loop (fast path
+    disabled): plain min-propagation would need ~1,500
     rounds (one hop per round) and silently time out at max_iter — the
     pointer-halving jump collapses the chain within the default 20
     rounds, and every node labels with the chain's minimum."""
@@ -1343,11 +1320,10 @@ def test_connected_components_long_chain_distributed(spark):
         [(i, i + 1) for i in range(n - 1)] + [(9000, 9001)],
         "id_a long, id_b long",
     )
+    _force_distributed_graph_loops(monkeypatch)
     got = {
         r["node"]: r["component"]
-        for r in connected_components(
-            edges, "id_a", "id_b", small_graph_max=None
-        ).collect()
+        for r in connected_components(edges, "id_a", "id_b").collect()
     }
     assert all(got[i] == 0 for i in range(n))
     assert got[9000] == 9000 and got[9001] == 9000
@@ -2023,7 +1999,7 @@ def test_probe_ivf_broadcast_and_shuffle_paths_agree(spark, tmp_path):
     assert bcast == shuf and bcast
 
 
-def test_triangle_counts_driver_path_matches_distributed(spark):
+def test_triangle_counts_driver_path_matches_distributed(spark, monkeypatch):
     """r14: triangle_counts gained the bounded small-graph driver path.
     The two paths must return IDENTICAL rows (node, degree,
     n_triangles) — pinned on the known graph plus a pseudo-random
@@ -2042,15 +2018,14 @@ def test_triangle_counts_driver_path_matches_distributed(spark):
         edges.append((200 + a, 200 + b))
     df = spark.createDataFrame(edges, "src int, dst int")
     fast = sorted(tuple(r) for r in triangle_counts(df).collect())
-    dist = sorted(
-        tuple(r) for r in triangle_counts(df, small_graph_max=None).collect()
-    )
+    _force_distributed_graph_loops(monkeypatch)
+    dist = sorted(tuple(r) for r in triangle_counts(df).collect())
     assert fast == dist and fast
 
 
-def test_label_propagation_driver_path_matches_distributed(spark):
+def test_label_propagation_driver_path_matches_distributed(spark, monkeypatch):
     """r15 (ADVICE item): label_propagation's driver fast path vs the
-    distributed loop (small_graph_max=None) — identical labels on the
+    distributed loop (fast path disabled) — identical labels on the
     witness graph plus a pseudo-random 60-node graph with duplicate/
     reversed/self-loop noise, at several round counts and both
     directed modes. Mirrors the triangle_counts dual-path pin so the
@@ -2066,24 +2041,27 @@ def test_label_propagation_driver_path_matches_distributed(spark):
         b = x % 60
         edges.append((100 + a, 100 + b))
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    for rounds in (0, 1, 3):
-        for directed in (False, True):
-            fast = sorted(
+    cases = [(rounds, directed) for rounds in (0, 1, 3) for directed in (False, True)]
+
+    def run_all():
+        return {
+            (rounds, directed): sorted(
                 tuple(r)
                 for r in label_propagation(
                     df, rounds=rounds, directed=directed
                 ).collect()
             )
-            dist = sorted(
-                tuple(r)
-                for r in label_propagation(
-                    df, rounds=rounds, directed=directed, small_graph_max=None
-                ).collect()
-            )
-            assert fast == dist and fast, (rounds, directed)
+            for rounds, directed in cases
+        }
+
+    fast = run_all()
+    _force_distributed_graph_loops(monkeypatch)
+    dist = run_all()
+    for case in cases:
+        assert fast[case] == dist[case] and fast[case], case
 
 
-def test_graph_fast_paths_drop_null_endpoints(spark):
+def test_graph_fast_paths_drop_null_endpoints(spark, monkeypatch):
     """r15 (ADVICE item): NULL src/dst edges must not crash the driver
     fast paths (Python <'s TypeError on None); they are dropped, which
     is exactly what the distributed paths' a != b filters do."""
@@ -2098,19 +2076,16 @@ def test_graph_fast_paths_drop_null_endpoints(spark):
 
     cc = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert cc == {1: 1, 2: 1, 3: 1}
-    cc_dist = {
-        r["node"]: r["component"]
-        for r in connected_components(df, small_graph_max=None).collect()
-    }
-    assert cc == cc_dist
-
     tri = {r["node"]: (r["degree"], r["n_triangles"]) for r in triangle_counts(df).collect()}
     assert tri == {1: (2, 1), 2: (2, 1), 3: (2, 1)}
-    tri_dist = {
-        r["node"]: (r["degree"], r["n_triangles"])
-        for r in triangle_counts(df, small_graph_max=None).collect()
-    }
-    assert tri == tri_dist
-
     lp = {r["node"]: r["community"] for r in label_propagation(df, rounds=4).collect()}
     assert lp == {1: 1, 2: 1, 3: 1}
+
+    _force_distributed_graph_loops(monkeypatch)
+    cc_dist = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert cc == cc_dist
+    tri_dist = {
+        r["node"]: (r["degree"], r["n_triangles"])
+        for r in triangle_counts(df).collect()
+    }
+    assert tri == tri_dist

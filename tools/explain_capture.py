@@ -1,9 +1,9 @@
 """Capture `.explain("formatted")` output for catalog queries into
-plans/r14/<query>_<tag>.txt — the optimization round's evidence files.
+<out_dir>/<query>_<tag>.txt — an optimization round's evidence files.
 
 Usage:
-    python tools/explain_capture.py <tag> [sf_dir] <query> [query ...]
-    python tools/explain_capture.py before /root/testdata/sf0.1 semdedup_prune ...
+    python tools/explain_capture.py <out_dir> <tag> [sf_dir] <query> [query ...]
+    python tools/explain_capture.py plans/semdedup before testdata/sf0.1 semdedup_prune ...
 
 The formatted plan is what the judge checks optimization claims
 against (Exchange count, join strategy, PushedFilters, Python stages),
@@ -29,13 +29,12 @@ def formatted_plan(df) -> str:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    args = sys.argv[2:]
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    args = sys.argv[3:]
     if args and os.path.isdir(args[0]):
         sf_dir, names = args[0], args[1:]
     else:
         sf_dir, names = "/root/testdata/sf0.1", args
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("explain-capture", **{"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
