@@ -44,7 +44,6 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,6 +51,7 @@ from reactionetl_etl_spark.etl.commit import (
     recover_staged_commits,
     staged_overwrite_partitions,
 )
+from reactionetl_etl_spark.io.files import read_if_exists
 from reactionetl_etl_spark.logging_config import get_logger, setup_logging
 from reactionetl_etl_spark.etl.cleanse import (
     cleanse_incoming_csvs,
@@ -91,14 +91,7 @@ class ReactionLake:
     # -- table readers ----------------------------------------------------
 
     def _read_or_none(self, spark: SparkSession, path: str) -> DataFrame | None:
-        # AnalysisException probe, not os.path.exists: the lake root can
-        # be hdfs:// or s3a://, where a driver-local stat is always False
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                return None
-            raise
+        return read_if_exists(lambda: spark.read.parquet(path))
 
     def fact(self, spark: SparkSession) -> DataFrame | None:
         return self._read_or_none(spark, self.fact_path)

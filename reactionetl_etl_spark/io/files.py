@@ -29,10 +29,36 @@ convenience exists for small exports only.
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _FORMATS = ("parquet", "orc", "csv", "json", "xml")
+
+# AnalysisException conditions that mean "this table has not been
+# created yet": the path is absent, or present but empty so no schema
+# can be inferred.
+_MISSING_TABLE_CONDITIONS = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+T = TypeVar("T")
+
+
+def read_if_exists(read: Callable[[], T]) -> T | None:
+    """Call ``read`` and return its result, or ``None`` when Spark
+    reports that the table it reads has not been created yet. Every
+    other error propagates: a corrupt file or schema drift must
+    surface, not read as "missing".
+
+    An exception probe, not ``os.path.exists``: tables can live on
+    hdfs:// or s3a://, where a driver-local stat always says missing."""
+    try:
+        return read()
+    except AnalysisException as e:
+        if e.getCondition() in _MISSING_TABLE_CONDITIONS:
+            return None
+        raise
 
 
 def _check_format(fmt: str) -> None:

@@ -32,6 +32,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reactionetl_etl_spark.io.files import read_if_exists
+
 SHARD_GLOB = "shard-*.tar"
 
 
@@ -181,23 +183,17 @@ def read_webdataset_shards(spark: SparkSession, shard_dir: str) -> DataFrame:
     missing directory reads as an empty frame, not an error."""
     import pandas as pd
 
-    from pyspark.errors import AnalysisException
-
     schema = "key string, ext string, payload binary, meta string, shard_id int"
     # Emptiness is decided by the READ's own path resolution, not a
     # driver-local glob: binaryFile accepts remote URIs (hdfs://,
     # s3a://) where glob.glob would see nothing and silently return an
     # empty frame even when shards exist. Spark resolves the glob at
-    # load() time and raises PATH_NOT_FOUND when no shard matches —
-    # that, and only that, is the empty case.
-    try:
-        tars = spark.read.format("binaryFile").load(os.path.join(shard_dir, SHARD_GLOB))
-    except AnalysisException as e:
-        get_cond = getattr(e, "getCondition", None)
-        cond = (get_cond() if get_cond else None) or ""
-        if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
+    # load() time and reports a missing path when no shard matches.
+    tars = read_if_exists(
+        lambda: spark.read.format("binaryFile").load(os.path.join(shard_dir, SHARD_GLOB))
+    )
+    if tars is None:
+        return spark.createDataFrame([], schema)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

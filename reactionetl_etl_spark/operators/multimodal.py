@@ -1696,6 +1696,18 @@ def encode_jpeg_baseline(arr, gray: bool = False) -> bytes:
     return bytes(out)
 
 
+# image_dhash decodes, stacks and hashes at most this many payloads at a
+# time. An Arrow batch holds up to maxRecordsPerBatch rows (10 000 by
+# default); decoding all of them at once keeps every decoded image of
+# the batch alive together, and stacking large same-shape groups in one
+# go allocates tens of MB in one burst, which measured multi-second
+# page-fault stalls in reused workers under host memory pressure
+# (bimodal 0.25 s / 7.6 s per batch). 256 keeps the peak ~1-2 MB while
+# retaining the vectorization win (1.8x at stack width ~150). Read on
+# the driver when the plan is built.
+DHASH_DECODE_WINDOW = 256
+
+
 def image_dhash(
     df: DataFrame,
     id_col: str = "media_id",
@@ -1712,6 +1724,8 @@ def image_dhash(
     Hamming-near dhashes = visually-near images. Undecodable payloads
     get NULL. Arrow-batched mapInPandas; zero shuffle."""
 
+    window = DHASH_DECODE_WINDOW
+
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -1720,40 +1734,32 @@ def image_dhash(
         # nothing and equals the old 64-iteration OR loop bit for bit
         pow2 = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
         for pdf in batches:
-            n = len(pdf)
-            hashes: list = [None] * n
-            arrs = [decode_pixels(bytes(p)) for p in pdf[binary_col]]
-            # r15: group decoded images by shape and run luma → resample
-            # → gradient → pack over the STACKED group — the per-image
-            # numpy-call overhead (~10 small kernel launches each) was
-            # a third of the stage; the stacked ops perform the same
-            # IEEE multiplies/adds, the same integer gathers, and the
-            # same exact integer dot elementwise, so every hash is
-            # bit-identical to the per-image formulation (pinned by
-            # test_image_dhash_batched_matches_scalar_reference).
-            # Variable shapes just mean more, smaller groups.
-            groups: dict = {}
-            for i, a in enumerate(arrs):
-                if a is not None:
-                    groups.setdefault(a.shape[:2], []).append(i)
-            # bounded stacks: a whole Arrow batch of large images stacked
-            # at once allocates tens of MB in one burst, which measured
-            # multi-second page-fault stalls in reused workers under
-            # host memory pressure (bimodal 0.25 s / 7.6 s per batch);
-            # 256-image chunks keep the peak ~1-2 MB while retaining the
-            # vectorization win (1.8x at chunk width ~150)
-            chunk = 256
-            for (h_, w_), idxs in groups.items():
-                # resample_nearest's gather, over the stacked axis
-                rows = np.minimum(
-                    (np.arange(8) + 0.5) * h_ / 8, h_ - 1
-                ).astype(np.int64)
-                cols = np.minimum(
-                    (np.arange(9) + 0.5) * w_ / 9, w_ - 1
-                ).astype(np.int64)
-                for c0 in range(0, len(idxs), chunk):
-                    part = idxs[c0 : c0 + chunk]
-                    S = np.stack([arrs[i] for i in part])  # (n, h, w, 3) uint8
+            payloads = pdf[binary_col]
+            hashes: list = [None] * len(pdf)
+            for w0 in range(0, len(pdf), window):
+                arrs = [decode_pixels(bytes(p)) for p in payloads.iloc[w0 : w0 + window]]
+                # r15: group decoded images by shape and run luma →
+                # resample → gradient → pack over the STACKED group — the
+                # per-image numpy-call overhead (~10 small kernel launches
+                # each) was a third of the stage; the stacked ops perform
+                # the same IEEE multiplies/adds, the same integer gathers,
+                # and the same exact integer dot elementwise, so every
+                # hash is bit-identical to the per-image formulation
+                # (pinned by test_image_dhash_batched_matches_scalar_reference).
+                # Variable shapes just mean more, smaller groups.
+                groups: dict = {}
+                for i, a in enumerate(arrs):
+                    if a is not None:
+                        groups.setdefault(a.shape[:2], []).append(i)
+                for (h_, w_), idxs in groups.items():
+                    # resample_nearest's gather, over the stacked axis
+                    rows = np.minimum(
+                        (np.arange(8) + 0.5) * h_ / 8, h_ - 1
+                    ).astype(np.int64)
+                    cols = np.minimum(
+                        (np.arange(9) + 0.5) * w_ / 9, w_ - 1
+                    ).astype(np.int64)
+                    S = np.stack([arrs[i] for i in idxs])  # (n, h, w, 3) uint8
                     luma = (
                         0.299 * S[..., 0] + 0.587 * S[..., 1] + 0.114 * S[..., 2]
                     )
@@ -1761,11 +1767,11 @@ def image_dhash(
                     bits = (
                         (g[:, :, :-1] > g[:, :, 1:])
                         .astype(np.uint64)
-                        .reshape(len(part), 64)
+                        .reshape(len(idxs), 64)
                     )
                     hs = (bits @ pow2).view(np.int64)
-                    for j, i in enumerate(part):
-                        hashes[i] = int(hs[j])
+                    for j, i in enumerate(idxs):
+                        hashes[w0 + i] = int(hs[j])
             # nullable Int64: a plain list mixing ints and None becomes
             # float64, which rounds every 64-bit hash in a batch holding
             # an undecodable payload to 53 bits

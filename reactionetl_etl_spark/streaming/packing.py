@@ -25,26 +25,11 @@ operator would see the concatenated input.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reactionetl_etl_spark.io.files import read_if_exists
 from reactionetl_etl_spark.operators.packing import pack_by_token_budget
-
-# "the sidecar does not exist yet" (first batch) — anything else is a
-# real failure and must propagate. Same classes streaming/sinks.py
-# treats as missing-index; a driver-local os.path.exists would be
-# wrong for hdfs:// and s3a:// URIs.
-_MISSING_ERROR_CLASSES = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
-
-
-def _read_offsets(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() in _MISSING_ERROR_CLASSES:
-            return None
-        raise
 
 
 def packing_batch_writer(
@@ -55,13 +40,13 @@ def packing_batch_writer(
     bucket_expr=None,
 ):
     """Build the foreachBatch callback: (batch_df, batch_id) → packed
-    append. Exposed separately so tests drive it with plain
-    DataFrames, the established sink-test pattern."""
+    append. Run a stream into it with `streaming/sinks.py::start_sink`;
+    tests also drive it with plain DataFrames."""
     offsets_path = f"{out_path}/_offsets"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        prior = _read_offsets(spark, offsets_path)
+        prior = read_if_exists(lambda: spark.read.parquet(offsets_path))
         if prior is not None:
             row = (
                 prior.filter(F.col("batch_id") < batch_id)
@@ -104,23 +89,3 @@ def packing_batch_writer(
         ).parquet(offsets_path)
 
     return write_batch
-
-
-def stream_pack_by_token_budget(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    order_col: str,
-    token_col: str,
-    budget: int,
-    trigger_available_now: bool = True,
-):
-    """writeStream → growing packed-shard layout (see module doc)."""
-    writer = (
-        stream_df.writeStream.foreachBatch(
-            packing_batch_writer(out_path, order_col, token_col, budget)
-        ).option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,29 +1,47 @@
 """Streaming sinks beyond the native formats: foreachBatch bridges.
 
 Structured Streaming has no built-in JDBC sink; the standard pattern is
-`writeStream.foreachBatch(fn)` — each micro-batch arrives as a normal
+a foreachBatch callback — each micro-batch arrives as a normal
 DataFrame, so the batch JDBC writer (io/jdbc.py) applies unchanged and
 the checkpoint still tracks exactly-once *batch* delivery (the warehouse
 sees at-least-once on retry: make the table idempotent via a batch_id
-column or dedup key, same as any foreachBatch sink).
+column or dedup key, same as any foreachBatch sink). Each
+``*_batch_writer`` below builds one such callback; `start_sink` runs a
+stream into it.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
+from reactionetl_etl_spark.io.files import read_if_exists
 from reactionetl_etl_spark.io.jdbc import write_fact_jdbc
 from reactionetl_etl_spark.logging_config import get_logger
 
 logger = get_logger("streaming.sinks")
 
-# AnalysisException classes that mean "the index has not been created
-# yet" (first batch): the path is absent, or present-but-empty so no
-# parquet schema can be inferred. Everything else is a real failure.
-_MISSING_INDEX_ERROR_CLASSES = frozenset(
-    {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-)
+
+def start_sink(
+    stream_df: DataFrame,
+    batch_writer: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+):
+    """Run ``stream_df`` into a foreachBatch sink and return the
+    StreamingQuery. ``batch_writer`` is a ``(batch_df, batch_id)``
+    callback: one of this module's ``*_batch_writer`` functions, or
+    `streaming/packing.py::packing_batch_writer`.
+
+    AvailableNow trigger: drain the backlog and stop, the reference's
+    batch cadence. The checkpoint makes the next start resume after the
+    last committed batch."""
+    return (
+        stream_df.writeStream.foreachBatch(batch_writer)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def jdbc_batch_writer(url: str, table: str = "fact_sim", writer_factory=None):
@@ -35,31 +53,6 @@ def jdbc_batch_writer(url: str, table: str = "fact_sim", writer_factory=None):
         write_fact_jdbc(batch_df, url, table, writer_factory=writer_factory)
 
     return write_batch
-
-
-def stream_to_jdbc(
-    stream_df: DataFrame,
-    url: str,
-    table: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-    writer_factory=None,
-):
-    """writeStream → warehouse: micro-batched COPY-parity appends.
-
-    AvailableNow by default (drain the backlog, stop) — matching the
-    reference's batch cadence; pass False for a continuous micro-batch
-    stream.
-    """
-    writer = (
-        stream_df.writeStream.foreachBatch(
-            jdbc_batch_writer(url, table, writer_factory=writer_factory)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_probe_batch_writer(
@@ -90,27 +83,18 @@ def dedup_probe_batch_writer(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Existence of the index must be checked through Spark's filesystem
-        # layer, not os.path — index_path may be hdfs:///s3a:// where a
-        # driver-local stat is always False and the probe would silently
-        # never run. Only the two "index not created yet" error classes
-        # may downgrade to a skipped probe; anything else (corrupt files,
-        # schema drift) must surface, or the miss would be permanent and
-        # invisible — the index append below still runs on every batch.
-        try:
-            index_df = spark.read.parquet(index_path)
-        except AnalysisException as e:
-            condition = e.getCondition()  # Spark 4 name for error class
-            if condition not in _MISSING_INDEX_ERROR_CLASSES:
-                raise
+        # Only "index not created yet" may downgrade to a skipped probe;
+        # anything else (corrupt files, schema drift) must surface, or
+        # the miss would be permanent and invisible — the index append
+        # below still runs on every batch.
+        index_df = read_if_exists(lambda: spark.read.parquet(index_path))
+        if index_df is None:
             logger.warning(
-                "minhash index %s not found (%s); skipping probe for batch %s",
+                "minhash index %s not found; skipping probe for batch %s",
                 index_path,
-                condition,
                 batch_id,
             )
-            index_df = None
-        if index_df is not None:
+        else:
             hits = probe_minhash_index(
                 batch_df,
                 index_df,
@@ -124,29 +108,6 @@ def dedup_probe_batch_writer(
         write_minhash_index(batch_df, text_col, id_col, index_path, mode="append")
 
     return write_batch
-
-
-def stream_dedup_against_index(
-    stream_df: DataFrame,
-    index_path: str,
-    hits_path: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard: float = 0.5,
-):
-    """Streaming incremental dedup: documents arrive as a stream, each
-    micro-batch probes + grows the persisted signature index.
-    AvailableNow trigger — drain the backlog and stop, the same
-    incremental cadence as the file-ingestion pipeline."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            dedup_probe_batch_writer(index_path, hits_path, text_col, id_col, min_jaccard)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def upsert_batch_writer(table_path: str, key_cols: list[str], partition_col: str):
@@ -184,25 +145,6 @@ def upsert_batch_writer(table_path: str, key_cols: list[str], partition_col: str
     return write_batch
 
 
-def stream_upsert(
-    stream_df: DataFrame,
-    table_path: str,
-    key_cols: list[str],
-    partition_col: str,
-    checkpoint_dir: str,
-):
-    """Run a stream into the keyed-upsert sink (AvailableNow-friendly);
-    returns the StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            upsert_batch_writer(table_path, key_cols, partition_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def ivf_append_batch_writer(
     index_path: str,
     dim: int,
@@ -227,12 +169,7 @@ def ivf_append_batch_writer(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            cents = read_ivf_centroids(spark, index_path)
-        except AnalysisException as e:
-            if e.getCondition() not in _MISSING_INDEX_ERROR_CLASSES:
-                raise
-            cents = None
+        cents = read_if_exists(lambda: read_ivf_centroids(spark, index_path))
         if cents is None:
             write_ivf_index(
                 batch_df, dim=dim, path=index_path, n_cells=n_cells,
@@ -270,12 +207,7 @@ def pq_append_batch_writer(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            book = read_pq_codebook(spark, index_path)
-        except AnalysisException as e:
-            if e.getCondition() not in _MISSING_INDEX_ERROR_CLASSES:
-                raise
-            book = None
+        book = read_if_exists(lambda: read_pq_codebook(spark, index_path))
         if book is None:
             write_pq_index(
                 batch_df, dim=dim, path=index_path, m=m, k=k,
@@ -318,13 +250,8 @@ def ivfpq_append_batch_writer(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            cents, book = read_ivfpq_geometry(spark, index_path)
-        except AnalysisException as e:
-            if e.getCondition() not in _MISSING_INDEX_ERROR_CLASSES:
-                raise
-            cents, book = None, None
-        if cents is None:
+        geometry = read_if_exists(lambda: read_ivfpq_geometry(spark, index_path))
+        if geometry is None:
             write_ivfpq_index(
                 batch_df, dim=dim, path=index_path, n_cells=n_cells, m=m, k=k,
                 id_col=id_col, vec_col=vec_col, mode="overwrite",
@@ -333,6 +260,7 @@ def ivfpq_append_batch_writer(
                 "ivfpq sink: trained index at %s from batch %d", index_path, batch_id
             )
         else:
+            cents, book = geometry
             write_ivfpq_index(
                 batch_df, dim=dim, path=index_path,
                 centroids=cents, codebook=book,
@@ -407,26 +335,6 @@ def rollup_batch_writer(
     return write_batch
 
 
-def stream_rollup(
-    stream_df: DataFrame,
-    state_path: str,
-    keys: list[str],
-    measures: dict[str, list[str]],
-    partition_col: str,
-    checkpoint_dir: str,
-):
-    """Run a fact stream into the incremental-rollup sink
-    (AvailableNow-friendly); returns the StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            rollup_batch_writer(state_path, keys, measures, partition_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def snapshot_append_batch_writer(table_path: str, stats_cols: list[str] | None = None):
     """foreachBatch callback appending each micro-batch to a snapshot-
     isolated table (etl/snapshots.py) EXACTLY once: the stream batch id
@@ -451,24 +359,6 @@ def snapshot_append_batch_writer(table_path: str, stats_cols: list[str] | None =
     return write_batch
 
 
-def stream_snapshot_append(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    stats_cols: list[str] | None = None,
-):
-    """Run a stream into the snapshot-append sink (AvailableNow-
-    friendly); returns the StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            snapshot_append_batch_writer(table_path, stats_cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def apply_changes_batch_writer(table_path: str, key_cols: list[str]):
     """foreachBatch callback folding a CDC stream (the
     `snapshot_changes` shape: `_change_type` ∈ insert / delete /
@@ -488,24 +378,6 @@ def apply_changes_batch_writer(table_path: str, key_cols: list[str]):
         logger.info("apply-changes sink: batch %d → version %s", batch_id, v)
 
     return write_batch
-
-
-def stream_apply_changes(
-    stream_df: DataFrame,
-    table_path: str,
-    key_cols: list[str],
-    checkpoint_dir: str,
-):
-    """Run a CDC stream into the apply-changes sink (AvailableNow-
-    friendly); returns the StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            apply_changes_batch_writer(table_path, key_cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def rollup_cdc_batch_writer(
@@ -581,26 +453,6 @@ def scd2_enrich_batch_writer(dim_path: str, out_path: str, key_cols: list[str], 
     return write_batch
 
 
-def stream_scd2_enrich(
-    stream_df: DataFrame,
-    dim_path: str,
-    out_path: str,
-    key_cols: list[str],
-    ts_col: str,
-    checkpoint_dir: str,
-):
-    """Run a fact stream through point-in-time SCD2 enrichment into a
-    snapshot table (AvailableNow-friendly); returns the StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            scd2_enrich_batch_writer(dim_path, out_path, key_cols, ts_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def classifier_score_batch_writer(
     model_path: str,
     scores_path: str,
@@ -629,28 +481,6 @@ def classifier_score_batch_writer(
         )
 
     return write_batch
-
-
-def stream_score_with_classifier(
-    stream_df: DataFrame,
-    model_path: str,
-    scores_path: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Streaming quality scoring: documents arrive as a stream, each
-    micro-batch is scored against the persisted classifier model.
-    AvailableNow trigger — drain the backlog and stop, the same
-    incremental cadence as the file-ingestion pipeline."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            classifier_score_batch_writer(model_path, scores_path, text_col, id_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def join_maintenance_batch_writer(state_path: str, key: str, side: str):
@@ -687,25 +517,6 @@ def join_maintenance_batch_writer(state_path: str, key: str, side: str):
     return write_batch
 
 
-def stream_join_maintenance(
-    stream_df: DataFrame,
-    state_path: str,
-    key: str,
-    side: str,
-    checkpoint_dir: str,
-):
-    """Run one side's stream into the incremental-join sink
-    (AvailableNow-friendly); returns the StreamingQuery."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            join_maintenance_batch_writer(state_path, key, side)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def webdataset_batch_writer(
     out_dir: str,
     key_col: str,
@@ -738,25 +549,3 @@ def webdataset_batch_writer(
         )
 
     return write_batch
-
-
-def stream_to_webdataset(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-    key_col: str,
-    payload_col: str,
-    meta_cols: tuple[str, ...] = (),
-    ext: str = "bin",
-    n_shards: int = 4,
-    trigger_available_now: bool = True,
-):
-    """Stream → WebDataset tar shards (training-loader boundary), one
-    deterministic shard set per micro-batch; exactly-once by batch-dir
-    idempotence + the checkpoint."""
-    q = stream_df.writeStream.foreachBatch(
-        webdataset_batch_writer(out_dir, key_col, payload_col, meta_cols, ext, n_shards)
-    ).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        q = q.trigger(availableNow=True)
-    return q.start()

@@ -25,7 +25,8 @@ DRIVER_TAIL_CHARS = 2000
 # to 1846 with the trio, leaving 140+ chars of tail margin (the actual
 # line, with realistic widths, is ~1760). Any further bench additions
 # must shorten names or move a compact field to stderr instead of
-# raising this again.
+# raising this again. The semdedup_append -> semdedup_append_probe
+# rename (its timed scope changed in r15) brings the worst case to 1852.
 STDOUT_LINE_BUDGET = 1860
 
 
@@ -42,7 +43,7 @@ def _worst_case_compact_line() -> str:
         "probe_ivfpq_index",
         "bits_topk",
         "bits_probe",
-        "semdedup_append",
+        "semdedup_append_probe",
         "training_corpus_build",
     ]
     queries = {n: 999.999 for n in names}
@@ -153,6 +154,26 @@ def test_compose_single_attempt_passes_through():
     assert out["entry_attempt"] == {}
     bad = bench.compose_attempts([s], [[0.81, 0.79, 3.0]], ref=0.80, tol=0.15)
     assert bad["contended"] is True and bad["calib"] == 3.0
+
+
+def test_compose_records_quiet_last_attempt_wholesale():
+    """A contended attempt followed by a quiet one: the record is the
+    quiet attempt as it stands, with no entries taken from the
+    contended attempt even where its bracket reads closer to the
+    reference."""
+    import bench
+
+    s1, s2 = _mk_section(1.0, {"alpha"}), _mk_section(2.0, {"alpha"})
+    # attempt 1 is contended in its tail only, and its head bracket is
+    # exactly on reference; attempt 2 is quiet but not exact
+    calibs = [[0.80, 0.80, 4.0], [0.85, 0.75, 0.86]]
+    out = bench.compose_attempts([s1, s2], calibs, ref=0.80, tol=0.15)
+    assert out["timings"] == s2["timings"]
+    assert out["cold"] == s2["cold"] and out["spread"] == s2["spread"]
+    assert out["etl_cold"] == s2["etl_cold"] and out["lg_mbps"] == s2["lg_mbps"]
+    assert out["entry_attempt"] == {}
+    assert out["contended"] is False
+    assert out["calib"] == 0.86
 
 
 def test_compose_picks_quietest_attempt_per_entry():

@@ -86,7 +86,10 @@ def test_stream_scoring_matches_batch(spark, docs, labels, model, tmp_path):
     """Streaming foreachBatch scoring with the persisted model must
     equal batch scoring row-for-row (stream ≡ batch, the suite-wide
     parity convention)."""
-    from reactionetl_etl_spark.streaming.sinks import stream_score_with_classifier
+    from reactionetl_etl_spark.streaming.sinks import (
+        classifier_score_batch_writer,
+        start_sink,
+    )
 
     model_path = str(tmp_path / "model")
     src = str(tmp_path / "src")
@@ -96,7 +99,7 @@ def test_stream_scoring_matches_batch(spark, docs, labels, model, tmp_path):
     docs.select("doc_id", "text").write.parquet(src)
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = stream_score_with_classifier(stream, model_path, scores, ckpt)
+    q = start_sink(stream, classifier_score_batch_writer(model_path, scores), ckpt)
     q.awaitTermination()
 
     streamed = {

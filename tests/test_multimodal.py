@@ -1069,7 +1069,7 @@ def test_image_dhash_container_invariant_and_perturbation_tolerant(spark):
     assert not any(4 in p for p in pairs)
 
 
-def test_image_dhash_batched_matches_scalar_reference(spark):
+def test_image_dhash_batched_matches_scalar_reference(spark, monkeypatch):
     """r15: the dhash stage groups same-shape images per Arrow batch
     and runs luma → resample → gradient → pack over the STACK. The
     claim is BIT-identity with the per-image formulation — stacked IEEE
@@ -1079,9 +1079,12 @@ def test_image_dhash_batched_matches_scalar_reference(spark):
     one-image-at-a-time math) over MIXED shapes, formats, an
     undecodable payload, and both filter-0 and Up-filtered PNG rows.
     All rows share one partition, so one Arrow batch holds the
-    undecodable payload beside the valid images on any core count."""
+    undecodable payload beside the valid images on any core count. A
+    second pass shrinks the decode window to 2, which splits the shape
+    groups and puts the undecodable payload in a window of its own."""
     import numpy as np
 
+    from reactionetl_etl_spark.operators import multimodal
     from reactionetl_etl_spark.operators.multimodal import (
         decode_pixels,
         encode_bmp,
@@ -1103,18 +1106,20 @@ def test_image_dhash_batched_matches_scalar_reference(spark):
     ]
     rows = [(i, bytearray(b)) for i, b in enumerate(imgs)]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {r["media_id"]: r["dhash"] for r in image_dhash(df.coalesce(1)).collect()}
 
     pow2 = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
-    for i, b in enumerate(imgs):
-        arr = decode_pixels(bytes(b))
-        if arr is None:
-            assert got[i] is None, i
-            continue
-        luma = 0.299 * arr[:, :, 0] + 0.587 * arr[:, :, 1] + 0.114 * arr[:, :, 2]
-        g = resample_nearest(luma, 9, 8)
-        bits = (g[:, :-1] > g[:, 1:]).astype(np.uint64).reshape(-1)
-        assert got[i] == int(np.dot(bits, pow2).view(np.int64)), i
+    for window in (multimodal.DHASH_DECODE_WINDOW, 2):
+        monkeypatch.setattr(multimodal, "DHASH_DECODE_WINDOW", window)
+        got = {r["media_id"]: r["dhash"] for r in image_dhash(df.coalesce(1)).collect()}
+        for i, b in enumerate(imgs):
+            arr = decode_pixels(bytes(b))
+            if arr is None:
+                assert got[i] is None, (window, i)
+                continue
+            luma = 0.299 * arr[:, :, 0] + 0.587 * arr[:, :, 1] + 0.114 * arr[:, :, 2]
+            g = resample_nearest(luma, 9, 8)
+            bits = (g[:, :-1] > g[:, 1:]).astype(np.uint64).reshape(-1)
+            assert got[i] == int(np.dot(bits, pow2).view(np.int64)), (window, i)
 
 
 def test_image_phash_exact_beside_undecodable_payload(spark):

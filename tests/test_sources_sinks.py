@@ -495,6 +495,59 @@ def test_dir_read_ingests_nonconventional_names(spark, tmp_path, monkeypatch):
     assert len(dr_json[0]) + len(dr_json[1]) == 4
 
 
+def test_probe_csv_headers_same_groups_on_driver_and_spark_job(
+    spark, tmp_path, monkeypatch
+):
+    """A mixed-header backlog groups by exact header tuple: a valid
+    header, the pandas `Unnamed: 0` artifact, and a header missing a
+    required column. The Spark-job branch (backlogs above
+    DRIVER_PROBE_MAX_FILES) returns the same groups as the driver one."""
+    import os
+
+    from tests.fixtures_etl import RAW_HEADER, write_reaction_csv
+
+    from reactionetl_etl_spark.sources import raw as R
+
+    day = str(tmp_path / "incoming" / "2026-01-05")
+    valid = {write_reaction_csv(day, n, n_rows=2) for n in (1, 2)}
+    artifact = {write_reaction_csv(day, 3, n_rows=2, with_artifact=True)}
+    missing = {write_reaction_csv(day, 4, n_rows=2, drop_col="T (K)")}
+    files = R.list_raw_files(os.path.dirname(day), ".csv")
+    assert len(files) == 4
+
+    driver = R.probe_csv_headers(spark, files)
+    missing_header = tuple(h for h in RAW_HEADER if h != "T (K)")
+    assert {h: {f.path for f in m} for h, m in driver.items()} == {
+        tuple(RAW_HEADER): valid,
+        ("Unnamed: 0", *RAW_HEADER): artifact,
+        missing_header: missing,
+    }
+    assert all(f.day == "2026-01-05" for m in driver.values() for f in m)
+    loadable, rejected = R.split_valid_header_groups(driver)
+    assert set(rejected) == {missing_header}
+    assert set(loadable) == {tuple(RAW_HEADER), ("Unnamed: 0", *RAW_HEADER)}
+
+    monkeypatch.setattr(R, "DRIVER_PROBE_MAX_FILES", 0)
+    assert R.probe_csv_headers(spark, files) == driver
+
+
+def test_read_if_exists_missing_empty_and_corrupt(spark, tmp_path):
+    """The one "table not created yet" check: an absent path and an
+    empty directory read as None; a corrupt file still raises."""
+    from reactionetl_etl_spark.io.files import read_if_exists
+
+    assert read_if_exists(lambda: spark.read.parquet(str(tmp_path / "absent"))) is None
+    (tmp_path / "empty").mkdir()
+    assert read_if_exists(lambda: spark.read.parquet(str(tmp_path / "empty"))) is None
+    (tmp_path / "bad").mkdir()
+    (tmp_path / "bad" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_if_exists(lambda: spark.read.parquet(str(tmp_path / "bad")).collect())
+    good = str(tmp_path / "good")
+    spark.range(3).write.parquet(good)
+    assert read_if_exists(lambda: spark.read.parquet(good)).count() == 3
+
+
 def test_webdataset_roundtrip_and_deterministic_bytes(spark, tmp_path):
     """WebDataset tar shards: write → read returns exactly the input
     (payload bytes + metadata), shard assignment is the md5 bucket, and

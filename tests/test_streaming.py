@@ -54,7 +54,7 @@ def test_stream_to_jdbc_foreachbatch(spark, tmp_path):
     JDBC writer (recorded, no live warehouse), conformed to fact_sim's
     column order, append mode."""
     from reactionetl_etl_spark.io.jdbc import FACT_SIM_COLS
-    from reactionetl_etl_spark.streaming.sinks import jdbc_batch_writer, stream_to_jdbc
+    from reactionetl_etl_spark.streaming.sinks import jdbc_batch_writer, start_sink
     from tests.test_sources_sinks import _RecordingWriter
 
     writers = []
@@ -78,12 +78,10 @@ def test_stream_to_jdbc_foreachbatch(spark, tmp_path):
     src = str(tmp_path / "jdbc_src")
     fact.write.parquet(src)
     stream = spark.readStream.schema(fact.schema).parquet(src)
-    handle = stream_to_jdbc(
+    handle = start_sink(
         stream,
-        "jdbc:postgresql://wh/lake",
-        "fact_sim",
+        jdbc_batch_writer("jdbc:postgresql://wh/lake", "fact_sim", writer_factory=factory),
         str(tmp_path / "jdbc_ckpt"),
-        writer_factory=factory,
     )
     handle.awaitTermination(120)
     assert len(writers) >= 2 and writers[-1].save_mode == "append"
@@ -256,7 +254,7 @@ def test_stream_dedup_against_index_incremental(spark, tmp_path):
     index — no re-signing of earlier batches."""
     import os
 
-    from reactionetl_etl_spark.streaming.sinks import stream_dedup_against_index
+    from reactionetl_etl_spark.streaming.sinks import dedup_probe_batch_writer, start_sink
 
     src = str(tmp_path / "docs_src")
     os.makedirs(src)
@@ -272,7 +270,7 @@ def test_stream_dedup_against_index_incremental(spark, tmp_path):
     schema = "doc_id long, text string"
 
     stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_dedup_against_index(stream, index_path, hits_path, ckpt)
+    q = start_sink(stream, dedup_probe_batch_writer(index_path, hits_path), ckpt)
     q.awaitTermination(120)
 
     # second arrival: a near-dup of doc 1 plus a fresh doc
@@ -281,7 +279,7 @@ def test_stream_dedup_against_index_incremental(spark, tmp_path):
         schema,
     ).write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(schema).parquet(src)
-    q2 = stream_dedup_against_index(stream2, index_path, hits_path, ckpt)
+    q2 = start_sink(stream2, dedup_probe_batch_writer(index_path, hits_path), ckpt)
     q2.awaitTermination(120)
 
     hits = {
@@ -323,7 +321,7 @@ def test_dedup_probe_corrupt_index_raises(spark, tmp_path):
 def test_stream_upsert_sink_idempotent_replay(spark, tmp_path):
     """Streaming micro-batches upsert into a partitioned table; keys
     replayed in a later batch overwrite instead of duplicating."""
-    from reactionetl_etl_spark.streaming.sinks import stream_upsert
+    from reactionetl_etl_spark.streaming.sinks import start_sink, upsert_batch_writer
 
     src = str(tmp_path / "upsert_src")
     # batch 1: initial rows
@@ -335,7 +333,7 @@ def test_stream_upsert_sink_idempotent_replay(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema("k long, v string, day string").parquet(src)
-        q = stream_upsert(stream, table, ["k"], "day", ckpt)
+        q = start_sink(stream, upsert_batch_writer(table, ["k"], "day"), ckpt)
         q.awaitTermination(120)
 
     run()
@@ -430,7 +428,7 @@ def test_stream_rollup_matches_batch_and_skips_replay(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from reactionetl_etl_spark.etl.incremental_agg import read_aggregate_view
-    from reactionetl_etl_spark.streaming.sinks import rollup_batch_writer, stream_rollup
+    from reactionetl_etl_spark.streaming.sinks import rollup_batch_writer, start_sink
 
     src = str(tmp_path / "rollup_src")
     state = str(tmp_path / "rollup_state")
@@ -446,7 +444,7 @@ def test_stream_rollup_matches_batch_and_skips_replay(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema("v decimal(10,2), day string, cat string").parquet(src)
-        q = stream_rollup(stream, state, keys, measures, "day", ckpt)
+        q = start_sink(stream, rollup_batch_writer(state, keys, measures, "day"), ckpt)
         q.awaitTermination(120)
 
     run()
@@ -525,7 +523,7 @@ def test_stream_snapshot_append_sink(spark, tmp_path):
     from reactionetl_etl_spark.etl.snapshots import snapshot_read
     from reactionetl_etl_spark.streaming.sinks import (
         snapshot_append_batch_writer,
-        stream_snapshot_append,
+        start_sink,
     )
 
     src = str(tmp_path / "snapsink_src")
@@ -537,7 +535,7 @@ def test_stream_snapshot_append_sink(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema("k long, v string").parquet(src)
-        q = stream_snapshot_append(stream, table, ckpt)
+        q = start_sink(stream, snapshot_append_batch_writer(table), ckpt)
         q.awaitTermination(120)
 
     run()
@@ -562,7 +560,7 @@ def test_stream_apply_changes_sink(spark, tmp_path):
     from reactionetl_etl_spark.etl.snapshots import snapshot_read
     from reactionetl_etl_spark.streaming.sinks import (
         apply_changes_batch_writer,
-        stream_apply_changes,
+        start_sink,
     )
 
     src = str(tmp_path / "cdc_src")
@@ -575,7 +573,7 @@ def test_stream_apply_changes_sink(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = stream_apply_changes(stream, table, ["k"], ckpt)
+        q = start_sink(stream, apply_changes_batch_writer(table, ["k"]), ckpt)
         q.awaitTermination(120)
 
     run()
@@ -600,7 +598,7 @@ def test_stream_scd2_enrich_tracks_dim_changes(spark, tmp_path):
     appends are exactly-once."""
     from reactionetl_etl_spark.etl.scd import scd2_merge
     from reactionetl_etl_spark.etl.snapshots import snapshot_read
-    from reactionetl_etl_spark.streaming.sinks import stream_scd2_enrich
+    from reactionetl_etl_spark.streaming.sinks import scd2_enrich_batch_writer, start_sink
 
     dim = str(tmp_path / "dim")
     src = str(tmp_path / "facts_src")
@@ -617,7 +615,7 @@ def test_stream_scd2_enrich_tracks_dim_changes(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = stream_scd2_enrich(stream, dim, out, ["k"], "ts", ckpt)
+        q = start_sink(stream, scd2_enrich_batch_writer(dim, out, ["k"], "ts"), ckpt)
         q.awaitTermination(120)
 
     spark.createDataFrame([(10, 1, "2020-05-05")], schema).coalesce(1).write.mode(
@@ -658,7 +656,7 @@ def test_rollup_cdc_stream_tracks_mutating_table(spark, tmp_path):
         snapshot_write,
     )
     from reactionetl_etl_spark.sources.pyds import SnapshotChangesStreamDataSource
-    from reactionetl_etl_spark.streaming.sinks import rollup_cdc_batch_writer
+    from reactionetl_etl_spark.streaming.sinks import rollup_cdc_batch_writer, start_sink
 
     table = str(tmp_path / "cdc_roll_table")
     state = str(tmp_path / "cdc_roll_state")
@@ -673,17 +671,16 @@ def test_rollup_cdc_stream_tracks_mutating_table(spark, tmp_path):
     spark.dataSource.register(SnapshotChangesStreamDataSource)
 
     def drain():
-        q = (
+        stream = (
             spark.readStream.format("snapshot_changes_stream")
             .option("path", table)
             .option("keys", "k")
             .load()
-            .writeStream.foreachBatch(
-                rollup_cdc_batch_writer(state, keys, measures, "day", base_table_path=table)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        )
+        q = start_sink(
+            stream,
+            rollup_cdc_batch_writer(state, keys, measures, "day", base_table_path=table),
+            ckpt,
         )
         q.awaitTermination(120)
 
@@ -781,7 +778,7 @@ def test_stream_join_maintenance_matches_batch_join(spark, tmp_path):
     from reactionetl_etl_spark.etl.incremental_join import read_join_view
     from reactionetl_etl_spark.streaming.sinks import (
         join_maintenance_batch_writer,
-        stream_join_maintenance,
+        start_sink,
     )
 
     lsrc = str(tmp_path / "lsrc")
@@ -792,7 +789,7 @@ def test_stream_join_maintenance_matches_batch_join(spark, tmp_path):
 
     def drain(src, side, ckpt, schema):
         stream = spark.readStream.schema(schema).parquet(src)
-        q = stream_join_maintenance(stream, state, "k", side, ckpt)
+        q = start_sink(stream, join_maintenance_batch_writer(state, "k", side), ckpt)
         q.awaitTermination(120)
 
     lschema, rschema = "k int, lval string", "k int, rval string"
@@ -831,7 +828,7 @@ def test_stream_to_webdataset_incremental_and_idempotent(spark, tmp_path):
     import os
 
     from reactionetl_etl_spark.io.webdataset import read_webdataset_shards
-    from reactionetl_etl_spark.streaming.sinks import stream_to_webdataset
+    from reactionetl_etl_spark.streaming.sinks import start_sink, webdataset_batch_writer
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "wds")
@@ -844,17 +841,19 @@ def test_stream_to_webdataset_incremental_and_idempotent(spark, tmp_path):
     base.write.mode("overwrite").parquet(src)
 
     def drain():
-        q = stream_to_webdataset(
+        q = start_sink(
             spark.readStream.schema(
                 "doc_id long, payload binary, label int"
             ).parquet(src),
-            out,
+            webdataset_batch_writer(
+                out,
+                key_col="doc_id",
+                payload_col="payload",
+                meta_cols=("label",),
+                ext="txt",
+                n_shards=2,
+            ),
             ckpt,
-            key_col="doc_id",
-            payload_col="payload",
-            meta_cols=("label",),
-            ext="txt",
-            n_shards=2,
         )
         q.awaitTermination(120)
 
