@@ -25,8 +25,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from reactionetl_etl_spark.schemas import CSV_COLUMN_MAP, REQUIRED_FACT_COLS
+from reactionetl_etl_spark.io.files import local_frame
+from reactionetl_etl_spark.schemas import (
+    CSV_COLUMN_MAP,
+    LAKE_QUARANTINE_SCHEMA,
+    REQUIRED_FACT_COLS,
+)
 from reactionetl_etl_spark.sources.raw import (
     RawFile,
     probe_csv_headers,
@@ -109,8 +115,8 @@ def cleanse_incoming_csvs(
             )
         )
 
-    clean = _union_or_empty(spark, clean_parts, _empty_clean_schema(spark))
-    quarantined = _union_or_empty(spark, quarantine_parts, _empty_quarantine_schema(spark))
+    clean = _union_or_empty(spark, clean_parts, _CLEAN_FACT_DDL)
+    quarantined = _union_or_empty(spark, quarantine_parts, LAKE_QUARANTINE_SCHEMA)
     return CleanseResult(
         clean=clean, quarantined=quarantined, rejected_files=rejected_files, cached=cached
     )
@@ -124,8 +130,10 @@ def cleanse_metadata_jsons(
     ``dir_read``: see `cleanse_incoming_csvs` — O(dirs) directory scan
     when the batch covers its day directories."""
     if not files:
-        empty = spark.createDataFrame([], _metadata_ddl())
-        return CleanseResult(clean=empty, quarantined=_empty_quarantine_df(spark))
+        return CleanseResult(
+            clean=local_frame(spark, [], _CLEAN_METADATA_DDL),
+            quarantined=local_frame(spark, [], LAKE_QUARANTINE_SCHEMA),
+        )
 
     raw = read_metadata_json(spark, files, dir_read=dir_read)
     # Cast into side columns (raw strings stay visible for the
@@ -176,34 +184,24 @@ def cleanse_metadata_jsons(
     return CleanseResult(clean=good, quarantined=bad, cached=[typed])
 
 
-def _metadata_ddl() -> str:
-    return (
-        "simulation_id string, reaction_name string, activation_energy double,"
-        " ca0 double, cb0 double, t0 double, date_run date, stop_reason string,"
-        " stop_time_s double, source_file string, day string"
-    )
+# conformed rows before the pipeline adds row_id / simulation_num
+_CLEAN_METADATA_DDL = (
+    "simulation_id string, reaction_name string, activation_energy double,"
+    " ca0 double, cb0 double, t0 double, date_run date, stop_reason string,"
+    " stop_time_s double, source_file string, day string"
+)
+_CLEAN_FACT_DDL = (
+    "simulation_id string, ca double, cb double, cc double, cd double,"
+    " temperature double, t_sensor double, rxn_time double,"
+    " source_file string, day string"
+)
 
 
-def _empty_clean_schema(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "simulation_id string, ca double, cb double, cc double, cd double,"
-        " temperature double, t_sensor double, rxn_time double,"
-        " source_file string, day string",
-    )
-
-
-def _empty_quarantine_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "payload string, reason string, source_file string, day string")
-
-
-def _empty_quarantine_schema(spark: SparkSession) -> DataFrame:
-    return _empty_quarantine_df(spark)
-
-
-def _union_or_empty(spark: SparkSession, parts: list[DataFrame], empty: DataFrame) -> DataFrame:
+def _union_or_empty(
+    spark: SparkSession, parts: list[DataFrame], schema: StructType | str
+) -> DataFrame:
     if not parts:
-        return empty
+        return local_frame(spark, [], schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

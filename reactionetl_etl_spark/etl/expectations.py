@@ -28,6 +28,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from reactionetl_etl_spark.io.files import local_frame
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -135,7 +137,8 @@ def write_with_expectations(
     reports: list[DataFrame] = []
     if row_local:
         reports.append(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(r.name, r.kind, int(got[r.name] or 0)) for r in row_local],
                 "rule string, kind string, n_violations long",
             )
@@ -143,8 +146,8 @@ def write_with_expectations(
     if others:
         reports.append(run_expectations(df, others).drop("passed"))
     if not reports:  # zero rules: a completed write still gets a report
-        empty = spark.createDataFrame(
-            [], "rule string, kind string, n_violations long, passed boolean"
+        empty = local_frame(
+            spark, [], "rule string, kind string, n_violations long, passed boolean"
         )
         return empty, n_rows
     out = reports[0]

@@ -46,12 +46,13 @@ from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from reactionetl_etl_spark.etl.commit import (
     recover_staged_commits,
     staged_overwrite_partitions,
 )
-from reactionetl_etl_spark.io.files import read_if_exists
+from reactionetl_etl_spark.io.files import local_frame, read_if_exists
 from reactionetl_etl_spark.logging_config import get_logger, setup_logging
 from reactionetl_etl_spark.etl.cleanse import (
     cleanse_incoming_csvs,
@@ -61,6 +62,13 @@ from reactionetl_etl_spark.etl.enrich import (
     assign_simulation_nums,
     current_max_simulation_num,
     enrich_fact,
+)
+from reactionetl_etl_spark.schemas import (
+    LAKE_AUDIT_SCHEMA,
+    LAKE_DIM_SCHEMA,
+    LAKE_FACT_SCHEMA,
+    LAKE_MANIFEST_SCHEMA,
+    LAKE_QUARANTINE_SCHEMA,
 )
 from reactionetl_etl_spark.sources.raw import RawFile, list_raw_files
 
@@ -89,24 +97,29 @@ class ReactionLake:
         setup_logging(log_dir or f"{self.root}/logs")
 
     # -- table readers ----------------------------------------------------
+    # Each reader passes the table's declared schema (schemas.LAKE_*), so
+    # no footer-inference job runs per read (~70 ms vs ~10 ms on a 4-core
+    # host, PERF_NOTES.md "ingest cycle"). A table never written returns
+    # None; a table directory that exists but holds no data file reads
+    # as an empty frame with the declared schema.
 
-    def _read_or_none(self, spark: SparkSession, path: str) -> DataFrame | None:
-        return read_if_exists(lambda: spark.read.parquet(path))
+    def _read_or_none(self, spark: SparkSession, path: str, schema: StructType) -> DataFrame | None:
+        return read_if_exists(lambda: spark.read.schema(schema).parquet(path))
 
     def fact(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_or_none(spark, self.fact_path)
+        return self._read_or_none(spark, self.fact_path, LAKE_FACT_SCHEMA)
 
     def dim(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_or_none(spark, self.dim_path)
+        return self._read_or_none(spark, self.dim_path, LAKE_DIM_SCHEMA)
 
     def audit(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_or_none(spark, self.audit_path)
+        return self._read_or_none(spark, self.audit_path, LAKE_AUDIT_SCHEMA)
 
     def quarantine(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_or_none(spark, self.quarantine_path)
+        return self._read_or_none(spark, self.quarantine_path, LAKE_QUARANTINE_SCHEMA)
 
     def manifest(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_or_none(spark, self.manifest_path)
+        return self._read_or_none(spark, self.manifest_path, LAKE_MANIFEST_SCHEMA)
 
     def fact_enriched(self, spark: SparkSession) -> DataFrame:
         """Read-time enrichment view: always-current simulation_num
@@ -121,27 +134,27 @@ class ReactionLake:
     # -- incremental discovery (M1/M2 replacement) ------------------------
 
     def _new_files(self, spark: SparkSession, listed: list[RawFile]) -> list[RawFile]:
-        """Filter out files already in the manifest.
+        """Filter out files already in the manifest, keeping listing
+        order.
 
         The listed backlog is driver-side (it is metadata); membership
         is checked with a join against the manifest table so the
-        manifest itself never has to fit on the driver.
+        manifest itself never has to fit on the driver. One call covers
+        every suffix: one manifest read, one collect.
         """
         if not listed:
             return []
         manifest = self.manifest(spark)
         if manifest is None:
             return listed
-        listed_df = spark.createDataFrame(
-            [(f.path, f.day) for f in listed], "path string, day string"
-        )
-        fresh = (
-            listed_df.join(
+        listed_df = local_frame(spark, [(f.path,) for f in listed], "path string")
+        fresh = {
+            r["path"]
+            for r in listed_df.join(
                 manifest.select(F.col("source_file").alias("path")), on="path", how="left_anti"
-            )
-            .collect()
-        )
-        return [RawFile(r["path"], r["day"]) for r in fresh]
+            ).collect()
+        }
+        return [f for f in listed if f.path in fresh]
 
     # -- the run ----------------------------------------------------------
 
@@ -174,8 +187,9 @@ class ReactionLake:
         now_col = F.lit(now.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp_ntz")
         all_csvs = list_raw_files(incoming_root, ".csv")
         all_jsons = list_raw_files(incoming_root, ".json")
-        csvs = self._new_files(spark, all_csvs)
-        jsons = self._new_files(spark, all_jsons)
+        new = self._new_files(spark, all_csvs + all_jsons)
+        csvs = [f for f in new if f.path.endswith(".csv")]
+        jsons = [f for f in new if f.path.endswith(".json")]
         # Fresh-backlog fast path (the daily-drop norm): when every
         # listed file is new, the cleanse readers may scan day DIRS with
         # a glob instead of resolving each path on the driver — O(dirs)
@@ -250,21 +264,10 @@ class ReactionLake:
                 # batches take dense_sequence's one-task window, skipping
                 # the distributed rank's constant-overhead stages
                 dim_new = assign_simulation_nums(new_meta, offset, approx_rows=len(jsons)).select(
-                    "simulation_id",
-                    "simulation_num",
-                    "reaction_name",
-                    "activation_energy",
-                    "ca0",
-                    "cb0",
-                    "t0",
-                    "date_run",
-                    "stop_reason",
-                    "stop_time_s",
-                    "source_file",
-                    "day",
+                    *LAKE_DIM_SCHEMA.names
                 ).persist()
-                files_df = spark.createDataFrame(
-                    [(f.path, f.day) for f in jsons], "path string, day string"
+                files_df = local_frame(
+                    spark, [(f.path, f.day) for f in jsons], "path string, day string"
                 )
                 loaded = (
                     dim_new.select(_strip_scheme_col(F.col("source_file")).alias("path"))
@@ -339,20 +342,7 @@ class ReactionLake:
                 finally:
                     # shutdown even when the warm-up raised (r15, ADVICE)
                     _csv_pool.shutdown(wait=False)
-            fact_cols = [
-                "row_id",
-                "simulation_id",
-                "simulation_num",
-                "ca",
-                "cb",
-                "cc",
-                "cd",
-                "temperature",
-                "t_sensor",
-                "rxn_time",
-                "source_file",
-                "day",
-            ]
+            fact_cols = LAKE_FACT_SCHEMA.names
             fact_new = result.clean.withColumns(
                 {
                     # deterministic row id: stable under at-least-once replay
@@ -395,12 +385,10 @@ class ReactionLake:
             if tally["bad_rows"]:
                 result.quarantined.write.mode("append").parquet(self.quarantine_path)
             if result.rejected_files:
-                rej = spark.createDataFrame(
-                    [
-                        (None, why, rf.path, rf.day)
-                        for rf, why in result.rejected_files
-                    ],
-                    "payload string, reason string, source_file string, day string",
+                rej = local_frame(
+                    spark,
+                    [(None, why, rf.path, rf.day) for rf, why in result.rejected_files],
+                    LAKE_QUARANTINE_SCHEMA,
                 )
                 rej.write.mode("append").parquet(self.quarantine_path)
             log.info(
@@ -446,9 +434,7 @@ class ReactionLake:
         files), eagerly checkpointed. Factored out of run_once (r14) so
         it can build concurrently with the fact append — both consume
         the materialized cleanse cache and nothing else they share."""
-        files_df = spark.createDataFrame(
-            [(f.path, f.day) for f in csvs], "path string, day string"
-        )
+        files_df = local_frame(spark, [(f.path, f.day) for f in csvs], "path string, day string")
         ok_counts = fact_new.groupBy("source_file").agg(F.count("*").alias("n_ok")).select(
             _strip_scheme_col(F.col("source_file")).alias("path"), "n_ok"
         )
@@ -457,7 +443,8 @@ class ReactionLake:
             .agg(F.count("*").alias("n_bad"))
             .select(_strip_scheme_col(F.col("source_file")).alias("path"), "n_bad")
         )
-        rejected_df = spark.createDataFrame(
+        rejected_df = local_frame(
+            spark,
             [(rf.path, why) for rf, why in result.rejected_files],
             "path string, reject_reason string",
         )
@@ -504,8 +491,10 @@ class ReactionLake:
         """J1 as one broadcast join, persisted.
 
         Rewrites ONLY day-partitions that still contain NULL
-        simulation_num rows (atomic staged partition swap); enriched
-        days are never touched. Returns rows newly enriched.
+        simulation_num rows (atomic staged partition swap), and only
+        when the dim fills at least one of them; enriched days, and
+        days whose metadata has not arrived, are never touched.
+        Returns rows newly enriched.
         With Delta this is `MERGE WHEN MATCHED UPDATE`; on plain
         parquet, partition-scoped rewrite is the idiomatic equivalent.
         """
@@ -532,10 +521,15 @@ class ReactionLake:
         n_newly = enriched.filter(
             F.col("__was_null") & F.col("simulation_num").isNotNull()
         ).count()
+        if n_newly == 0:
+            # no dim row fills a gap: the swap would rewrite the same NULLs
+            return 0
         # atomic staged swap (etl/commit.py): a crash mid-rewrite leaves
         # either the old partitions or the new ones, never a mix — the
         # recover call above completes an interrupted commit next run
-        staged_overwrite_partitions(spark, self.fact_path, enriched.drop("__was_null"), "day")
+        staged_overwrite_partitions(
+            spark, self.fact_path, enriched.select(*LAKE_FACT_SCHEMA.names), "day"
+        )
         return n_newly
 
 

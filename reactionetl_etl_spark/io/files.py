@@ -29,10 +29,12 @@ convenience exists for small exports only.
 
 from __future__ import annotations
 
-from typing import Callable, TypeVar
+from typing import Callable, Iterable, TypeVar
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 _FORMATS = ("parquet", "orc", "csv", "json", "xml")
@@ -59,6 +61,26 @@ def read_if_exists(read: Callable[[], T]) -> T | None:
         if e.getCondition() in _MISSING_TABLE_CONDITIONS:
             return None
         raise
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: StructType | str) -> DataFrame:
+    """Driver-held rows (tuples in ``schema`` order) as a DataFrame
+    backed by a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` builds a Python RDD, and its
+    first read runs a Python-worker job: ~0.3 s for 0-4 rows on a
+    4-core host. A ``pyarrow.Table`` is handed to the JVM as a
+    LocalRelation whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set, so the frame
+    costs ~20 ms to build and collecting it runs no job. For
+    metadata-sized frames only (file lists, status and report rows):
+    the rows travel through the driver."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
 
 
 def _check_format(fmt: str) -> None:

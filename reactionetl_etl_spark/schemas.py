@@ -131,6 +131,48 @@ ETL_RUN_LOG_SCHEMA = T.StructType(
 )
 
 
+# --------------------------------------------------------------------------
+# Lake tables (etl/pipeline.py::ReactionLake): the declared schemas its
+# readers pass to spark.read.schema(...) and its fact/dim writers select
+# in order. `day` stays a string — the session disables partition-type
+# inference.
+# --------------------------------------------------------------------------
+
+_LINEAGE_FIELDS = [
+    T.StructField("source_file", T.StringType()),
+    T.StructField("day", T.StringType()),
+]
+
+# <lake>/fact_sim, partitioned by day
+LAKE_FACT_SCHEMA = T.StructType(FACT_SIM_SCHEMA.fields + _LINEAGE_FIELDS)
+
+# <lake>/dim_rxn
+LAKE_DIM_SCHEMA = T.StructType(DIM_RXN_SCHEMA.fields + _LINEAGE_FIELDS)
+
+# <lake>/audit: the append-only run events
+LAKE_AUDIT_SCHEMA = ETL_RUN_LOG_SCHEMA
+
+# <lake>/quarantine: rejected rows (payload = the raw record) and
+# rejected files (payload NULL), each with its reason
+LAKE_QUARANTINE_SCHEMA = T.StructType(
+    [
+        T.StructField("payload", T.StringType()),
+        T.StructField("reason", T.StringType()),
+        *_LINEAGE_FIELDS,
+    ]
+)
+
+# <lake>/manifest: one row per processed file (M1/M2 state)
+LAKE_MANIFEST_SCHEMA = T.StructType(
+    [
+        *_LINEAGE_FIELDS,
+        T.StructField("etl_type", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("ingested_at", T.TimestampNTZType()),
+    ]
+)
+
+
 def conformed_fact_types() -> dict[str, T.DataType]:
     """Conformed measure column → type, for the cleanse cast step."""
     return dict(_FACT_MEASURE_TYPES)

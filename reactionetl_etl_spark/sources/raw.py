@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from reactionetl_etl_spark.io.files import local_frame
 from reactionetl_etl_spark.schemas import (
     CSV_COLUMN_MAP,
     PANDAS_INDEX_ARTIFACT,
@@ -85,7 +86,7 @@ def _exact_file_filter(df: DataFrame, spark: SparkSession, files: list[RawFile])
     (scheme-stripped) lineage path guarantees the dir-read plan stays
     row-identical to the per-path plan. The file frame is
     listing-sized — the same metadata the driver already holds."""
-    wanted = spark.createDataFrame([(f.path,) for f in files], "__wanted_path string")
+    wanted = local_frame(spark, [(f.path,) for f in files], "__wanted_path string")
     stripped = F.regexp_replace(
         F.col("source_file"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//)?/*", "/"
     )

@@ -27,6 +27,8 @@ import threading
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
+from reactionetl_etl_spark.io.files import local_frame
+
 PROGRESS_SCHEMA = (
     "query_id string, run_id string, query_name string, batch_id long, "
     "event_ts string, num_input_rows long, input_rows_per_second double, "
@@ -81,12 +83,10 @@ class ProgressAuditListener(StreamingQueryListener):
             rows, self._rows = self._rows, []
         if not rows:
             return 0
-        # repartition(1), NOT coalesce(1): coalesce folds the Python
-        # local relation's 32 partition evaluations into ONE task that
-        # runs them sequentially (~4.5 s for any row count, measured
-        # r12); repartition's map side stays parallel (~0.5 s) and
-        # still yields a single output file
-        spark.createDataFrame(rows, PROGRESS_SCHEMA).repartition(1).write.mode(
+        # one output file: the Arrow local relation spreads its rows over
+        # up to defaultParallelism partitions; coalesce(1) folds them
+        # into one JVM task (no Python worker runs)
+        local_frame(spark, rows, PROGRESS_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(audit_path)
         return len(rows)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reactionetl_etl_spark.io.files import read_if_exists
+from reactionetl_etl_spark.io.files import local_frame, read_if_exists
 from reactionetl_etl_spark.operators.packing import pack_by_token_budget
 
 
@@ -81,7 +81,8 @@ def packing_batch_writer(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(out_path)
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(batch_id), int(batch_tokens), offset)],
             "batch_id long, batch_tokens long, cum_before long",
         ).write.mode("overwrite").partitionBy("batch_id").option(

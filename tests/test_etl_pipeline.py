@@ -14,6 +14,13 @@ from pyspark.sql import functions as F
 
 from reactionetl_etl_spark.etl.audit import latest_status
 from reactionetl_etl_spark.etl.pipeline import ReactionLake
+from reactionetl_etl_spark.schemas import (
+    LAKE_AUDIT_SCHEMA,
+    LAKE_DIM_SCHEMA,
+    LAKE_FACT_SCHEMA,
+    LAKE_MANIFEST_SCHEMA,
+    LAKE_QUARANTINE_SCHEMA,
+)
 
 from tests.fixtures_etl import (
     sim_uuid,
@@ -110,8 +117,8 @@ def test_enrichment_inline_and_materialization_noop(spark, lake):
     """EP3: with inline enrichment, every fact row whose
     metadata arrived in the batch lands ALREADY enriched; rows without
     metadata stay NULL; materialize_enrichment then has nothing to do
-    (sim 5's facts stay NULL — its metadata never arrives, so its day
-    would be rewritten to the same NULLs, which counts as 0)."""
+    (sim 5's facts stay NULL — its metadata never arrives, so no dim row
+    fills them and its day is left as it is, counting 0)."""
     before = lake.fact(spark).count()
     view = lake.fact_enriched(spark)
     assert view.count() == before
@@ -154,6 +161,117 @@ def test_materialize_enrichment_fills_late_metadata(spark, incoming, tmp_path_fa
     enriched = lk.fact(spark).filter(F.col("simulation_num").isNotNull())
     assert enriched.count() == N_ROWS
     assert lk.materialize_enrichment(spark) == 0  # idempotent
+    # the swap writes the declared column order, like the append
+    assert _fields(spark.read.parquet(lk.fact_path).schema) == _fields(LAKE_FACT_SCHEMA)
+
+
+def _fields(schema) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in schema]
+
+
+def _lake_tables(lk):
+    return {
+        "fact": (lk.fact, lk.fact_path, LAKE_FACT_SCHEMA),
+        "dim": (lk.dim, lk.dim_path, LAKE_DIM_SCHEMA),
+        "audit": (lk.audit, lk.audit_path, LAKE_AUDIT_SCHEMA),
+        "quarantine": (lk.quarantine, lk.quarantine_path, LAKE_QUARANTINE_SCHEMA),
+        "manifest": (lk.manifest, lk.manifest_path, LAKE_MANIFEST_SCHEMA),
+    }
+
+
+def test_lake_tables_match_declared_schemas(spark, lake):
+    """The readers' declared schemas are the ones the writers produce:
+    each table's footer-inferred schema equals its declaration in names,
+    types and order, and the declared read returns the same rows."""
+    lake.materialize_enrichment(spark)
+    for name, (read, path, declared) in _lake_tables(lake).items():
+        inferred = spark.read.parquet(path)
+        assert _fields(inferred.schema) == _fields(declared), name
+        assert sorted(map(tuple, read(spark).collect()), key=repr) == sorted(
+            map(tuple, inferred.collect()), key=repr
+        ), name
+
+
+def test_empty_table_dirs_read_as_empty_declared_frames(spark, tmp_path):
+    """A table never written reads as None; a table directory holding no
+    data file reads as an empty frame with the declared schema."""
+    import os
+
+    lk = ReactionLake(str(tmp_path / "lake"))
+    for name, (read, path, declared) in _lake_tables(lk).items():
+        assert read(spark) is None, name
+        os.makedirs(path)
+        df = read(spark)
+        assert df is not None and df.collect() == [], name
+        assert _fields(df.schema) == _fields(declared), name
+    assert lk.materialize_enrichment(spark) == 0
+    with pytest.raises(FileNotFoundError):
+        ReactionLake(str(tmp_path / "absent")).fact_enriched(spark)
+
+
+def test_materialize_enrichment_leaves_unfillable_day_untouched(spark, tmp_path):
+    """Facts whose metadata never arrives stay NULL, and
+    materialize_enrichment does not rewrite their day partition: the
+    partition's parquet files are the ones the append wrote."""
+    import os
+
+    root = tmp_path / "incoming"
+    day = str(root / "2026-03-01")
+    write_reaction_csv(day, 21, N_ROWS)
+    write_metadata_json(day, 21, "2026-03-01")
+    write_reaction_csv(day, 22, N_ROWS)  # its metadata never arrives
+    lk = ReactionLake(str(tmp_path / "lake"))
+    lk.run_once(spark, str(root), now=T0)
+    part = os.path.join(lk.fact_path, "day=2026-03-01")
+    files = sorted(os.listdir(part))
+    assert lk.fact(spark).filter(F.col("simulation_num").isNull()).count() == N_ROWS
+    for _ in range(2):
+        assert lk.materialize_enrichment(spark) == 0
+        assert sorted(os.listdir(part)) == files
+    assert lk.fact(spark).count() == 2 * N_ROWS
+
+
+def test_run_once_builds_no_python_list_frames(spark, tmp_path, monkeypatch):
+    """Every driver-built frame on the ingest path is an Arrow local
+    relation: with createDataFrame refusing Python lists, a dir-read
+    first run and a manifest-filtered second run (with a rejected file,
+    a malformed row and invalid metadata) both complete."""
+    from pyspark.sql import SparkSession
+
+    from reactionetl_etl_spark.sources import raw as R
+
+    create = SparkSession.createDataFrame
+
+    def arrow_only(self, data, *args, **kwargs):
+        if isinstance(data, (list, tuple)):
+            raise AssertionError("Python-list createDataFrame on the ingest path")
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", arrow_only)
+    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
+    root = tmp_path / "incoming"
+    d1, d2 = str(root / "2026-04-01"), str(root / "2026-04-02")
+    for n in (31, 32):
+        write_reaction_csv(d1, n, N_ROWS)
+        write_metadata_json(d1, n, "2026-04-01")
+    lk = ReactionLake(str(tmp_path / "lake"))
+    first = lk.run_once(spark, str(root), now=T0)
+    assert (first.files_processed, first.fact_rows_loaded, first.dim_rows_loaded) == (
+        4, 2 * N_ROWS, 2
+    )
+
+    write_reaction_csv(d2, 33, N_ROWS, malformed_row_at=3)
+    write_reaction_csv(d2, 34, N_ROWS, drop_col="T (K)")
+    write_metadata_json(d2, 33, "2026-04-02")
+    write_metadata_json(d2, 35, "2026-04-02", bad_value=True)
+    second = lk.run_once(spark, str(root), now=T0)
+    assert (second.files_processed, second.fact_rows_loaded, second.dim_rows_loaded) == (
+        4, N_ROWS - 1, 1
+    )
+    assert second.files_quarantined == 2
+    reasons = {r["reason"] for r in lk.quarantine(spark).collect()}
+    assert any(r.startswith("missing required columns") for r in reasons)
+    assert lk.materialize_enrichment(spark) == 0
 
 
 def test_quarantine_contents(spark, lake):

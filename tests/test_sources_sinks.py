@@ -548,6 +548,62 @@ def test_read_if_exists_missing_empty_and_corrupt(spark, tmp_path):
     assert read_if_exists(lambda: spark.read.parquet(good)).count() == 3
 
 
+def _plan_root(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_local_frame_is_a_jobless_local_relation(spark):
+    """Driver rows through `local_frame` become a JVM LocalRelation:
+    building and collecting the frame runs no Spark job (a Python-list
+    createDataFrame frame runs one on its first read)."""
+    from reactionetl_etl_spark.io.files import local_frame
+
+    sc = spark.sparkContext
+    group = "local_frame_no_job"
+    sc.setJobGroup(group, "local_frame test")
+    try:
+        rows = [("a", "2026-01-05"), ("b", "2026-01-06")]
+        df = local_frame(spark, rows, "path string, day string")
+        assert _plan_root(df) == "LocalRelation"
+        assert [tuple(r) for r in df.collect()] == rows
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the Python-list frame it replaces does run a job
+        spark.createDataFrame([("a",)], "path string").collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_local_frame_nulls_empty_and_arrow_off(spark):
+    """NULLs and an empty row list keep the declared schema, and the rows
+    are identical with spark.sql.execution.arrow.pyspark.enabled off."""
+    from reactionetl_etl_spark.io.files import local_frame
+    from reactionetl_etl_spark.schemas import LAKE_QUARANTINE_SCHEMA
+
+    ddl = "name string, n long, x double"
+    rows = [("a", 1, 0.5), (None, None, None), ("c", -(2**40), float("inf"))]
+    want = [f.simpleString() for f in spark.createDataFrame([], ddl).schema]
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    seen = {}
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            df = local_frame(spark, rows, ddl)
+            empty = local_frame(spark, [], ddl)
+            assert _plan_root(df) == _plan_root(empty) == "LocalRelation"
+            assert [f.simpleString() for f in df.schema] == want
+            assert [f.simpleString() for f in empty.schema] == want
+            assert empty.collect() == []
+            seen[arrow] = [tuple(r) for r in df.collect()]
+        q = local_frame(spark, [(None, "why", "/in/f.csv", "2026-01-05")], LAKE_QUARANTINE_SCHEMA)
+        assert q.schema.simpleString() == LAKE_QUARANTINE_SCHEMA.simpleString()
+    finally:
+        spark.conf.set(key, prior)
+    assert seen["true"] == seen["false"] == rows
+
+
 def test_webdataset_roundtrip_and_deterministic_bytes(spark, tmp_path):
     """WebDataset tar shards: write → read returns exactly the input
     (payload bytes + metadata), shard assignment is the md5 bucket, and

@@ -516,6 +516,32 @@ def test_progress_audit_listener_records_batches(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
+def test_progress_audit_flush_writes_one_file(spark, tmp_path):
+    """A flush of many buffered progress rows appends exactly one
+    parquet file holding all of them."""
+    import json
+    import os
+    from types import SimpleNamespace
+
+    from reactionetl_etl_spark.streaming.monitor import ProgressAuditListener
+
+    listener = ProgressAuditListener()
+    for b in range(7):
+        progress = {
+            "id": "q", "runId": "r", "batchId": b, "numInputRows": b,
+            "durationMs": {"triggerExecution": 5},
+        }
+        event = SimpleNamespace(progress=SimpleNamespace(json=json.dumps(progress)))
+        listener.onQueryProgress(event)
+    audit = str(tmp_path / "audit")
+    assert listener.flush(spark, audit) == 7
+    assert len([f for f in os.listdir(audit) if f.endswith(".parquet")]) == 1
+    rows = spark.read.parquet(audit).orderBy("batch_id").collect()
+    assert [(r["batch_id"], r["num_input_rows"], r["batch_duration_ms"]) for r in rows] == [
+        (b, b, 5) for b in range(7)
+    ]
+
+
 def test_stream_snapshot_append_sink(spark, tmp_path):
     """Micro-batches append to the snapshot table exactly once; the
     drained table equals the concatenated input and a direct writer
