@@ -17,12 +17,13 @@ structurally impossible here: every event row carries its own counts.
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reactionetl_etl_spark.io.files import local_frame
 from reactionetl_etl_spark.schemas import ETL_RUN_LOG_SCHEMA
 
 
@@ -46,22 +47,9 @@ def new_etl_id() -> str:
 
 
 def events_df(spark: SparkSession, events: list[AuditEvent]) -> DataFrame:
-    rows = [
-        (
-            e.etl_id,
-            e.event_time,
-            e.simulation_id,
-            e.etl_type,
-            e.records_inserted,
-            e.records_updated,
-            e.status,
-            e.error_message,
-            e.source_file,
-            e.day,
-        )
-        for e in events
-    ]
-    return spark.createDataFrame(rows, ETL_RUN_LOG_SCHEMA)
+    """Driver-held events as a local frame (AuditEvent's fields are in
+    ETL_RUN_LOG_SCHEMA order)."""
+    return local_frame(spark, [astuple(e) for e in events], ETL_RUN_LOG_SCHEMA)
 
 
 def latest_status(audit: DataFrame) -> DataFrame:

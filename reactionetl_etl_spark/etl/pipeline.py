@@ -5,10 +5,10 @@ clean → COPY → audit → move-directories, then a batched UPDATE-join.
 Engine flow (one run = one call to `run_once`):
 
     discover new files (manifest anti-join — replaces directory moves)
-      → cleanse CSVs       (grouped distributed scans, quarantine split)
-      → append fact parquet, partitioned by day
       → cleanse metadata   (validate, dedupe, dense simulation_num)
       → append dim parquet
+      → cleanse CSVs       (grouped distributed scans, quarantine split)
+      → append fact parquet, partitioned by day, enriched inline
       → append audit events (per-file running→terminal pairs)
       → append manifest     (processed-file registry)
     enrichment (`materialize_enrichment`): rewrite only day-partitions
@@ -32,22 +32,27 @@ downstream. Unlike the reference, a file rejected by validation is
 recorded in the manifest with its reason and not retried forever.
 
 Scale notes: every data-path operation here is a distributed scan,
-map-side join, or columnar append; the only driver-side collections are
-file lists and per-file row counts (metadata-sized). Fact writes are
-day-partitioned so downstream time-ranged queries prune; enrichment
-touches only unenriched partitions.
+map-side join, or columnar append. The driver holds O(files) state: the
+listing, the manifest anti-join result, the header-probe groups, the
+rejected-file list, and each file's outcome (per-file row counts in,
+audit and manifest rows out). The outcomes add nothing asymptotically
+to what the listing already costs. Fact writes are day-partitioned so
+downstream time-ranged queries prune; enrichment touches only
+unenriched partitions.
 """
 
 from __future__ import annotations
 
-import uuid
-from dataclasses import dataclass
+import os
+import re
+from dataclasses import dataclass, replace
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from reactionetl_etl_spark.etl.audit import AuditEvent, events_df, new_etl_id
 from reactionetl_etl_spark.etl.commit import (
     recover_staged_commits,
     staged_overwrite_partitions,
@@ -70,7 +75,7 @@ from reactionetl_etl_spark.schemas import (
     LAKE_MANIFEST_SCHEMA,
     LAKE_QUARANTINE_SCHEMA,
 )
-from reactionetl_etl_spark.sources.raw import RawFile, list_raw_files
+from reactionetl_etl_spark.sources.raw import RawFile, list_raw_files, strip_uri_scheme
 
 log = get_logger("etl.pipeline")
 
@@ -178,14 +183,16 @@ class ReactionLake:
         rewrite was ~4 s of a 13 s ingest. Facts whose metadata hasn't
         arrived stay NULL and `materialize_enrichment` remains the
         late-metadata gap-filler (the staged atomic partition-swap path,
-        exercised by the late-dim tests)."""
+        exercised by the late-dim tests).
+
+        Each file's outcome (status, error message, rows inserted) is
+        worked out on the driver from per-file counts collected off the
+        cleanse scans, and the audit and manifest rows are written from
+        there. The driver already holds O(files) state here (the
+        listing, the manifest anti-join result, the header-probe groups,
+        the rejected-file list), so one outcome per file adds nothing
+        asymptotically."""
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-        # one nonce per run_once call: etl_ids stay deterministic WITHIN
-        # a run (audit + manifest writes of the same status frame agree)
-        # but two runs given the same explicit `now` (tests, replays) no
-        # longer collide in the append-only audit log
-        run_token = f"{now.isoformat()}|{uuid.uuid4().hex}"
-        now_col = F.lit(now.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp_ntz")
         all_csvs = list_raw_files(incoming_root, ".csv")
         all_jsons = list_raw_files(incoming_root, ".json")
         new = self._new_files(spark, all_csvs + all_jsons)
@@ -204,145 +211,75 @@ class ReactionLake:
             "run_once: %d new reaction CSVs, %d new metadata JSONs under %s",
             len(csvs), len(jsons), incoming_root,
         )
-
-        # Per-file STATUS FRAMES (rows = files) replace the former
-        # driver-side AuditEvent list + per-file Python loop: row
-        # counts, statuses, and error messages are joined/derived as
-        # DataFrames, so a million-file backlog never serializes its
-        # audit trail through driver memory. The only driver-side
-        # remnants are the file listing itself (metadata) and one
-        # 1-row tally aggregate per branch for RunResult.
-        csv_st = json_st = None
-        fact_loaded = dim_loaded = quarantined_files = 0
-
-        # Overlap (r14, guide-§2.6 shape): the CSV PARSE does not depend
-        # on the dims phase — only the fact append's inline enrich join
-        # does. Kick the cleanse scan's cache materialization off on a
-        # driver thread so it back-fills executor cores while the dims
-        # phase runs its (small, underparallelized) jobs; the fact
-        # branch below joins the by-then-appended dim exactly as
-        # before. count() on the clean projection populates the persist
-        # of the full parsed scan (InMemoryRelation materializes every
-        # column).
-        from concurrent.futures import ThreadPoolExecutor
-
-        csv_result = None
-        _csv_warm = _csv_pool = None
-        if csvs:
-            csv_result = cleanse_incoming_csvs(spark, csvs, dir_read=csv_dir_read)
-            if jsons:
-                _csv_pool = ThreadPoolExecutor(1)
-                _csv_warm = _csv_pool.submit(csv_result.clean.count)
-
-        def _abort_csv_pool() -> None:
-            # r15 (ADVICE): every exceptional exit between the warm-up
-            # submit above and its consumption in the fact branch must
-            # still shut the executor down — otherwise the non-daemon
-            # worker keeps the interpreter alive while the exception
-            # propagates. cancel_futures drops the job if it has not
-            # started; a mid-flight count just finishes into a dropped
-            # future.
-            if _csv_pool is not None:
-                _csv_pool.shutdown(wait=False, cancel_futures=True)
+        # the terminal audit event of every processed file
+        outcomes: list[AuditEvent] = []
+        fact_loaded = dim_loaded = 0
 
         # ---- metadata JSONs → dim_rxn (V3 + W3 + X4) ----
         # Dims are processed BEFORE the facts so the fact append can
         # pick up this batch's simulation_nums inline.
-        try:
-            if jsons:
-                result = cleanse_metadata_jsons(spark, jsons, dir_read=json_dir_read)
-                existing_dim = self.dim(spark)
-                new_meta = result.clean
-                if existing_dim is not None:
-                    # PK semantics (create_tables.sql:19): never load a
-                    # simulation_id twice — skip already-present, dedupe batch
-                    new_meta = new_meta.join(
-                        existing_dim.select("simulation_id"), on="simulation_id", how="left_anti"
-                    )
-                new_meta = new_meta.dropDuplicates(["simulation_id"])
-                offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
-                # approx_rows = file count (≤1 dim row per file): small
-                # batches take dense_sequence's one-task window, skipping
-                # the distributed rank's constant-overhead stages
-                dim_new = assign_simulation_nums(new_meta, offset, approx_rows=len(jsons)).select(
-                    *LAKE_DIM_SCHEMA.names
-                ).persist()
-                files_df = local_frame(
-                    spark, [(f.path, f.day) for f in jsons], "path string, day string"
+        if jsons:
+            result = cleanse_metadata_jsons(spark, jsons, dir_read=json_dir_read)
+            existing_dim = self.dim(spark)
+            new_meta = result.clean
+            if existing_dim is not None:
+                # PK semantics (create_tables.sql:19): never load a
+                # simulation_id twice — skip already-present, dedupe batch
+                new_meta = new_meta.join(
+                    existing_dim.select("simulation_id"), on="simulation_id", how="left_anti"
                 )
-                loaded = (
-                    dim_new.select(_strip_scheme_col(F.col("source_file")).alias("path"))
-                    .distinct()
-                    .withColumn("__loaded", F.lit(True))
-                )
-                bad = (
-                    result.quarantined.select(_strip_scheme_col(F.col("source_file")).alias("path"))
-                    .distinct()
-                    .withColumn("__bad", F.lit(True))
-                )
-                json_st = (
-                    files_df.join(loaded, "path", "left")
-                    .join(bad, "path", "left")
-                    .withColumn("status", F.when(F.col("__bad"), "quarantined").otherwise(F.lit("success")))
-                    .withColumn(
-                        "error_message",
-                        F.when(F.col("__bad"), "metadata validation failed").when(
-                            F.col("__loaded").isNull() & F.col("__bad").isNull(),
-                            "duplicate simulation_id (skipped)",
-                        ),
-                    )
-                    .withColumn(
-                        "records_inserted",
-                        F.when(F.col("__bad").isNull() & F.col("__loaded").isNotNull(), 1)
-                        .otherwise(0)
-                        .cast("int"),
-                    )
-                    .withColumn("etl_id", _derived_etl_id(F.col("path"), run_token))
-                    .withColumn("simulation_id", _filename_key(F.col("path"), r"^metadata_(.+)\.json$"))
-                    .withColumn("etl_type", F.lit("metadata"))
-                    # Eager lineage break BEFORE the dim append: st's plan
-                    # contains the anti-join against dim_path, so any later
-                    # re-evaluation (and dim_new.unpersist() CASCADES the
-                    # uncache into dependent cached plans, making one
-                    # likely) would see the appended output and anti-join
-                    # the new rows away. localCheckpoint decouples st from
-                    # dim_path entirely; a plain persist() does not survive
-                    # the cascade.
-                    .repartition(max(1, len(jsons) // 100_000))
-                    .localCheckpoint(eager=True)
-                )
-                # overlap (r14): the dim append reads dim_new's cache, the
-                # tally reads the json_st checkpoint — independent jobs, so
-                # the tally back-fills cores while the write commits
-                with ThreadPoolExecutor(1) as _dim_pool:
-                    _dim_wr = _dim_pool.submit(
-                        lambda: dim_new.write.mode("append").parquet(self.dim_path)
-                    )
-                    tally = json_st.agg(
-                        F.sum("records_inserted").alias("loaded"),
-                        F.sum((F.col("status") == "quarantined").cast("int")).alias("q"),
-                    ).first()
-                    _dim_wr.result()
-                dim_new.unpersist()
-                dim_loaded += int(tally["loaded"] or 0)
-                quarantined_files += int(tally["q"] or 0)
-                if tally["q"]:
-                    result.quarantined.write.mode("append").parquet(self.quarantine_path)
-                    log.warning("quarantined %d metadata files (validation failed)", int(tally["q"]))
-                log.info("metadata: %d files, %d dim rows loaded", len(jsons), int(tally["loaded"] or 0))
-                result.release()
-        except BaseException:
-            _abort_csv_pool()
-            raise
+            new_meta = new_meta.dropDuplicates(["simulation_id"])
+            offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
+            # approx_rows = file count (≤1 dim row per file): small
+            # batches take dense_sequence's one-task window, skipping
+            # the distributed rank's constant-overhead stages
+            dim_new = assign_simulation_nums(new_meta, offset, approx_rows=len(jsons)).select(
+                *LAKE_DIM_SCHEMA.names
+            ).persist()
+            # Which files loaded a dim row and which failed validation.
+            # Collected BEFORE the dim append: dim_new anti-joins the dim
+            # table, so evaluated after the append it finds its own rows
+            # there and reports nothing loaded.
+            loaded, bad = set(), set()
+            for r in (
+                dim_new.select("source_file", F.lit(True).alias("ok"))
+                .unionByName(result.quarantined.select("source_file", F.lit(False).alias("ok")))
+                .collect()
+            ):
+                (loaded if r["ok"] else bad).add(strip_uri_scheme(r["source_file"]))
+            dim_new.write.mode("append").parquet(self.dim_path)
+            dim_new.unpersist()
+            events = []
+            for f in jsons:
+                if f.path in bad:
+                    ev = _terminal_event(f, "metadata", now, "quarantined", "metadata validation failed")
+                elif f.path in loaded:
+                    ev = _terminal_event(f, "metadata", now, "success", records_inserted=1)
+                else:
+                    ev = _terminal_event(f, "metadata", now, "success", "duplicate simulation_id (skipped)")
+                events.append(ev)
+            outcomes += events
+            dim_loaded, n_quarantined = _tally(events)
+            if n_quarantined:
+                result.quarantined.write.mode("append").parquet(self.quarantine_path)
+                log.warning("quarantined %d metadata files (validation failed)", n_quarantined)
+            log.info("metadata: %d files, %d dim rows loaded", len(jsons), dim_loaded)
+            result.release()
+
         # ---- reaction CSVs → fact_sim (EP2 + W2; + inline J1) ----
         if csvs:
-            result = csv_result
-            if _csv_warm is not None:
-                try:
-                    _csv_warm.result()  # surface any cleanse error here
-                finally:
-                    # shutdown even when the warm-up raised (r15, ADVICE)
-                    _csv_pool.shutdown(wait=False)
+            result = cleanse_incoming_csvs(spark, csvs, dir_read=csv_dir_read)
+            # Clean and quarantined rows per file. The first action over
+            # the persisted cleanse scan, so it also fills the cache the
+            # fact append reads.
+            counts = {
+                strip_uri_scheme(r["source_file"]): (r["n_ok"], r["n_bad"])
+                for r in result.clean.select("source_file", F.lit(True).alias("ok"))
+                .unionByName(result.quarantined.select("source_file", F.lit(False).alias("ok")))
+                .groupBy("source_file")
+                .agg(F.count_if("ok").alias("n_ok"), F.count_if(~F.col("ok")).alias("n_bad"))
+                .collect()
+            }
             fact_cols = LAKE_FACT_SCHEMA.names
             fact_new = result.clean.withColumns(
                 {
@@ -357,33 +294,24 @@ class ReactionLake:
             dim_now = self.dim(spark)
             if dim_now is not None:
                 fact_new = enrich_fact(fact_new, dim_now).select(*fact_cols)
-            # overlap (r14): the fact append and the per-file status
-            # checkpoint both read the (already-materialized) cleanse
-            # cache and nothing else they share, so the status build
-            # back-fills cores while the write commits. When no JSON
-            # batch pre-warmed the cache, populate it first — two cold
-            # concurrent consumers would otherwise both compute the
-            # parse (CacheManager does not dedupe in-flight partition
-            # computation across jobs).
-            if _csv_warm is None:
-                csv_result.clean.count()
-            with ThreadPoolExecutor(1) as _fact_pool:
-                _fact_wr = _fact_pool.submit(
-                    lambda: fact_new.write.mode("append")
-                    .partitionBy("day")
-                    .parquet(self.fact_path)
-                )
-                csv_st = self._csv_status_frame(spark, csvs, result, fact_new, run_token)
-                _fact_wr.result()
+            fact_new.write.mode("append").partitionBy("day").parquet(self.fact_path)
 
-            tally = csv_st.agg(
-                F.sum(F.when(F.col("status") == "success", F.col("n_ok")).otherwise(F.lit(0))).alias("ok"),
-                F.sum((F.col("status") == "quarantined").cast("int")).alias("q"),
-                F.sum("n_bad").alias("bad_rows"),
-            ).first()
-            fact_loaded += int(tally["ok"] or 0)
-            quarantined_files += int(tally["q"] or 0)
-            if tally["bad_rows"]:
+            rejected = {rf.path: why for rf, why in result.rejected_files}
+            events = []
+            for f in csvs:
+                n_ok, n_bad = counts.get(f.path, (0, 0))
+                if f.path in rejected:
+                    ev = _terminal_event(f, "reaction", now, "quarantined", rejected[f.path])
+                elif n_bad and not n_ok:
+                    ev = _terminal_event(f, "reaction", now, "quarantined", f"{n_bad} malformed rows")
+                elif n_bad:
+                    ev = _terminal_event(f, "reaction", now, "success", f"{n_bad} rows quarantined", n_ok)
+                else:
+                    ev = _terminal_event(f, "reaction", now, "success", records_inserted=n_ok)
+                events.append(ev)
+            outcomes += events
+            fact_loaded, n_quarantined = _tally(events)
+            if any(n_bad for _, n_bad in counts.values()):
                 result.quarantined.write.mode("append").parquet(self.quarantine_path)
             if result.rejected_files:
                 rej = local_frame(
@@ -392,99 +320,37 @@ class ReactionLake:
                     LAKE_QUARANTINE_SCHEMA,
                 )
                 rej.write.mode("append").parquet(self.quarantine_path)
+            result.release()
             log.info(
                 "ingested %d reaction files: %d rows loaded, %d files quarantined",
-                len(csvs), fact_loaded, int(tally["q"] or 0),
+                len(csvs), fact_loaded, n_quarantined,
             )
-            if tally["q"]:
-                log.warning("quarantined %d reaction files (see audit/quarantine tables)", int(tally["q"]))
+            if n_quarantined:
+                log.warning("quarantined %d reaction files (see audit/quarantine tables)", n_quarantined)
 
-        # ---- audit + manifest appends (DataFrame-native, W4/W5) ----
-        # csv-first union order matches the pre-r8 audit row layout
-        status_frames = [st for st in (csv_st, json_st) if st is not None]
-        if status_frames:
-            st_all = status_frames[0]
-            for other in status_frames[1:]:
-                st_all = st_all.unionByName(other, allowMissingColumns=True)
-            _audit_events_frame(st_all, now_col).write.mode("append").parquet(self.audit_path)
-            st_all.select(
-                F.col("path").alias("source_file"),
-                "day",
-                "etl_type",
-                "status",
-                now_col.alias("ingested_at"),
-            ).write.mode("append").parquet(self.manifest_path)
+        # ---- audit + manifest appends (W4/W5) ----
+        # one running→terminal event pair and one manifest row per file;
+        # coalesce(1) writes each as one file
+        if outcomes:
+            running = [
+                replace(e, records_inserted=None, status="running", error_message=None)
+                for e in outcomes
+            ]
+            events_df(spark, running + outcomes).coalesce(1).write.mode("append").parquet(
+                self.audit_path
+            )
+            local_frame(
+                spark,
+                [(e.source_file, e.day, e.etl_type, e.status, now) for e in outcomes],
+                LAKE_MANIFEST_SCHEMA,
+            ).coalesce(1).write.mode("append").parquet(self.manifest_path)
 
-        if csv_result is not None:
-            csv_result.release()
+        _, quarantined_files = _tally(outcomes)
         log.info(
             "run_once done: %d fact rows, %d dim rows, %d files (%d quarantined)",
-            fact_loaded, dim_loaded, len(csvs) + len(jsons), quarantined_files,
+            fact_loaded, dim_loaded, len(outcomes), quarantined_files,
         )
-        return RunResult(fact_loaded, dim_loaded, len(csvs) + len(jsons), quarantined_files)
-
-    def _csv_status_frame(
-        self,
-        spark: SparkSession,
-        csvs: list[RawFile],
-        result,
-        fact_new: DataFrame,
-        run_token: str,
-    ) -> DataFrame:
-        """Per-file status frame for the reaction-CSV branch (rows =
-        files), eagerly checkpointed. Factored out of run_once (r14) so
-        it can build concurrently with the fact append — both consume
-        the materialized cleanse cache and nothing else they share."""
-        files_df = local_frame(spark, [(f.path, f.day) for f in csvs], "path string, day string")
-        ok_counts = fact_new.groupBy("source_file").agg(F.count("*").alias("n_ok")).select(
-            _strip_scheme_col(F.col("source_file")).alias("path"), "n_ok"
-        )
-        bad_counts = (
-            result.quarantined.groupBy("source_file")
-            .agg(F.count("*").alias("n_bad"))
-            .select(_strip_scheme_col(F.col("source_file")).alias("path"), "n_bad")
-        )
-        rejected_df = local_frame(
-            spark,
-            [(rf.path, why) for rf, why in result.rejected_files],
-            "path string, reject_reason string",
-        )
-        n_bad_expr = F.col("n_bad") > 0
-        fully_bad = n_bad_expr & (F.col("n_ok") == 0)
-        return (
-            files_df.join(ok_counts, "path", "left")
-            .join(bad_counts, "path", "left")
-            .join(rejected_df, "path", "left")
-            .withColumns(
-                {"n_ok": F.coalesce("n_ok", F.lit(0)), "n_bad": F.coalesce("n_bad", F.lit(0))}
-            )
-            .withColumn(
-                "status",
-                F.when(F.col("reject_reason").isNotNull() | fully_bad, "quarantined").otherwise(
-                    "success"
-                ),
-            )
-            .withColumn(
-                "error_message",
-                F.when(F.col("reject_reason").isNotNull(), F.col("reject_reason"))
-                .when(fully_bad, F.concat(F.col("n_bad").cast("string"), F.lit(" malformed rows")))
-                .when(n_bad_expr, F.concat(F.col("n_bad").cast("string"), F.lit(" rows quarantined"))),
-            )
-            .withColumn("etl_id", _derived_etl_id(F.col("path"), run_token))
-            .withColumn("simulation_id", _filename_key(F.col("path"), r"^reaction(.+)\.csv$"))
-            .withColumn("etl_type", F.lit("reaction"))
-            .withColumn("records_inserted", F.col("n_ok").cast("int"))
-            # Eager lineage break (files-sized frame): the audit and
-            # manifest writes must not re-evaluate this plan after
-            # csv_result.release() drops the cleanse persists.
-            # repartition (NOT coalesce — coalesce would drag the
-            # whole upstream cleanse down to one task) keeps the
-            # checkpointed frame at one partition per ~100k files so
-            # the downstream jobs (audit, manifest, tally) don't
-            # each schedule near-empty tasks.
-            .repartition(max(1, len(csvs) // 100_000))
-            .localCheckpoint(eager=True)
-        )
+        return RunResult(fact_loaded, dim_loaded, len(outcomes), quarantined_files)
 
     # -- enrichment (EP3) -------------------------------------------------
 
@@ -534,64 +400,41 @@ class ReactionLake:
         return n_newly
 
 
-def _strip_scheme_col(c: Column) -> Column:
-    """input_file_name() returns file: URIs for local paths; the file
-    listing produces plain paths. Normalize to plain for joining —
-    executor-side, so path reconciliation never needs a driver dict."""
-    return F.regexp_replace(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//)?/*", "/")
+# filename-derived simulation id per etl_type (main.py:23,36 slicing,
+# done as a match on the basename; no match → None)
+_SIM_ID_FROM_NAME = {
+    "reaction": re.compile(r"reaction(.+)\.csv"),
+    "metadata": re.compile(r"metadata_(.+)\.json"),
+}
 
 
-def _filename_key(path_col: Column, pattern: str) -> Column:
-    """Filename-derived simulation id (main.py:23,36 slicing, done as a
-    regexp over the basename; empty/no match → NULL)."""
-    name = F.element_at(F.split(path_col, "/"), -1)
-    key = F.regexp_extract(name, pattern, 1)
-    return F.when(key != "", key)
-
-
-def _derived_etl_id(path_col: Column, run_token: str) -> Column:
-    """Deterministic, UUID-shaped per-(run, file) id: md5 of the run
-    token + path, formatted 8-4-4-4-12. Replaces the driver-side uuid4
-    loop (X3): computed executor-side, identical for a file's
-    running/terminal event pair, and stable under plan re-evaluation
-    (a nondeterministic uuid() expression could disagree between the
-    audit write and the manifest write of the same status frame)."""
-    h = F.md5(F.concat_ws("|", F.lit(run_token), path_col))
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.substring(h, 13, 4),
-        F.substring(h, 17, 4),
-        F.substring(h, 21, 12),
+def _terminal_event(
+    f: RawFile,
+    etl_type: str,
+    now: datetime,
+    status: str,
+    error_message: str | None = None,
+    records_inserted: int = 0,
+) -> AuditEvent:
+    """A processed file's terminal audit event, with a fresh etl_id."""
+    m = _SIM_ID_FROM_NAME[etl_type].fullmatch(os.path.basename(f.path))
+    return AuditEvent(
+        etl_id=new_etl_id(),
+        event_time=now,
+        simulation_id=m.group(1) if m else None,
+        etl_type=etl_type,
+        records_inserted=records_inserted,
+        records_updated=None,
+        status=status,
+        error_message=error_message,
+        source_file=f.path,
+        day=f.day,
     )
 
 
-def _audit_events_frame(st: DataFrame, now_col: Column) -> DataFrame:
-    """W4/W5 running→terminal event pair per file, as a DataFrame
-    transform of the per-file status frame (ETL_RUN_LOG_SCHEMA order)."""
-    running = st.select(
-        "etl_id",
-        now_col.alias("event_time"),
-        "simulation_id",
-        "etl_type",
-        F.lit(None).cast("int").alias("records_inserted"),
-        F.lit(None).cast("int").alias("records_updated"),
-        F.lit("running").alias("status"),
-        F.lit(None).cast("string").alias("error_message"),
-        F.col("path").alias("source_file"),
-        "day",
+def _tally(events: list[AuditEvent]) -> tuple[int, int]:
+    """(records inserted, files quarantined) over terminal events."""
+    return (
+        sum(e.records_inserted for e in events),
+        sum(e.status == "quarantined" for e in events),
     )
-    terminal = st.select(
-        "etl_id",
-        now_col.alias("event_time"),
-        "simulation_id",
-        "etl_type",
-        F.col("records_inserted").cast("int").alias("records_inserted"),
-        F.lit(None).cast("int").alias("records_updated"),
-        "status",
-        "error_message",
-        F.col("path").alias("source_file"),
-        "day",
-    )
-    return running.unionByName(terminal)

@@ -74,13 +74,17 @@ def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: StructType |
     ``spark.sql.execution.arrow.pyspark.enabled`` is set, so the frame
     costs ~20 ms to build and collecting it runs no job. For
     metadata-sized frames only (file lists, status and report rows):
-    the rows travel through the driver."""
+    the rows travel through the driver.
+
+    The frame carries ``schema`` itself, not the type Spark infers
+    back from Arrow: inferred, a ``timestamp_ntz`` field would come
+    back as a session-time-zone ``timestamp``."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
-    return spark.createDataFrame(table)
+    return spark.createDataFrame(table, schema)
 
 
 def _check_format(fmt: str) -> None:

@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reactionetl_etl_spark.operators.graph import _local_frame, _small_graph_edges
+from reactionetl_etl_spark.io.files import local_frame
+from reactionetl_etl_spark.operators.graph import _small_graph_edges
 
 
 def label_propagation(
@@ -85,7 +86,8 @@ def label_propagation(
         out_schema = edges.select(
             F.col(src).alias("node"), F.col(dst).alias("community")
         ).schema
-        return _local_frame(edges.sparkSession, sorted(lab.items()), out_schema)
+        # one partition, as in graph.connected_components' fast path
+        return local_frame(edges.sparkSession, sorted(lab.items()), out_schema).coalesce(1)
 
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if not directed:

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reactionetl_etl_spark.io.files import local_frame
+
 
 # Edge-count bound of the driver-side fast path shared by
 # `connected_components`, `triangle_counts` and
@@ -65,26 +67,6 @@ def _small_graph_edges(edges: DataFrame, src: str, dst: str) -> list | None:
         .collect()
     )
     return head if len(head) <= SMALL_GRAPH_MAX_EDGES else None
-
-
-def _local_frame(spark, rows: list, schema) -> DataFrame:
-    """A driver-computed result as a one-partition DataFrame.
-
-    pandas, not a Python list: Arrow turns it into a JVM LocalRelation,
-    so downstream joins/aggregates run as broadcast/local plans — a
-    list-of-tuples frame round-trips through parallelize and schedules
-    full-width shuffles (the r12 coalesce(1)-on-Python-frames lesson).
-    coalesce(1): the pandas conversion slices the local rows into
-    defaultParallelism (32) partitions, so every consumer aggregate paid
-    a 32-task scan + 32-reducer exchange for a few-thousand-row table
-    (~0.26 s of pure scheduling per job at bench scale, r15). One
-    partition is the right shape for a small-graph result; narrow
-    coalesce of Arrow-backed local slices is cheap (the r12 hazard was
-    pickled PYTHON-list partitions, not these)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=schema.names)
-    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
 def connected_components(
@@ -131,9 +113,15 @@ def connected_components(
         out_schema = edges.select(
             F.col(src).alias("node"), F.col(dst).alias("component")
         ).schema
-        return _local_frame(
+        # One partition: a local frame is sliced into up to
+        # defaultParallelism partitions, so every consumer aggregate of
+        # this few-thousand-row result would pay a full-width scan and
+        # exchange (~0.26 s of scheduling per job at bench scale, r15).
+        # Coalescing a local relation is cheap; the r12 hazard was
+        # pickled Python-list partitions.
+        return local_frame(
             edges.sparkSession, sorted((n, find(n)) for n in parent), out_schema
-        )
+        ).coalesce(1)
 
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -247,11 +235,10 @@ def triangle_counts(
             F.lit(0).cast("long").alias("degree"),
             F.lit(0).cast("long").alias("n_triangles"),
         ).schema
-        return _local_frame(
-            edges.sparkSession,
-            sorted((n, deg[n], tri[n]) for n in deg),
-            out_schema,
-        )
+        # one partition, as in connected_components' fast path
+        return local_frame(
+            edges.sparkSession, sorted((n, deg[n], tri[n]) for n in deg), out_schema
+        ).coalesce(1)
 
     # checkpoint the canonical edge set FIRST: it feeds the degree
     # count, two rank joins, and (via `oriented`) the wedge stages —

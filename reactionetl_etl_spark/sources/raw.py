@@ -25,6 +25,7 @@ File-lineage columns (`source_file`, `day`, filename-derived
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +70,17 @@ def list_raw_files(root: str, suffix: str) -> list[RawFile]:
     return out
 
 
+# The URI scheme prefix `input_file_name()` puts on a path (file:,
+# hdfs://, s3a://...); the listing's plain paths carry none. Replacing
+# it with "/" turns a lineage path back into its listing path.
+URI_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//)?/*"
+
+
+def strip_uri_scheme(path: str) -> str:
+    """A `source_file` lineage value as the listing path it came from."""
+    return re.sub(URI_SCHEME_RE, "/", path, count=1)
+
+
 # backlogs at or below this size keep the explicit per-path reader call
 # (construction-time path resolution is cheap); above it, when the
 # caller knows the file set covers its directories, reads switch to
@@ -87,11 +99,8 @@ def _exact_file_filter(df: DataFrame, spark: SparkSession, files: list[RawFile])
     row-identical to the per-path plan. The file frame is
     listing-sized — the same metadata the driver already holds."""
     wanted = local_frame(spark, [(f.path,) for f in files], "__wanted_path string")
-    stripped = F.regexp_replace(
-        F.col("source_file"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//)?/*", "/"
-    )
     return (
-        df.withColumn("__src_plain", stripped)
+        df.withColumn("__src_plain", F.regexp_replace("source_file", URI_SCHEME_RE, "/"))
         .join(
             F.broadcast(wanted),
             F.col("__src_plain") == F.col("__wanted_path"),

@@ -32,12 +32,10 @@ N_ROWS = 20
 T0 = datetime(2026, 1, 10, 12, 0, 0)
 
 
-@pytest.fixture(scope="module")
-def incoming(tmp_path_factory):
+def _write_incoming(root) -> dict[str, str]:
     """3 valid sims across 2 days + every negative fixture class."""
-    root = tmp_path_factory.mktemp("incoming")
     d1, d2 = str(root / "2026-01-05"), str(root / "2026-01-06")
-    paths = {
+    return {
         "ok1": write_reaction_csv(d1, 1, N_ROWS),
         "ok2": write_reaction_csv(d1, 2, N_ROWS, with_artifact=True),
         "ok3": write_reaction_csv(d2, 3, N_ROWS, extra_col=True),
@@ -49,6 +47,12 @@ def incoming(tmp_path_factory):
         "meta_bad": write_metadata_json(d2, 6, "2026-01-06", bad_value=True),
         "meta_missing": write_metadata_json(d2, 7, missing_field="reaction_name"),
     }
+
+
+@pytest.fixture(scope="module")
+def incoming(tmp_path_factory):
+    root = tmp_path_factory.mktemp("incoming")
+    paths = _write_incoming(root)
     # non-.csv file in a day dir must be ignored (file_manager.py:45)
     (root / "2026-01-06" / "notes.txt").write_text("ignore me")
     return root, paths
@@ -304,6 +308,69 @@ def test_audit_running_success_pairs(spark, lake):
     # jsons: meta1-3 success, meta_bad + meta_missing quarantined
     assert by_status == {"success": 7, "quarantined": 3}
     assert latest.filter(F.col("status") == "running").count() == 0
+
+
+def test_run_once_per_file_outcomes(spark, tmp_path):
+    """Each processed file's terminal audit row (etl_type, simulation_id,
+    status, error_message, records_inserted) and manifest row, over the
+    incoming fixture plus an all-malformed CSV and, in a second run, a
+    metadata file for an already-loaded simulation."""
+    root = tmp_path / "incoming"
+    paths = _write_incoming(root)
+    paths["all_malformed"] = write_reaction_csv(
+        str(root / "2026-01-06"), 9, 1, malformed_row_at=0
+    )
+    lk = ReactionLake(str(tmp_path / "lake"))
+    first = lk.run_once(spark, str(root), now=T0)
+    paths["meta_dup"] = write_metadata_json(str(root / "2026-01-08"), 1, "2026-01-08")
+    second = lk.run_once(spark, str(root), now=T0)
+
+    r, m = "reaction", "metadata"
+    bad_meta = "metadata validation failed"
+    want = {
+        "ok1": (r, sim_uuid(1), "success", None, N_ROWS),
+        "ok2": (r, sim_uuid(2), "success", None, N_ROWS),
+        "ok3": (r, sim_uuid(3), "success", None, N_ROWS),
+        "missing_col": (r, sim_uuid(4), "quarantined", "missing required columns: ['t_sensor']", 0),
+        "malformed": (r, sim_uuid(5), "success", "1 rows quarantined", N_ROWS - 1),
+        "all_malformed": (r, sim_uuid(9), "quarantined", "1 malformed rows", 0),
+        "meta1": (m, sim_uuid(1), "success", None, 1),
+        "meta2": (m, sim_uuid(2), "success", None, 1),
+        "meta3": (m, sim_uuid(3), "success", None, 1),
+        "meta_bad": (m, sim_uuid(6), "quarantined", bad_meta, 0),
+        "meta_missing": (m, sim_uuid(7), "quarantined", bad_meta, 0),
+        "meta_dup": (m, sim_uuid(1), "success", "duplicate simulation_id (skipped)", 0),
+    }
+    name = {p: k for k, p in paths.items()}
+    audit = lk.audit(spark).collect()
+    assert {row["event_time"] for row in audit} == {T0}
+    terminal = {
+        name[row["source_file"]]: (
+            row["etl_type"], row["simulation_id"], row["status"],
+            row["error_message"], row["records_inserted"],
+        )
+        for row in audit
+        if row["status"] != "running"
+    }
+    assert terminal == want
+    # one running event per file, sharing its terminal event's etl_id
+    ids = {}
+    for row in audit:
+        ids.setdefault(name[row["source_file"]], []).append(row["etl_id"])
+    assert all(len(v) == 2 and v[0] == v[1] for v in ids.values())
+    assert len({v[0] for v in ids.values()}) == len(want)
+
+    manifest = {
+        name[row["source_file"]]: (row["etl_type"], row["status"], row["day"], row["ingested_at"])
+        for row in lk.manifest(spark).collect()
+    }
+    assert manifest == {
+        k: (v[0], v[2], paths[k].rsplit("/", 2)[-2], T0) for k, v in want.items()
+    }
+    assert (first.fact_rows_loaded, first.dim_rows_loaded) == (4 * N_ROWS - 1, 3)
+    assert (first.files_processed, first.files_quarantined) == (11, 4)
+    assert (second.fact_rows_loaded, second.dim_rows_loaded) == (0, 0)
+    assert (second.files_processed, second.files_quarantined) == (1, 0)
 
 
 def test_incremental_rerun_is_noop(spark, lake, incoming):

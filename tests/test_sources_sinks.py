@@ -577,17 +577,24 @@ def test_local_frame_is_a_jobless_local_relation(spark):
 
 def test_local_frame_nulls_empty_and_arrow_off(spark):
     """NULLs and an empty row list keep the declared schema, and the rows
-    are identical with spark.sql.execution.arrow.pyspark.enabled off."""
+    are identical with spark.sql.execution.arrow.pyspark.enabled off. A
+    timestamp_ntz field stays timestamp_ntz: its wall-clock value does
+    not shift with the session time zone."""
+    from datetime import datetime
+
     from reactionetl_etl_spark.io.files import local_frame
     from reactionetl_etl_spark.schemas import LAKE_QUARANTINE_SCHEMA
 
     ddl = "name string, n long, x double"
     rows = [("a", 1, 0.5), (None, None, None), ("c", -(2**40), float("inf"))]
     want = [f.simpleString() for f in spark.createDataFrame([], ddl).schema]
+    noon = [(datetime(2026, 1, 10, 12),)]
     key = "spark.sql.execution.arrow.pyspark.enabled"
-    prior = spark.conf.get(key)
+    tz_key = "spark.sql.session.timeZone"
+    prior, prior_tz = spark.conf.get(key), spark.conf.get(tz_key)
     seen = {}
     try:
+        spark.conf.set(tz_key, "Pacific/Kiritimati")
         for arrow in ("true", "false"):
             spark.conf.set(key, arrow)
             df = local_frame(spark, rows, ddl)
@@ -597,10 +604,14 @@ def test_local_frame_nulls_empty_and_arrow_off(spark):
             assert [f.simpleString() for f in empty.schema] == want
             assert empty.collect() == []
             seen[arrow] = [tuple(r) for r in df.collect()]
+            ts = local_frame(spark, noon, "t timestamp_ntz")
+            assert ts.schema.simpleString() == "struct<t:timestamp_ntz>"
+            assert [tuple(r) for r in ts.collect()] == noon
         q = local_frame(spark, [(None, "why", "/in/f.csv", "2026-01-05")], LAKE_QUARANTINE_SCHEMA)
         assert q.schema.simpleString() == LAKE_QUARANTINE_SCHEMA.simpleString()
     finally:
         spark.conf.set(key, prior)
+        spark.conf.set(tz_key, prior_tz)
     assert seen["true"] == seen["false"] == rows
 
 
