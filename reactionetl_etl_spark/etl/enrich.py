@@ -8,11 +8,12 @@ create_tables.sql:32-35):
   only to bound transaction size.
 
 Spark version:
-- dense sequence = `row_number() OVER (ORDER BY date_run, simulation_id)`
-  offset by the current max (deterministic & stable across incremental
-  runs because (date_run, simulation_id) is a total order and history is
-  append-only). Single-partition window — the dim is one row per
-  simulation, small by construction; never do this on a fact table.
+- dense sequence = the reference's numbering over the total order
+  (date_run, simulation_id), offset by the current max (deterministic &
+  stable across incremental runs because history is append-only). One
+  run's new dim rows are at most one per new metadata file, so
+  `assign_simulation_nums` numbers them on the driver; catalog-scale
+  numbering uses the distributed `operators.relational.dense_sequence`.
 - enrichment = ONE broadcast left join + coalesce; the fact side never
   shuffles. At 100 TB the fact table streams through the join
   map-side; a dim too big to broadcast falls back to AQE-planned
@@ -21,32 +22,37 @@ Spark version:
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reactionetl_etl_spark.operators.relational import dense_sequence, enrich_with_dim
+from reactionetl_etl_spark.operators.relational import enrich_with_dim
+from reactionetl_etl_spark.schemas import LAKE_DIM_SCHEMA
 
 
-def assign_simulation_nums(
-    new_dim_rows: DataFrame, current_max: int | None, approx_rows: int | None = None
-) -> DataFrame:
-    """X4: extend the dense sequence over newly loaded dim rows.
+def assign_simulation_nums(rows: Iterable, current_max: int | None) -> list[tuple]:
+    """X4: number one run's new dim rows, as tuples in LAKE_DIM_SCHEMA
+    order.
 
-    `current_max` is the max simulation_num already persisted (None/0 on
-    first load — the reference's NULL-start fragility, SURVEY.md §3 EP3,
-    handled here with coalesce semantics). ``approx_rows``: pass the
-    batch's file count (dim rows ≤ files) so small batches take the
-    one-task window instead of the distributed rank's 4 extra stages.
+    ``rows``: cleansed metadata rows (indexable by column name) whose
+    simulation_id is not in the dim yet. One row per simulation_id is
+    kept, the first in (date_run, source_file) order, and the kept rows
+    are numbered ``current_max + 1, ...`` in (date_run, simulation_id)
+    order. Validation makes both order columns non-NULL, and Python's
+    str order is Spark's UTF8_BINARY order. ``current_max`` is None/0 on
+    first load (the reference's NULL-start fragility, SURVEY.md §3 EP3,
+    handled here with coalesce semantics).
     """
+    first = {}
+    for r in sorted(rows, key=lambda r: (r["date_run"], r["source_file"])):
+        first.setdefault(r["simulation_id"], r)
+    kept = sorted(first.values(), key=lambda r: (r["date_run"], r["simulation_id"]))
     offset = int(current_max or 0)
-    seq = dense_sequence(
-        new_dim_rows,
-        ["date_run", "simulation_id"],
-        "simulation_num",
-        offset,
-        approx_rows=approx_rows,
-    )
-    return seq.withColumn("simulation_num", F.col("simulation_num").cast("int"))
+    return [
+        tuple(offset + n if c == "simulation_num" else r[c] for c in LAKE_DIM_SCHEMA.names)
+        for n, r in enumerate(kept, 1)
+    ]
 
 
 def current_max_simulation_num(dim: DataFrame) -> int:

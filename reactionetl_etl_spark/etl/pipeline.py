@@ -5,7 +5,7 @@ clean → COPY → audit → move-directories, then a batched UPDATE-join.
 Engine flow (one run = one call to `run_once`):
 
     discover new files (manifest anti-join — replaces directory moves)
-      → cleanse metadata   (validate, dedupe, dense simulation_num)
+      → cleanse metadata   (validate; dedupe + dense simulation_num on the driver)
       → append dim parquet
       → cleanse CSVs       (grouped distributed scans, quarantine split)
       → append fact parquet, partitioned by day, enriched inline
@@ -34,9 +34,10 @@ recorded in the manifest with its reason and not retried forever.
 Scale notes: every data-path operation here is a distributed scan,
 map-side join, or columnar append. The driver holds O(files) state: the
 listing, the manifest anti-join result, the header-probe groups, the
-rejected-file list, and each file's outcome (per-file row counts in,
-audit and manifest rows out). The outcomes add nothing asymptotically
-to what the listing already costs. Fact writes are day-partitioned so
+rejected-file list, the new dim rows (at most one per new metadata
+file), and each file's outcome (per-file row counts in, audit and
+manifest rows out). None of these adds anything asymptotically to
+what the listing already costs. Fact writes are day-partitioned so
 downstream time-ranged queries prune; enrichment touches only
 unenriched partitions.
 """
@@ -185,6 +186,13 @@ class ReactionLake:
         late-metadata gap-filler (the staged atomic partition-swap path,
         exercised by the late-dim tests).
 
+        The batch's new dim rows are deduped and numbered on the driver
+        (`assign_simulation_nums`) and appended from there. That collect
+        holds at most the new metadata files' rows: the clean rows not
+        yet in the dim, plus the source_file of each quarantined one.
+        The anti-join against the dim, which grows without bound, stays
+        in Spark.
+
         Each file's outcome (status, error message, rows inserted) is
         worked out on the driver from per-file counts collected off the
         cleanse scans, and the audit and manifest rows are written from
@@ -224,31 +232,28 @@ class ReactionLake:
             new_meta = result.clean
             if existing_dim is not None:
                 # PK semantics (create_tables.sql:19): never load a
-                # simulation_id twice — skip already-present, dedupe batch
+                # simulation_id twice
                 new_meta = new_meta.join(
                     existing_dim.select("simulation_id"), on="simulation_id", how="left_anti"
                 )
-            new_meta = new_meta.dropDuplicates(["simulation_id"])
-            offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
-            # approx_rows = file count (≤1 dim row per file): small
-            # batches take dense_sequence's one-task window, skipping
-            # the distributed rank's constant-overhead stages
-            dim_new = assign_simulation_nums(new_meta, offset, approx_rows=len(jsons)).select(
-                *LAKE_DIM_SCHEMA.names
-            ).persist()
-            # Which files loaded a dim row and which failed validation.
-            # Collected BEFORE the dim append: dim_new anti-joins the dim
-            # table, so evaluated after the append it finds its own rows
-            # there and reports nothing loaded.
-            loaded, bad = set(), set()
-            for r in (
-                dim_new.select("source_file", F.lit(True).alias("ok"))
-                .unionByName(result.quarantined.select("source_file", F.lit(False).alias("ok")))
+            # one collect: the batch's new clean rows, then the
+            # quarantined files; deduped and numbered on the driver
+            rows = (
+                new_meta.withColumn("ok", F.lit(True))
+                .unionByName(
+                    result.quarantined.select("source_file", F.lit(False).alias("ok")),
+                    allowMissingColumns=True,
+                )
                 .collect()
-            ):
-                (loaded if r["ok"] else bad).add(strip_uri_scheme(r["source_file"]))
-            dim_new.write.mode("append").parquet(self.dim_path)
-            dim_new.unpersist()
+            )
+            offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
+            dim_rows = assign_simulation_nums([r for r in rows if r["ok"]], offset)
+            src = LAKE_DIM_SCHEMA.names.index("source_file")
+            loaded = {strip_uri_scheme(r[src]) for r in dim_rows}
+            bad = {strip_uri_scheme(r["source_file"]) for r in rows if not r["ok"]}
+            local_frame(spark, dim_rows, LAKE_DIM_SCHEMA).coalesce(1).write.mode("append").parquet(
+                self.dim_path
+            )
             events = []
             for f in jsons:
                 if f.path in bad:

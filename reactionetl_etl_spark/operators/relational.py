@@ -8,10 +8,9 @@ Reference parity (SURVEY.md §2):
   side when the dim broadcasts.
 - X4 dense sequence (`/root/reference/create_tables.sql:32-35`): a
   PostgreSQL sequence assigning dense surrogate keys. Spark equivalent
-  is `row_number()` over an explicit deterministic ordering, offset by
-  the current max. Single-partition window — acceptable ONLY for
-  dim-sized inputs (the reference's dim is one row per simulation);
-  never use this on a fact table.
+  is a global row number over an explicit deterministic ordering,
+  offset by the current max, computed without a single-partition
+  window (`dense_sequence`).
 """
 
 from __future__ import annotations
@@ -52,15 +51,11 @@ def enrich_with_dim(
     return out
 
 
-SMALL_SEQUENCE_MAX_ROWS = 65_536
-
-
 def dense_sequence(
     df: DataFrame,
     order_by: list[str],
     out_col: str = "seq_num",
     offset: int = 0,
-    approx_rows: int | None = None,
 ) -> DataFrame:
     """X4: dense, deterministic surrogate-key assignment.
 
@@ -72,23 +67,7 @@ def dense_sequence(
     `Exchange SinglePartition` at any scale. Deterministic iff
     ``order_by`` is a total order; within ties the assignment is
     arbitrary but dense either way.
-
-    ``approx_rows``: when the CALLER knows an upper bound on the row
-    count (e.g. the ETL pipeline knows its batch is one dim row per
-    file) and it is ≤ SMALL_SEQUENCE_MAX_ROWS, the plain one-task
-    window is used instead — for a small batch the distributed
-    formulation's 4 extra stages are pure constant overhead (measured
-    ~3-4 s of a 6 s ingest run at 64 files), while a single task over
-    ≤64k narrow rows is milliseconds. The adaptive switch is driven by
-    caller metadata only — no extra count() job — and defaults to the
-    scale-safe path when no bound is known.
     """
-    cols = df.columns
-    if approx_rows is not None and approx_rows <= SMALL_SEQUENCE_MAX_ROWS:
-        w = Window.orderBy(*[F.col(c).asc() for c in order_by])
-        return df.select(
-            *cols, (F.row_number().over(w) + F.lit(offset)).alias(out_col)
-        )
     from reactionetl_etl_spark.operators.rank import global_order_ranks
 
     ranked = global_order_ranks(
@@ -97,7 +76,7 @@ def dense_sequence(
         rank_desc=[False] * len(order_by),
     )
     return ranked.select(
-        *cols, (F.col("global_row_number") + F.lit(offset)).alias(out_col)
+        *df.columns, (F.col("global_row_number") + F.lit(offset)).alias(out_col)
     )
 
 

@@ -7,12 +7,13 @@ quarantine of malformed input — against the Spark pipeline.
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import date, datetime
 
 import pytest
 from pyspark.sql import functions as F
 
 from reactionetl_etl_spark.etl.audit import latest_status
+from reactionetl_etl_spark.etl.enrich import assign_simulation_nums
 from reactionetl_etl_spark.etl.pipeline import ReactionLake
 from reactionetl_etl_spark.schemas import (
     LAKE_AUDIT_SCHEMA,
@@ -313,15 +314,18 @@ def test_audit_running_success_pairs(spark, lake):
 def test_run_once_per_file_outcomes(spark, tmp_path):
     """Each processed file's terminal audit row (etl_type, simulation_id,
     status, error_message, records_inserted) and manifest row, over the
-    incoming fixture plus an all-malformed CSV and, in a second run, a
-    metadata file for an already-loaded simulation."""
+    incoming fixture plus an all-malformed CSV, a second metadata file
+    for sim 1 in the same batch (listed last, earliest date_run) and, in
+    a second run, a metadata file for an already-loaded simulation."""
     root = tmp_path / "incoming"
     paths = _write_incoming(root)
     paths["all_malformed"] = write_reaction_csv(
         str(root / "2026-01-06"), 9, 1, malformed_row_at=0
     )
+    paths["meta1_dup"] = write_metadata_json(str(root / "2026-01-07"), 1, "2026-01-04")
     lk = ReactionLake(str(tmp_path / "lake"))
     first = lk.run_once(spark, str(root), now=T0)
+    dim = {row["simulation_id"]: row for row in lk.dim(spark).collect()}
     paths["meta_dup"] = write_metadata_json(str(root / "2026-01-08"), 1, "2026-01-08")
     second = lk.run_once(spark, str(root), now=T0)
 
@@ -352,6 +356,9 @@ def test_run_once_per_file_outcomes(spark, tmp_path):
         for row in audit
         if row["status"] != "running"
     }
+    # of the same-batch pair, the earlier date_run loads, though its
+    # file is listed last
+    want["meta1_dup"], want["meta1"] = want["meta1"], want["meta_dup"]
     assert terminal == want
     # one running event per file, sharing its terminal event's etl_id
     ids = {}
@@ -367,10 +374,49 @@ def test_run_once_per_file_outcomes(spark, tmp_path):
     assert manifest == {
         k: (v[0], v[2], paths[k].rsplit("/", 2)[-2], T0) for k, v in want.items()
     }
+    # numbered in (date_run, simulation_id) order, not listing order
+    assert {k: row["simulation_num"] for k, row in dim.items()} == {
+        sim_uuid(1): 1, sim_uuid(2): 2, sim_uuid(3): 3
+    }
+    sim1 = dim[sim_uuid(1)]
+    assert (sim1["day"], sim1["date_run"]) == ("2026-01-07", date(2026, 1, 4))
+    assert sim1["source_file"].endswith(paths["meta1_dup"])
     assert (first.fact_rows_loaded, first.dim_rows_loaded) == (4 * N_ROWS - 1, 3)
-    assert (first.files_processed, first.files_quarantined) == (11, 4)
+    assert (first.files_processed, first.files_quarantined) == (12, 4)
     assert (second.fact_rows_loaded, second.dim_rows_loaded) == (0, 0)
     assert (second.files_processed, second.files_quarantined) == (1, 0)
+
+
+def test_assign_simulation_nums_dedupes_and_numbers_in_total_order():
+    """One row per simulation_id, the first in (date_run, source_file)
+    order; numbers from current_max + 1 in (date_run, simulation_id)
+    order; tuples in LAKE_DIM_SCHEMA order."""
+    def row(sim, day, src):
+        return {
+            "simulation_id": sim, "reaction_name": f"rxn_{sim}", "activation_energy": 1.0,
+            "ca0": 2.0, "cb0": 3.0, "t0": 4.0, "date_run": date(2026, 1, day),
+            "stop_reason": "steady_state", "stop_time_s": 5.0,
+            "source_file": src, "day": f"d{day}",
+        }
+
+    rows = [
+        row("b", 6, "file:/in/1/b.json"),
+        row("c", 5, "file:/in/3/c.json"),
+        row("a", 6, "file:/in/2/a.json"),
+        row("c", 5, "file:/in/2/c.json"),  # ties c's date_run; earlier source_file
+        row("a", 7, "file:/in/0/a.json"),  # listed first, later date_run
+    ]
+    got = assign_simulation_nums(rows, 10)
+    by_sim = {t[0]: dict(zip(LAKE_DIM_SCHEMA.names, t)) for t in got}
+    assert [t[0] for t in got] == ["c", "a", "b"]
+    assert {k: (v["simulation_num"], v["source_file"]) for k, v in by_sim.items()} == {
+        "c": (11, "file:/in/2/c.json"),
+        "a": (12, "file:/in/2/a.json"),
+        "b": (13, "file:/in/1/b.json"),
+    }
+    assert by_sim["a"] == {**rows[2], "simulation_num": 12}
+    assert assign_simulation_nums(rows[:1], None)[0][1] == 1
+    assert assign_simulation_nums([], 3) == []
 
 
 def test_incremental_rerun_is_noop(spark, lake, incoming):

@@ -124,13 +124,16 @@ def test_aqe_splits_hub_frontier_join(spark):
     names. With the skew thresholds scaled to test-data sizes (the
     default 256 MB threshold plays this role at 100 TB), AQE must mark
     the hub join SortMergeJoin(skew=true) in the FINAL adaptive plan.
-    Runtime-settable confs only; restored afterwards."""
+    Runtime-settable confs only; restored afterwards. The inputs have 8
+    range partitions whatever the core count: AQE splits a skewed
+    partition only along map outputs, and one map task leaves nothing
+    to split."""
     n = 20_000
-    hub = spark.range(1, n + 1).select(
+    hub = spark.range(1, n + 1, 1, 8).select(
         F.lit(0).alias("src"), F.col("id").alias("dst"),
         F.md5(F.col("id").cast("string")).alias("pad"),
     )
-    ring = spark.range(1, n).select(
+    ring = spark.range(1, n, 1, 8).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst"),
         F.md5(F.col("id").cast("string")).alias("pad"),
     )
@@ -138,7 +141,7 @@ def test_aqe_splits_hub_frontier_join(spark):
     sym = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"), "pad").unionByName(
         edges.select(F.col("dst").alias("s"), F.col("src").alias("d"), "pad")
     )
-    frontier = spark.range(0, n + 1).select(F.col("id").alias("node"))
+    frontier = spark.range(0, n + 1, 1, 8).select(F.col("id").alias("node"))
 
     keys = [
         "spark.sql.autoBroadcastJoinThreshold",

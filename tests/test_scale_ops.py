@@ -68,7 +68,9 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
     other side's matching partition; when both are huge, salt).
     Thresholds are production-defaults-scaled-down (256 MB → 32 KB) so
     the fixture-sized join exhibits the same decision the real
-    thresholds produce on real partitions."""
+    thresholds produce on real partitions. The inputs have 8 range
+    partitions whatever the core count: AQE splits a skewed partition
+    only along map outputs, and one map task leaves nothing to split."""
     saved = {
         "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
             "spark.sql.autoBroadcastJoinThreshold"
@@ -91,7 +93,7 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
         )
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
         fact = (
-            spark.range(60_000)
+            spark.range(0, 60_000, 1, 8)
             .select(
                 F.when(F.col("id") % 10 < 9, F.lit(1))
                 .otherwise(F.col("id"))
@@ -99,7 +101,7 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
                 F.concat(F.lit("x" * 64), F.col("id").cast("string")).alias("pad"),
             )
         )
-        dim = spark.range(100).select(F.col("id").alias("k"), F.lit("d").alias("dv"))
+        dim = spark.range(0, 100, 1, 8).select(F.col("id").alias("k"), F.lit("d").alias("dv"))
         res = fact.join(dim, "k").agg(F.count("*").alias("n"), F.sum(F.length("pad")).alias("b"))
         [row] = res.collect()
         # hot key 1 → 54 000 fact rows × 1 dim row; tail keys k=id
