@@ -72,11 +72,15 @@ def staged_overwrite_partitions(
     """Replace the partitions present in ``df`` (plus delete ``emptied``
     partition VALUES) under ``table_path``, all-or-nothing.
 
-    ``df`` must not lazily read from ``table_path`` (checkpoint first —
-    both in-repo callers do). Returns the commit token. Partition
-    values in ``emptied`` must not need Hadoop path-escaping (true for
-    day strings / plain identifiers; values with ``/ : =`` etc. would
-    need the escaped directory name).
+    ``df`` may read lazily from ``table_path`` itself: it is written
+    under the hidden staging directory, and that write finishes before
+    the intent is persisted and before any live partition is renamed
+    or deleted, so the swap never races its own input. (Like any lazy
+    parquet read, ``df`` lists the table's files when it is built, so
+    build it after the table's last change.) Returns the commit token.
+    Partition values in ``emptied`` must not need Hadoop path-escaping
+    (true for day strings / plain identifiers; values with ``/ : =``
+    etc. would need the escaped directory name).
 
     ``markers``: zero-byte filenames (leading ``_`` → invisible to
     readers) created in the table root as PART OF the same commit —

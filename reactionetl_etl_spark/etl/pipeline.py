@@ -9,11 +9,13 @@ Engine flow (one run = one call to `run_once`):
       → append dim parquet
       → cleanse CSVs       (grouped distributed scans, quarantine split)
       → append fact parquet, partitioned by day, enriched inline
+      → append quarantine   (both cleanses' rejected rows and files, one write)
       → append audit events (per-file running→terminal pairs)
       → append manifest     (processed-file registry)
-    enrichment (`materialize_enrichment`): rewrite only day-partitions
-    that still hold NULL simulation_num rows — atomic staged partition
-    swap (etl/commit.py), broadcast dim join, everything else untouched.
+    enrichment (`materialize_enrichment`): one collect finds the days
+    whose NULL simulation_num rows the dim can fill, then one atomic
+    staged partition swap (etl/commit.py) rewrites only those days
+    through the broadcast dim join; everything else is untouched.
 
 Lake layout (all plain parquet — swap for Delta/Iceberg in production
 to get ACID appends + MERGE; layout and plans are unchanged):
@@ -39,7 +41,7 @@ file), and each file's outcome (per-file row counts in, audit and
 manifest rows out). None of these adds anything asymptotically to
 what the listing already costs. Fact writes are day-partitioned so
 downstream time-ranged queries prune; enrichment touches only
-unenriched partitions.
+partitions it can fill.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ import os
 import re
 from dataclasses import dataclass, replace
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +64,7 @@ from reactionetl_etl_spark.etl.commit import (
 from reactionetl_etl_spark.io.files import local_frame, read_if_exists
 from reactionetl_etl_spark.logging_config import get_logger, setup_logging
 from reactionetl_etl_spark.etl.cleanse import (
+    CleanseResult,
     cleanse_incoming_csvs,
     cleanse_metadata_jsons,
 )
@@ -222,6 +226,10 @@ class ReactionLake:
         # the terminal audit event of every processed file
         outcomes: list[AuditEvent] = []
         fact_loaded = dim_loaded = 0
+        # rejected rows and files of both cleanses, appended once; the
+        # cleanse results back them until then
+        quarantine: list[DataFrame] = []
+        cleansed: list[CleanseResult] = []
 
         # ---- metadata JSONs → dim_rxn (V3 + W3 + X4) ----
         # Dims are processed BEFORE the facts so the fact append can
@@ -266,10 +274,10 @@ class ReactionLake:
             outcomes += events
             dim_loaded, n_quarantined = _tally(events)
             if n_quarantined:
-                result.quarantined.write.mode("append").parquet(self.quarantine_path)
+                quarantine.append(result.quarantined)
                 log.warning("quarantined %d metadata files (validation failed)", n_quarantined)
             log.info("metadata: %d files, %d dim rows loaded", len(jsons), dim_loaded)
-            result.release()
+            cleansed.append(result)
 
         # ---- reaction CSVs → fact_sim (EP2 + W2; + inline J1) ----
         if csvs:
@@ -317,21 +325,29 @@ class ReactionLake:
             outcomes += events
             fact_loaded, n_quarantined = _tally(events)
             if any(n_bad for _, n_bad in counts.values()):
-                result.quarantined.write.mode("append").parquet(self.quarantine_path)
+                quarantine.append(result.quarantined)
             if result.rejected_files:
-                rej = local_frame(
-                    spark,
-                    [(None, why, rf.path, rf.day) for rf, why in result.rejected_files],
-                    LAKE_QUARANTINE_SCHEMA,
+                quarantine.append(
+                    local_frame(
+                        spark,
+                        [(None, why, rf.path, rf.day) for rf, why in result.rejected_files],
+                        LAKE_QUARANTINE_SCHEMA,
+                    )
                 )
-                rej.write.mode("append").parquet(self.quarantine_path)
-            result.release()
+            cleansed.append(result)
             log.info(
                 "ingested %d reaction files: %d rows loaded, %d files quarantined",
                 len(csvs), fact_loaded, n_quarantined,
             )
             if n_quarantined:
                 log.warning("quarantined %d reaction files (see audit/quarantine tables)", n_quarantined)
+
+        if quarantine:
+            reduce(DataFrame.unionByName, quarantine).write.mode("append").parquet(
+                self.quarantine_path
+            )
+        for result in cleansed:
+            result.release()
 
         # ---- audit + manifest appends (W4/W5) ----
         # one running→terminal event pair and one manifest row per file;
@@ -362,11 +378,13 @@ class ReactionLake:
     def materialize_enrichment(self, spark: SparkSession) -> int:
         """J1 as one broadcast join, persisted.
 
-        Rewrites ONLY day-partitions that still contain NULL
-        simulation_num rows (atomic staged partition swap), and only
-        when the dim fills at least one of them; enriched days, and
-        days whose metadata has not arrived, are never touched.
-        Returns rows newly enriched.
+        One collect finds the days holding NULL-simulation_num facts
+        that the dim can fill, with each day's fillable row count — the
+        reference's guarded UPDATE-join touches exactly these rows
+        (`simulation_num IS NULL` with a dim match). Only those days
+        are rewritten, in one atomic staged partition swap; enriched
+        days, and days whose NULLs have no dim row yet, are never
+        touched. Returns rows newly enriched.
         With Delta this is `MERGE WHEN MATCHED UPDATE`; on plain
         parquet, partition-scoped rewrite is the idiomatic equivalent.
         """
@@ -376,33 +394,24 @@ class ReactionLake:
         fact, dim = self.fact(spark), self.dim(spark)
         if fact is None or dim is None:
             return 0
-        days = [
-            r["day"]
-            for r in fact.filter(F.col("simulation_num").isNull()).select("day").distinct().collect()
-        ]
-        if not days:
+        fillable = {
+            r["day"]: r["count"]
+            for r in fact.filter(F.col("simulation_num").isNull())
+            .join(dim.select("simulation_id"), on="simulation_id", how="left_semi")
+            .groupBy("day")
+            .count()
+            .collect()
+        }
+        if not fillable:
             return 0
-        subset = fact.filter(F.col("day").isin(days)).withColumn(
-            "__was_null", F.col("simulation_num").isNull()
-        )
-        # Break lineage before overwriting the path we just read
-        # (Spark refuses a cycle otherwise). localCheckpoint holds the
-        # enriched partitions on executors; with Delta this whole method
-        # is a single MERGE and the checkpoint disappears.
-        enriched = enrich_fact(subset, dim).localCheckpoint(eager=True)
-        n_newly = enriched.filter(
-            F.col("__was_null") & F.col("simulation_num").isNotNull()
-        ).count()
-        if n_newly == 0:
-            # no dim row fills a gap: the swap would rewrite the same NULLs
-            return 0
+        filled = enrich_fact(fact.filter(F.col("day").isin(list(fillable))), dim)
         # atomic staged swap (etl/commit.py): a crash mid-rewrite leaves
         # either the old partitions or the new ones, never a mix — the
         # recover call above completes an interrupted commit next run
         staged_overwrite_partitions(
-            spark, self.fact_path, enriched.select(*LAKE_FACT_SCHEMA.names), "day"
+            spark, self.fact_path, filled.select(*LAKE_FACT_SCHEMA.names), "day"
         )
-        return n_newly
+        return sum(fillable.values())
 
 
 # filename-derived simulation id per etl_type (main.py:23,36 slicing,

@@ -199,10 +199,14 @@ def pq_cosine_topk(
             for s in range(m):
                 d += tables[:, s, :][:, codes_arr[:, s]]
             out_q, out_v, out_d = [], [], []
-            top = min(shortlist_n, len(ids))
             for qi, qid in enumerate(q_ids):
                 row = d[qi]
-                idx = np.argpartition(row, top - 1)[:top]
+                # self is masked BEFORE the cut so it never takes a
+                # shortlist slot, and the cut follows the global
+                # (adc_d2, vec_id) order, so ties at the boundary do
+                # not depend on how rows fall into batches
+                cand = np.flatnonzero(ids != qid) if exclude_self else np.arange(len(ids))
+                idx = cand[np.lexsort((ids[cand], row[cand]))[:shortlist_n]]
                 out_q.extend([qid] * len(idx))
                 out_v.extend(ids[idx])
                 out_d.extend(row[idx])
@@ -211,8 +215,6 @@ def pq_cosine_topk(
     partials = codes.mapInPandas(
         scan, schema="query_id long, vec_id long, adc_d2 double"
     )
-    if exclude_self:
-        partials = partials.filter(F.col("query_id") != F.col("vec_id"))
     w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
     shortlist = (
         partials.withColumn("__r", F.row_number().over(w))

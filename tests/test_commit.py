@@ -51,6 +51,22 @@ def test_staged_overwrite_deletes_emptied_partitions(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "day=d2"))
 
 
+def test_staged_overwrite_accepts_lazy_read_of_same_table(spark, tmp_path):
+    """The input may read the table it replaces, lazily: the staging
+    write finishes before the intent and before any rename, so the swap
+    never races its own input."""
+    path = str(tmp_path / "t")
+    _mk_table(spark, path, [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")])
+    lazy = (
+        spark.read.parquet(path)
+        .filter(F.col("day").isin("d1", "d2"))
+        .withColumn("v", F.concat(F.col("v"), F.lit("!")))
+    )
+    staged_overwrite_partitions(spark, path, lazy.select("k", "v", "day"), "day")
+    assert _snap(spark, path) == {(1, "a!", "d1"), (2, "b!", "d2"), (3, "c", "d3")}
+    assert not [d for d in os.listdir(path) if d.startswith(STAGING_PREFIX)]
+
+
 def test_crash_before_intent_rolls_back(spark, tmp_path):
     """Staging data written but no intent marker → the commit point was
     never reached; recovery deletes the staging dir and the live table

@@ -217,23 +217,45 @@ def test_empty_table_dirs_read_as_empty_declared_frames(spark, tmp_path):
 def test_materialize_enrichment_leaves_unfillable_day_untouched(spark, tmp_path):
     """Facts whose metadata never arrives stay NULL, and
     materialize_enrichment does not rewrite their day partition: the
-    partition's parquet files are the ones the append wrote."""
+    partition's parquet files are the ones the append wrote, byte for
+    byte, even while another day's late metadata is being filled."""
     import os
+
+    def snapshot(part):
+        return {
+            name: open(os.path.join(part, name), "rb").read() for name in os.listdir(part)
+        }
 
     root = tmp_path / "incoming"
     day = str(root / "2026-03-01")
     write_reaction_csv(day, 21, N_ROWS)
     write_metadata_json(day, 21, "2026-03-01")
     write_reaction_csv(day, 22, N_ROWS)  # its metadata never arrives
+    late_day = str(root / "2026-03-02")
+    write_reaction_csv(late_day, 23, N_ROWS)  # its metadata arrives one run late
     lk = ReactionLake(str(tmp_path / "lake"))
     lk.run_once(spark, str(root), now=T0)
     part = os.path.join(lk.fact_path, "day=2026-03-01")
-    files = sorted(os.listdir(part))
-    assert lk.fact(spark).filter(F.col("simulation_num").isNull()).count() == N_ROWS
-    for _ in range(2):
-        assert lk.materialize_enrichment(spark) == 0
-        assert sorted(os.listdir(part)) == files
-    assert lk.fact(spark).count() == 2 * N_ROWS
+    late_part = os.path.join(lk.fact_path, "day=2026-03-02")
+    files = snapshot(part)
+    late_files = snapshot(late_part)
+    assert lk.fact(spark).filter(F.col("simulation_num").isNull()).count() == 2 * N_ROWS
+    assert lk.materialize_enrichment(spark) == 0
+    assert snapshot(part) == files
+    assert snapshot(late_part) == late_files
+
+    write_metadata_json(late_day, 23, "2026-03-02")
+    lk.run_once(spark, str(root), now=T0)
+    assert lk.materialize_enrichment(spark) == N_ROWS
+    assert snapshot(late_part) != late_files  # the filled day was rewritten
+    assert snapshot(part) == files
+    assert lk.materialize_enrichment(spark) == 0
+    assert snapshot(part) == files
+    fact = lk.fact(spark)
+    assert fact.count() == 3 * N_ROWS
+    null_days = {r["day"] for r in fact.filter(F.col("simulation_num").isNull()).collect()}
+    assert null_days == {"2026-03-01"}
+    assert fact.filter(F.col("simulation_num").isNull()).count() == N_ROWS
 
 
 def test_run_once_builds_no_python_list_frames(spark, tmp_path, monkeypatch):

@@ -67,6 +67,36 @@ def test_pq_topk_recall_with_rerank(spark):
     assert "approx_cosine" in raw.columns
 
 
+def test_pq_raw_topk_one_batch_follows_global_adc_order(spark):
+    """With the whole corpus in one Arrow batch the per-batch cut is
+    the shortlist itself: self must not take one of its k slots, and
+    the cut must follow (adc_d2, vec_id) order, ties included — the
+    result equals a numpy ADC brute force over the whole corpus."""
+    df, rows = _fixture(spark)
+    book = train_pq_codebook(df, dim=32, m=8, k=16)
+    coded = pq_encode(df, book).localCheckpoint(eager=True)
+    codes = np.array([r["pq_code"] for r in coded.orderBy("vec_id").collect()])
+    qs = spark.createDataFrame(
+        [(r[0], r[1]) for r in rows[:6]], "query_id long, embedding array<double>"
+    )
+    got = pq_cosine_topk(qs, coded.coalesce(1), book, k=5, refine=None)
+    by_q: dict = {}
+    for r in got.collect():
+        by_q.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"]))
+
+    books = [np.array(b) for b in book]
+    ids = np.array([r[0] for r in rows])
+    for qid in range(6):
+        q = np.array(rows[qid][1])
+        q = q / np.linalg.norm(q)
+        d2 = np.zeros(len(ids))
+        for s, b in enumerate(books):
+            d2 += ((q[s * 4 : (s + 1) * 4][None, :] - b) ** 2).sum(axis=1)[codes[:, s]]
+        keep = ids != qid
+        want = ids[keep][np.lexsort((ids[keep], d2[keep]))][:5]
+        assert [v for _, v in sorted(by_q[qid])] == want.tolist(), qid
+
+
 def test_pq_rejects_bad_dims(spark):
     df, _ = _fixture(spark)
     try:

@@ -1,13 +1,10 @@
-"""Tests for scale-oriented operators: salted join, compaction,
-grouped-map transforms, and custom stateful streaming."""
+"""Tests for scale-oriented operators: salted join, grouped-map
+transforms, and custom stateful streaming."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from reactionetl_etl_spark.etl.compact import compact_table
 from reactionetl_etl_spark.operators.grouped import (
     zscore_per_group_pandas,
     zscore_per_group_window,
@@ -112,61 +109,6 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-
-
-def test_compact_table_reduces_files(spark, tmp_path):
-    """Many small appends → one compaction → few right-sized files,
-    identical contents."""
-    path = str(tmp_path / "t")
-    for i in range(8):
-        spark.range(i * 1000, (i + 1) * 1000).withColumn(
-            "day", F.lit(f"2026-0{i % 2 + 1}-01")
-        ).write.mode("append").partitionBy("day").parquet(path)
-    before_files = sum(
-        1 for root, _d, names in os.walk(path) for n in names if n.endswith(".parquet")
-    )
-    before = spark.read.parquet(path)
-    before_sum = before.agg(F.sum("id")).first()[0]
-    n_after = compact_table(spark, path, partition_col="day", target_file_mb=128)
-    assert n_after < before_files
-    after = spark.read.parquet(path)
-    assert after.count() == 8000
-    assert after.agg(F.sum("id")).first()[0] == before_sum
-
-
-def test_compact_sort_cols_cluster_row_groups(spark, tmp_path):
-    """Clustering on a sort column makes parquet min/max stats
-    selective: after compaction, a range predicate reads fewer rows
-    than the table (row-group skipping), and contents are unchanged."""
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path / "t")
-    # write shuffled values so pre-compaction files all span the full
-    # value range; ~8 MB so a 1 MB target yields several files
-    spark.range(1_000_000).withColumn("v", F.xxhash64("id") % 1000).write.parquet(path)
-    compact_table(spark, path, target_file_mb=1, sort_cols=["v"])
-    # verify physical clustering via parquet footer stats
-    files = [
-        os.path.join(r, n)
-        for r, _d, ns in os.walk(path)
-        for n in ns
-        if n.endswith(".parquet")
-    ]
-    spans = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.row_group(rg).num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "v"
-            )
-            spans.append(col.statistics.max - col.statistics.min)
-    full_span = 1999  # v in [-999, 999] (Java % keeps sign)
-    assert len(spans) >= 3
-    # range clustering: the median row group covers a small value slice
-    assert sorted(spans)[len(spans) // 2] < full_span * 0.5
-    assert spark.read.parquet(path).count() == 1_000_000
 
 
 def test_zscore_pandas_equals_window(spark, sf_dir):
