@@ -4,14 +4,13 @@ Reference flow (/root/reference/main.py:6-50): per-file loop of
 clean → COPY → audit → move-directories, then a batched UPDATE-join.
 Engine flow (one run = one call to `run_once`):
 
-    discover new files (manifest anti-join — replaces directory moves)
+    discover new files (terminal-audit anti-join — replaces directory moves)
       → cleanse metadata   (validate; dedupe + dense simulation_num on the driver)
       → append dim parquet
       → cleanse CSVs       (grouped distributed scans, quarantine split)
       → append fact parquet, partitioned by day, enriched inline
       → append quarantine   (both cleanses' rejected rows and files, one write)
-      → append audit events (per-file running→terminal pairs)
-      → append manifest     (processed-file registry)
+      → append audit events (per-file running→terminal pairs; the commit point)
     enrichment (`materialize_enrichment`): one collect finds the days
     whose NULL simulation_num rows the dim can fill, then one atomic
     staged partition swap (etl/commit.py) rewrites only those days
@@ -22,24 +21,24 @@ to get ACID appends + MERGE; layout and plans are unchanged):
 
     <lake>/fact_sim/day=<d>/*.parquet
     <lake>/dim_rxn/*.parquet
-    <lake>/audit/*.parquet        append-only status events
+    <lake>/audit/*.parquet        append-only status events; the terminal
+                                  ones are the processed-file registry (M1/M2)
     <lake>/quarantine/*.parquet   rejected rows/files with reasons
-    <lake>/manifest/*.parquet     files already processed (M1/M2 state)
 
 Incrementality/idempotency: at-least-once, like the reference
-(README.md:15) — a crash between data append and manifest append can
-reprocess a file; deterministic row_id = xxhash64(simulation_id,
-rxn_time, source day) makes such replays detectable/dedupable
-downstream. Unlike the reference, a file rejected by validation is
-recorded in the manifest with its reason and not retried forever.
+(README.md:15) — a crash before the audit append can reprocess a
+file; deterministic row_id = xxhash64(simulation_id, rxn_time, source
+day) makes such replays detectable/dedupable downstream. Unlike the
+reference, a file rejected by validation is registered with its reason
+and not retried forever. Older lakes' `manifest/` tables go unread.
 
 Scale notes: every data-path operation here is a distributed scan,
 map-side join, or columnar append. The driver holds O(files) state: the
-listing, the manifest anti-join result, the header-probe groups, the
+listing, the registry anti-join result, the header-probe groups, the
 rejected-file list, the new dim rows (at most one per new metadata
-file), and each file's outcome (per-file row counts in, audit and
-manifest rows out). None of these adds anything asymptotically to
-what the listing already costs. Fact writes are day-partitioned so
+file), and each file's outcome (per-file row counts in, audit rows
+out). None of these adds anything asymptotically to what the listing
+already costs. Fact writes are day-partitioned so
 downstream time-ranged queries prune; enrichment touches only
 partitions it can fill.
 """
@@ -77,7 +76,6 @@ from reactionetl_etl_spark.schemas import (
     LAKE_AUDIT_SCHEMA,
     LAKE_DIM_SCHEMA,
     LAKE_FACT_SCHEMA,
-    LAKE_MANIFEST_SCHEMA,
     LAKE_QUARANTINE_SCHEMA,
 )
 from reactionetl_etl_spark.sources.raw import RawFile, list_raw_files, strip_uri_scheme
@@ -100,7 +98,6 @@ class ReactionLake:
         self.dim_path = f"{self.root}/dim_rxn"
         self.audit_path = f"{self.root}/audit"
         self.quarantine_path = f"{self.root}/quarantine"
-        self.manifest_path = f"{self.root}/manifest"
         # Operational (driver-side) logs, reference logging_config.py
         # parity: rotating info.log + error.log under <lake>/logs unless
         # pointed elsewhere. The audit table stays the queryable record.
@@ -110,7 +107,7 @@ class ReactionLake:
 
     def _read_or_none(self, spark: SparkSession, path: str, schema: StructType) -> DataFrame | None:
         """Read one lake table with its declared schema (schemas.LAKE_*),
-        the way all five readers below do. A table never written reads
+        the way the table readers below do. A table never written reads
         as None; a table directory that exists but holds no data file
         reads as an empty frame with the declared schema. Declaring the
         schema skips the footer-inference job a plain read runs (~70 ms
@@ -130,7 +127,15 @@ class ReactionLake:
         return self._read_or_none(spark, self.quarantine_path, LAKE_QUARANTINE_SCHEMA)
 
     def manifest(self, spark: SparkSession) -> DataFrame | None:
-        return self._read_or_none(spark, self.manifest_path, LAKE_MANIFEST_SCHEMA)
+        """The processed-file registry: each processed file's terminal
+        audit event, as (source_file, day, etl_type, status,
+        ingested_at). None while there is no audit table."""
+        audit = self.audit(spark)
+        if audit is None:
+            return None
+        return audit.filter(F.col("status") != "running").select(
+            "source_file", "day", "etl_type", "status", F.col("event_time").alias("ingested_at")
+        )
 
     def fact_enriched(self, spark: SparkSession) -> DataFrame:
         """Read-time enrichment view: always-current simulation_num
@@ -145,13 +150,13 @@ class ReactionLake:
     # -- incremental discovery (M1/M2 replacement) ------------------------
 
     def _new_files(self, spark: SparkSession, listed: list[RawFile]) -> list[RawFile]:
-        """Filter out files already in the manifest, keeping listing
-        order.
+        """Filter out files already in the registry (`manifest`),
+        keeping listing order.
 
         The listed backlog is driver-side (it is metadata); membership
-        is checked with a join against the manifest table so the
-        manifest itself never has to fit on the driver. One call covers
-        every suffix: one manifest read, one collect.
+        is checked with a join against the audit table so the registry
+        never has to fit on the driver. One call covers every suffix:
+        one audit read, one collect.
         """
         if not listed:
             return []
@@ -199,11 +204,12 @@ class ReactionLake:
 
         Each file's outcome (status, error message, rows inserted) is
         worked out on the driver from per-file counts collected off the
-        cleanse scans, and the audit and manifest rows are written from
-        there. The driver already holds O(files) state here (the
-        listing, the manifest anti-join result, the header-probe groups,
-        the rejected-file list), so one outcome per file adds nothing
-        asymptotically."""
+        cleanse scans, and the audit rows are written from there. The
+        driver already holds O(files) state here (the listing, the
+        registry anti-join result, the header-probe groups, the
+        rejected-file list), so one outcome per file adds nothing
+        asymptotically. The audit append is the last write and commits
+        the run: a crash before it leaves the files to the next run."""
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         all_csvs = list_raw_files(incoming_root, ".csv")
         all_jsons = list_raw_files(incoming_root, ".json")
@@ -349,9 +355,8 @@ class ReactionLake:
         for result in cleansed:
             result.release()
 
-        # ---- audit + manifest appends (W4/W5) ----
-        # one running→terminal event pair and one manifest row per file;
-        # coalesce(1) writes each as one file
+        # ---- audit append (W4/W5), the commit point ----
+        # one running→terminal event pair per file, as one file
         if outcomes:
             running = [
                 replace(e, records_inserted=None, status="running", error_message=None)
@@ -360,11 +365,6 @@ class ReactionLake:
             events_df(spark, running + outcomes).coalesce(1).write.mode("append").parquet(
                 self.audit_path
             )
-            local_frame(
-                spark,
-                [(e.source_file, e.day, e.etl_type, e.status, now) for e in outcomes],
-                LAKE_MANIFEST_SCHEMA,
-            ).coalesce(1).write.mode("append").parquet(self.manifest_path)
 
         _, quarantined_files = _tally(outcomes)
         log.info(

@@ -162,16 +162,6 @@ LAKE_QUARANTINE_SCHEMA = T.StructType(
     ]
 )
 
-# <lake>/manifest: one row per processed file (M1/M2 state)
-LAKE_MANIFEST_SCHEMA = T.StructType(
-    [
-        *_LINEAGE_FIELDS,
-        T.StructField("etl_type", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("ingested_at", T.TimestampNTZType()),
-    ]
-)
-
 
 def conformed_fact_types() -> dict[str, T.DataType]:
     """Conformed measure column → type, for the cleanse cast step."""

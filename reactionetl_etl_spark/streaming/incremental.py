@@ -9,8 +9,8 @@ exactly-once file tracking in the checkpoint log, no renames, and no
 shared-filesystem chmod dance (file_manager.py:22-24).
 
 This is the streaming counterpart of `etl.pipeline.ReactionLake`
-(manifest-based). The manifest path gives per-file audit + quarantine
-control; this path gives the lowest-friction exactly-once ingestion.
+(its registry is the audit log). The audit path gives per-file audit +
+quarantine control; this path gives the lowest-friction exactly-once ingestion.
 Both write the same fact layout.
 
 Heterogeneous headers: the streaming CSV source binds ONE schema. Files

@@ -23,3 +23,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def session_confs(spark):
+    """Set session confs for one test: `session_confs({key: value})`.
+
+    May be called more than once. At teardown each key gets back the
+    value it had before the test first set it, or is unset if it had
+    none."""
+    prior: dict[str, str | None] = {}
+
+    def set_confs(confs: dict[str, str]) -> None:
+        for key, value in confs.items():
+            prior.setdefault(key, spark.conf.get(key, None))
+            spark.conf.set(key, value)
+
+    yield set_confs
+    for key, value in prior.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)

@@ -97,3 +97,21 @@ def write_metadata_json(
     with open(path, "w") as fh:
         json.dump(doc, fh, indent=1)
     return path
+
+
+def write_incoming(root, n_rows: int = 20) -> dict[str, str]:
+    """3 valid sims across 2 days + every negative fixture class, under
+    the directory `root` (a pathlib.Path); name → path."""
+    d1, d2 = str(root / "2026-01-05"), str(root / "2026-01-06")
+    return {
+        "ok1": write_reaction_csv(d1, 1, n_rows),
+        "ok2": write_reaction_csv(d1, 2, n_rows, with_artifact=True),
+        "ok3": write_reaction_csv(d2, 3, n_rows, extra_col=True),
+        "missing_col": write_reaction_csv(d2, 4, n_rows, drop_col="Tsensor (K)"),
+        "malformed": write_reaction_csv(d2, 5, n_rows, malformed_row_at=7),
+        "meta1": write_metadata_json(d1, 1, "2026-01-05"),
+        "meta2": write_metadata_json(d1, 2, "2026-01-05"),
+        "meta3": write_metadata_json(d2, 3, "2026-01-06"),
+        "meta_bad": write_metadata_json(d2, 6, "2026-01-06", bad_value=True),
+        "meta_missing": write_metadata_json(d2, 7, missing_field="reaction_name"),
+    }

@@ -19,12 +19,12 @@ from reactionetl_etl_spark.schemas import (
     LAKE_AUDIT_SCHEMA,
     LAKE_DIM_SCHEMA,
     LAKE_FACT_SCHEMA,
-    LAKE_MANIFEST_SCHEMA,
     LAKE_QUARANTINE_SCHEMA,
 )
 
 from tests.fixtures_etl import (
     sim_uuid,
+    write_incoming,
     write_metadata_json,
     write_reaction_csv,
 )
@@ -33,27 +33,10 @@ N_ROWS = 20
 T0 = datetime(2026, 1, 10, 12, 0, 0)
 
 
-def _write_incoming(root) -> dict[str, str]:
-    """3 valid sims across 2 days + every negative fixture class."""
-    d1, d2 = str(root / "2026-01-05"), str(root / "2026-01-06")
-    return {
-        "ok1": write_reaction_csv(d1, 1, N_ROWS),
-        "ok2": write_reaction_csv(d1, 2, N_ROWS, with_artifact=True),
-        "ok3": write_reaction_csv(d2, 3, N_ROWS, extra_col=True),
-        "missing_col": write_reaction_csv(d2, 4, N_ROWS, drop_col="Tsensor (K)"),
-        "malformed": write_reaction_csv(d2, 5, N_ROWS, malformed_row_at=7),
-        "meta1": write_metadata_json(d1, 1, "2026-01-05"),
-        "meta2": write_metadata_json(d1, 2, "2026-01-05"),
-        "meta3": write_metadata_json(d2, 3, "2026-01-06"),
-        "meta_bad": write_metadata_json(d2, 6, "2026-01-06", bad_value=True),
-        "meta_missing": write_metadata_json(d2, 7, missing_field="reaction_name"),
-    }
-
-
 @pytest.fixture(scope="module")
 def incoming(tmp_path_factory):
     root = tmp_path_factory.mktemp("incoming")
-    paths = _write_incoming(root)
+    paths = write_incoming(root, N_ROWS)
     # non-.csv file in a day dir must be ignored (file_manager.py:45)
     (root / "2026-01-06" / "notes.txt").write_text("ignore me")
     return root, paths
@@ -174,13 +157,22 @@ def _fields(schema) -> list[tuple[str, str]]:
     return [(f.name, f.dataType.simpleString()) for f in schema]
 
 
+# the processed-file registry's columns, as ReactionLake.manifest reads them
+MANIFEST_FIELDS = [
+    ("source_file", "string"),
+    ("day", "string"),
+    ("etl_type", "string"),
+    ("status", "string"),
+    ("ingested_at", "timestamp_ntz"),
+]
+
+
 def _lake_tables(lk):
     return {
         "fact": (lk.fact, lk.fact_path, LAKE_FACT_SCHEMA),
         "dim": (lk.dim, lk.dim_path, LAKE_DIM_SCHEMA),
         "audit": (lk.audit, lk.audit_path, LAKE_AUDIT_SCHEMA),
         "quarantine": (lk.quarantine, lk.quarantine_path, LAKE_QUARANTINE_SCHEMA),
-        "manifest": (lk.manifest, lk.manifest_path, LAKE_MANIFEST_SCHEMA),
     }
 
 
@@ -199,19 +191,40 @@ def test_lake_tables_match_declared_schemas(spark, lake):
 
 def test_empty_table_dirs_read_as_empty_declared_frames(spark, tmp_path):
     """A table never written reads as None; a table directory holding no
-    data file reads as an empty frame with the declared schema."""
+    data file reads as an empty frame with the declared schema. The
+    manifest, read from the audit table, follows the audit table."""
     import os
 
     lk = ReactionLake(str(tmp_path / "lake"))
+    assert lk.manifest(spark) is None
     for name, (read, path, declared) in _lake_tables(lk).items():
         assert read(spark) is None, name
         os.makedirs(path)
         df = read(spark)
         assert df is not None and df.collect() == [], name
         assert _fields(df.schema) == _fields(declared), name
+    manifest = lk.manifest(spark)
+    assert manifest is not None and manifest.collect() == []
+    assert _fields(manifest.schema) == MANIFEST_FIELDS
     assert lk.materialize_enrichment(spark) == 0
     with pytest.raises(FileNotFoundError):
         ReactionLake(str(tmp_path / "absent")).fact_enriched(spark)
+
+
+def test_audit_is_the_processed_file_registry(spark, lake, incoming):
+    """run_once writes no manifest table: the terminal audit events are
+    the processed-file registry. A second run over the same files
+    processes none of them, and manifest() reads one row per processed
+    file with the registry's five columns."""
+    import os
+
+    root, _ = incoming
+    assert not os.path.exists(f"{lake.root}/manifest")
+    assert lake.run_once(spark, str(root), now=T0).files_processed == 0
+    manifest = lake.manifest(spark)
+    assert _fields(manifest.schema) == MANIFEST_FIELDS
+    per_file = manifest.groupBy("source_file").count().collect()
+    assert len(per_file) == 10 and {r["count"] for r in per_file} == {1}
 
 
 def test_materialize_enrichment_leaves_unfillable_day_untouched(spark, tmp_path):
@@ -261,7 +274,7 @@ def test_materialize_enrichment_leaves_unfillable_day_untouched(spark, tmp_path)
 def test_run_once_builds_no_python_list_frames(spark, tmp_path, monkeypatch):
     """Every driver-built frame on the ingest path is an Arrow local
     relation: with createDataFrame refusing Python lists, a dir-read
-    first run and a manifest-filtered second run (with a rejected file,
+    first run and a registry-filtered second run (with a rejected file,
     a malformed row and invalid metadata) both complete."""
     from pyspark.sql import SparkSession
 
@@ -333,14 +346,28 @@ def test_audit_running_success_pairs(spark, lake):
     assert latest.filter(F.col("status") == "running").count() == 0
 
 
-def test_run_once_per_file_outcomes(spark, tmp_path):
+@pytest.mark.parametrize(
+    "confs",
+    [
+        {},
+        {
+            "spark.sql.shuffle.partitions": "1",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "1",
+        },
+    ],
+    ids=["session_default", "one_partition_one_row_batches"],
+)
+def test_run_once_per_file_outcomes(spark, tmp_path, session_confs, confs):
     """Each processed file's terminal audit row (etl_type, simulation_id,
     status, error_message, records_inserted) and manifest row, over the
     incoming fixture plus an all-malformed CSV, a second metadata file
     for sim 1 in the same batch (listed last, earliest date_run) and, in
-    a second run, a metadata file for an already-loaded simulation."""
+    a second run, a metadata file for an already-loaded simulation. The
+    outcomes must not depend on how rows fall into shuffle partitions
+    or Arrow batches."""
+    session_confs(confs)
     root = tmp_path / "incoming"
-    paths = _write_incoming(root)
+    paths = write_incoming(root, N_ROWS)
     paths["all_malformed"] = write_reaction_csv(
         str(root / "2026-01-06"), 9, 1, malformed_row_at=0
     )
@@ -541,7 +568,7 @@ def test_dir_read_pipeline_ingests_odd_basename(spark, tmp_path_factory, monkeyp
     glob, audited as success/0 rows, and manifest-blacklisted forever.
     The odd file here has a valid header and rows, so its fact rows
     must land and its audit row must carry the true count; a second
-    run_once must find nothing new (manifest recorded it as processed,
+    run_once must find nothing new (the audit recorded it as processed,
     correctly this time)."""
     import os
     import shutil
@@ -573,4 +600,4 @@ def test_dir_read_pipeline_ingests_odd_basename(spark, tmp_path_factory, monkeyp
     assert odd_events == {("running", None), ("success", N_ROWS)}
 
     res2 = lk.run_once(spark, str(root), now=T0)
-    assert res2.files_processed == 0  # manifested once, correctly
+    assert res2.files_processed == 0  # registered once, correctly

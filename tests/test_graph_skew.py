@@ -119,7 +119,7 @@ def test_pagerank_hub_dominates(hub_edges):
     assert abs(sum(ranks.values()) - 1.0) < 1e-6
 
 
-def test_aqe_splits_hub_frontier_join(spark):
+def test_aqe_splits_hub_frontier_join(spark, session_confs):
     """The per-round frontier-vs-edges join is the skew point SCALING.md
     names. With the skew thresholds scaled to test-data sizes (the
     default 256 MB threshold plays this role at 100 TB), AQE must mark
@@ -143,29 +143,20 @@ def test_aqe_splits_hub_frontier_join(spark):
     )
     frontier = spark.range(0, n + 1, 1, 8).select(F.col("id").alias("node"))
 
-    keys = [
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-    ]
-    old = {k: spark.conf.get(k) for k in keys}
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-        j = frontier.join(sym, frontier.node == sym.s).select("d")
-        rows = j.count()
-        # collect() finalizes THIS DataFrame's adaptive plan (a noop
-        # write would execute a separate QueryExecution)
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    session_confs(
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1KB",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
+        }
+    )
+    j = frontier.join(sym, frontier.node == sym.s).select("d")
+    rows = j.count()
+    # collect() finalizes THIS DataFrame's adaptive plan (a noop
+    # write would execute a separate QueryExecution)
+    j.collect()
+    plan = j._jdf.queryExecution().executedPlan().toString()
     assert rows == 2 * (2 * n - 1)  # symmetrized edge count
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, plan[:2000]

@@ -274,7 +274,7 @@ def test_token_budget_packing_no_range_exchange(spark, sf_dir):
             assert "HashAggregate" in below, below
 
 
-def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
+def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir, session_confs):
     """Runtime bloom-filter join pruning: a selective dim-side filter
     injects a `might_contain` semi-filter on the FACT side before the
     shuffle — rows that cannot join are dropped at the scan, which at
@@ -285,32 +285,23 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
 
     from reactionetl_etl_spark.sources.tables import load_table
 
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
-        li = load_table(spark, sf_dir, "lineitem")
-        orders = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_totalprice") > 400_000
-        )
-        j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).agg(
-            F.count("*").alias("n")
-        )
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan
-        assert "bloom_filter_agg" in plan
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    session_confs(
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        }
+    )
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice") > 400_000
+    )
+    j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).agg(
+        F.count("*").alias("n")
+    )
+    j.collect()
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "might_contain" in plan
+    assert "bloom_filter_agg" in plan
 
 
 def test_mixture_resample_zero_corpus_shuffle(spark, sf_dir):

@@ -53,7 +53,7 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
     assert sorted(plain.collect()) == sorted(salted.collect())
 
 
-def test_aqe_splits_skewed_join_partition(spark, sf_dir):
+def test_aqe_splits_skewed_join_partition(spark, sf_dir, session_confs):
     """AQE's skew-join handling (session.py enables it) demonstrably
     fires on a 90%-hot-key sort-merge join: the FINAL adaptive plan
     marks the SMJ `skew=true`, meaning the hot key's oversized shuffle
@@ -68,47 +68,31 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
     thresholds produce on real partitions. The inputs have 8 range
     partitions whatever the core count: AQE splits a skewed partition
     only along map outputs, and one map task leaves nothing to split."""
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": spark.conf.get(
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
-        ),
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": spark.conf.get(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32k"
+    session_confs(
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+        }
+    )
+    fact = (
+        spark.range(0, 60_000, 1, 8)
+        .select(
+            F.when(F.col("id") % 10 < 9, F.lit(1))
+            .otherwise(F.col("id"))
+            .alias("k"),
+            F.concat(F.lit("x" * 64), F.col("id").cast("string")).alias("pad"),
         )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-        fact = (
-            spark.range(0, 60_000, 1, 8)
-            .select(
-                F.when(F.col("id") % 10 < 9, F.lit(1))
-                .otherwise(F.col("id"))
-                .alias("k"),
-                F.concat(F.lit("x" * 64), F.col("id").cast("string")).alias("pad"),
-            )
-        )
-        dim = spark.range(0, 100, 1, 8).select(F.col("id").alias("k"), F.lit("d").alias("dv"))
-        res = fact.join(dim, "k").agg(F.count("*").alias("n"), F.sum(F.length("pad")).alias("b"))
-        [row] = res.collect()
-        # hot key 1 → 54 000 fact rows × 1 dim row; tail keys k=id
-        # (id%10==9) match dim only for id<100: ids 9,19,…,99 → 10 rows
-        assert row["n"] == 54_010
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, f"AQE skew split did not fire:\n{plan[:2000]}"
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    )
+    dim = spark.range(0, 100, 1, 8).select(F.col("id").alias("k"), F.lit("d").alias("dv"))
+    res = fact.join(dim, "k").agg(F.count("*").alias("n"), F.sum(F.length("pad")).alias("b"))
+    [row] = res.collect()
+    # hot key 1 → 54 000 fact rows × 1 dim row; tail keys k=id
+    # (id%10==9) match dim only for id<100: ids 9,19,…,99 → 10 rows
+    assert row["n"] == 54_010
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "skew=true" in plan, f"AQE skew split did not fire:\n{plan[:2000]}"
 
 
 def test_zscore_pandas_equals_window(spark, sf_dir):

@@ -103,7 +103,7 @@ def test_jdbc_sink_rejects_missing_columns(spark):
         write_dim_jdbc(df, "jdbc:postgresql://wh:5432/lake")
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
+def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory, session_confs):
     """Identically-bucketed tables sort-merge join with zero shuffles."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
@@ -111,9 +111,9 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
     write_bucketed(
         li.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", "o_orderkey", 4
     )
+    # force SMJ so the assertion is about bucketing, not broadcast
+    session_confs({"spark.sql.autoBroadcastJoinThreshold": "-1"})
     try:
-        # force SMJ so the assertion is about bucketing, not broadcast
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
@@ -124,7 +124,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
         ).count()
         assert joined.count() == expected
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
@@ -575,7 +574,7 @@ def test_local_frame_is_a_jobless_local_relation(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
-def test_local_frame_nulls_empty_and_arrow_off(spark):
+def test_local_frame_nulls_empty_and_arrow_off(spark, session_confs):
     """NULLs and an empty row list keep the declared schema, and the rows
     are identical with spark.sql.execution.arrow.pyspark.enabled off. A
     timestamp_ntz field stays timestamp_ntz: its wall-clock value does
@@ -589,29 +588,22 @@ def test_local_frame_nulls_empty_and_arrow_off(spark):
     rows = [("a", 1, 0.5), (None, None, None), ("c", -(2**40), float("inf"))]
     want = [f.simpleString() for f in spark.createDataFrame([], ddl).schema]
     noon = [(datetime(2026, 1, 10, 12),)]
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    tz_key = "spark.sql.session.timeZone"
-    prior, prior_tz = spark.conf.get(key), spark.conf.get(tz_key)
     seen = {}
-    try:
-        spark.conf.set(tz_key, "Pacific/Kiritimati")
-        for arrow in ("true", "false"):
-            spark.conf.set(key, arrow)
-            df = local_frame(spark, rows, ddl)
-            empty = local_frame(spark, [], ddl)
-            assert _plan_root(df) == _plan_root(empty) == "LocalRelation"
-            assert [f.simpleString() for f in df.schema] == want
-            assert [f.simpleString() for f in empty.schema] == want
-            assert empty.collect() == []
-            seen[arrow] = [tuple(r) for r in df.collect()]
-            ts = local_frame(spark, noon, "t timestamp_ntz")
-            assert ts.schema.simpleString() == "struct<t:timestamp_ntz>"
-            assert [tuple(r) for r in ts.collect()] == noon
-        q = local_frame(spark, [(None, "why", "/in/f.csv", "2026-01-05")], LAKE_QUARANTINE_SCHEMA)
-        assert q.schema.simpleString() == LAKE_QUARANTINE_SCHEMA.simpleString()
-    finally:
-        spark.conf.set(key, prior)
-        spark.conf.set(tz_key, prior_tz)
+    session_confs({"spark.sql.session.timeZone": "Pacific/Kiritimati"})
+    for arrow in ("true", "false"):
+        session_confs({"spark.sql.execution.arrow.pyspark.enabled": arrow})
+        df = local_frame(spark, rows, ddl)
+        empty = local_frame(spark, [], ddl)
+        assert _plan_root(df) == _plan_root(empty) == "LocalRelation"
+        assert [f.simpleString() for f in df.schema] == want
+        assert [f.simpleString() for f in empty.schema] == want
+        assert empty.collect() == []
+        seen[arrow] = [tuple(r) for r in df.collect()]
+        ts = local_frame(spark, noon, "t timestamp_ntz")
+        assert ts.schema.simpleString() == "struct<t:timestamp_ntz>"
+        assert [tuple(r) for r in ts.collect()] == noon
+    q = local_frame(spark, [(None, "why", "/in/f.csv", "2026-01-05")], LAKE_QUARANTINE_SCHEMA)
+    assert q.schema.simpleString() == LAKE_QUARANTINE_SCHEMA.simpleString()
     assert seen["true"] == seen["false"] == rows
 
 
