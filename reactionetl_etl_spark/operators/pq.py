@@ -156,6 +156,8 @@ def pq_cosine_topk(
     shortlist only) — the two-stage layout; ``refine=None`` returns raw
     ADC ranking with ``approx_cosine`` = 1 - d²/2.
     Output: (query_id, vec_id, cosine_sim|approx_cosine, rank ≤ k).
+    The query batch is collected to build the ADC tables; one of more
+    than `similarity.MAX_QUERY_ROWS` rows is refused before the collect.
 
     NULL handling (engine convention): a NULL query vector retrieves
     nothing (excluded before the ADC table build, which it would
@@ -164,12 +166,16 @@ def pq_cosine_topk(
     import numpy as np
 
     from reactionetl_etl_spark.functions.vectors import non_null_vectors
+    from reactionetl_etl_spark.operators.similarity import _bounded_query_rows
 
     books = [np.array(b, dtype=np.float64) for b in codebook]
     m = len(books)
     sub = books[0].shape[1]
     codes = non_null_vectors(codes, code_col)
-    q_rows = non_null_vectors(queries, vec_col).select(query_id_col, vec_col).collect()
+    q_rows = _bounded_query_rows(
+        non_null_vectors(queries, vec_col).select(query_id_col, vec_col),
+        "pq_cosine_topk",
+    )
     if not q_rows:
         sim_col = "cosine_sim" if refine is not None else "approx_cosine"
         return queries.sparkSession.createDataFrame(

@@ -10,8 +10,11 @@ Two paths:
   At 100 TB the bucketed table is the reusable index: build cost is one
   scan, each query touches ~1/2^bits of the data.
 
-All vector math is Catalyst higher-order functions
-(`functions/vectors.py`) — JVM-side, codegen'd, no Python UDF.
+The single-query and approximate paths score with Catalyst
+higher-order functions (`functions/vectors.py`) — JVM-side, no Python.
+The exact batch path (`cosine_topk_batch`) scores in one Arrow
+`mapInPandas` stage with numpy matmuls, and the guarded exact
+all-pairs paths run driver BLAS over a bounded collect.
 """
 
 from __future__ import annotations
@@ -25,6 +28,12 @@ from reactionetl_etl_spark.functions.vectors import (
     dot,
     lit_double_array,
 )
+
+# Row bound of a query batch collected to ride a task closure
+# (`cosine_topk_batch`, `pq.pq_cosine_topk`): the bounded probe
+# `limit(MAX_QUERY_ROWS + 1).collect()` refuses a larger batch before it
+# reaches the driver.
+MAX_QUERY_ROWS = 100_000
 
 # Hard ceiling for the driver-collect exact paths. A row bound alone
 # under-guards wide embeddings: 100k rows × 1024-dim float64 ≈ 800 MB
@@ -380,9 +389,9 @@ def _score_and_topk(
     vec_col: str,
     exclude_self: bool,
 ) -> DataFrame:
-    """Shared tail of every batch/probe ANN path: score candidate
-    (corpus row × __qid/__q) pairs with exact cosine and keep each
-    query's top-k by rounded similarity, ties by ascending id. The
+    """Shared tail of the LSH, IVF and index-probe ANN paths: score
+    candidate (corpus row × __qid/__q) pairs with exact cosine and keep
+    each query's top-k by rounded similarity, ties by ascending id. The
     rank filter plans as WindowGroupLimit — each map task emits only
     its local top-k per query before the exchange."""
     from pyspark.sql import Window
@@ -413,70 +422,53 @@ def cosine_topk_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str | None = None,
-    broadcast_queries: bool = True,
     exclude_self: bool = True,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbours for EVERY row of ``queries`` in one job.
 
     The single-query entry points (`cosine_topk` etc.) re-scan the
     corpus per call; a real similarity-search job scores a whole batch
-    of query vectors per pass. This is that pass: one corpus scan,
-    queries joined in (broadcast when they fit — the common case — so
-    the corpus side never shuffles for the join), then a per-query
-    top-k via `row_number()` over `Window.partitionBy(query_id)`.
-    Spark plans the rank filter as WindowGroupLimit: each map task
-    keeps only its local top-k per query BEFORE the exchange, so the
-    shuffle carries ≤ k·|queries| rows per task, not |corpus|·|queries|.
+    of query vectors per pass. This is that pass: the query batch
+    (at most ``MAX_QUERY_ROWS`` rows) is collected once and rides the
+    task closure of one Arrow scorer stage over the corpus
+    (`_exact_topk_arrow`), so the corpus never shuffles for a join.
+    Each Arrow batch keeps only its local top-k per query, and a
+    `row_number()` over `Window.partitionBy(query_id)` — planned as
+    WindowGroupLimit — finishes the rank over those survivors.
 
     Output: (query_id, id_col, cosine_sim), k rows per query, ties
-    broken by ascending id. ``exclude_self`` drops corpus rows whose id
-    equals the query id (the single-query semantics).
+    broken by ascending id; both id columns keep the caller's types.
+    ``exclude_self`` drops corpus rows whose id equals the query id
+    (the single-query semantics). A NULL id or a NULL vector, on
+    either side, takes no part: such a query retrieves nothing and
+    such a corpus row is never a candidate.
     """
     from reactionetl_etl_spark.functions.vectors import non_null_vectors
 
     qv = query_vec_col or vec_col
-    # a NULL query vector retrieves nothing (it would crash the Arrow
-    # scorer's matrix build and emit k all-NULL-sim rows on the HOF
-    # plan); a NULL corpus vector is never a candidate
+    # a NULL vector would crash the scorer's matrix build, and a NULL id
+    # turns Arrow's integer id column into float64 (NaN, rounding above
+    # 2^53) — both take no part, on either side
     q = non_null_vectors(
         queries.select(
             F.col(query_id_col).alias("__qid"), as_double_array(qv).alias("__q")
         ),
         "__q",
-    )
-    corpus = non_null_vectors(corpus, vec_col)
-    if use_arrow and _ids_integral(queries, query_id_col, corpus, id_col):
-        # The Arrow scorer emits a long-typed id schema; for string /
-        # UUID / decimal ids fall through to the HOF plan below. For
-        # narrower integral ids (int/short/byte) the values fit long
-        # losslessly — cast the outputs back so the result schema is
-        # identical to the HOF path's regardless of use_arrow.
-        out = _exact_topk_arrow(
-            corpus, q, k, query_id_col, id_col, vec_col, exclude_self
+    ).filter(F.col("__qid").isNotNull())
+    corpus = non_null_vectors(corpus, vec_col).filter(F.col(id_col).isNotNull())
+    return _exact_topk_arrow(corpus, q, k, query_id_col, id_col, vec_col, exclude_self)
+
+
+def _bounded_query_rows(q: DataFrame, what: str) -> list:
+    """Collect a query batch that rides a task closure, refusing one of
+    more than ``MAX_QUERY_ROWS`` rows before it reaches the driver."""
+    rows = q.limit(MAX_QUERY_ROWS + 1).collect()
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"{what}: query batch exceeds MAX_QUERY_ROWS={MAX_QUERY_ROWS}; "
+            "bound the batch or use the LSH/IVF paths at this scale"
         )
-        return out.select(
-            F.col(query_id_col).cast(queries.schema[query_id_col].dataType),
-            F.col(id_col).cast(corpus.schema[id_col].dataType),
-            F.col("cosine_sim"),
-        )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    pairs = corpus.crossJoin(q)
-    return _score_and_topk(pairs, k, query_id_col, id_col, vec_col, exclude_self)
-
-
-def _ids_integral(
-    queries: DataFrame, query_id_col: str, corpus: DataFrame, id_col: str
-) -> bool:
-    """True iff both id columns are integral — the only types the Arrow
-    scorer's hardcoded `long` output schema can represent losslessly."""
-    from pyspark.sql import types as T
-
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    return isinstance(queries.schema[query_id_col].dataType, integral) and isinstance(
-        corpus.schema[id_col].dataType, integral
-    )
+    return rows
 
 
 def _exact_topk_arrow(
@@ -489,32 +481,38 @@ def _exact_topk_arrow(
     exclude_self: bool,
 ) -> DataFrame:
     """Arrow scorer for the exact batch path: the query matrix rides in
-    the task closure (query batches are bounded by contract — the same
-    assumption the broadcast join made), each corpus Arrow batch scores
-    against ALL queries as ONE numpy matmul and emits only its LOCAL
-    top-k per query, then the usual WindowGroupLimit rank finishes over
-    the k·|queries|·|batches| survivors. Versus the interpreted HOF
-    fold this measured ~7x on the LOO k-NN shape (PERF_NOTES r9).
-    Rounding before the rank is the same 6-dp half-away-from-zero key
-    the HOF path used (`F.round` semantics), so results are
-    rank-identical except at sub-ulp cosine ties — which the id
-    tie-break then settles identically."""
+    the task closure, each corpus Arrow batch scores against ALL queries
+    as ONE numpy matmul and emits only its LOCAL top-k per query, then
+    a WindowGroupLimit rank finishes over the k·|queries|·|batches|
+    survivors. Versus the interpreted HOF fold (`_score_and_topk` over
+    a crossJoin) this measured ~7x on the LOO k-NN shape (PERF_NOTES
+    r9). Rounding before the rank is the same 6-dp half-away-from-zero
+    key `F.round` gives, so results are rank-identical except at
+    sub-ulp cosine ties — which the id tie-break then settles
+    identically.
+
+    Ids pass through as the values Arrow hands over (numpy ints, or
+    objects for strings, decimals and dates); `np.lexsort` orders those
+    the way Spark orders the column. Both inputs hold no NULL id and no
+    NULL vector (`cosine_topk_batch` filters them)."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import Window
+    from pyspark.sql import types as T
 
-    q_rows = q.collect()
-    if len(q_rows) > 100_000:
-        raise ValueError(
-            f"query batch of {len(q_rows)} rows — bound the batch or use the "
-            "LSH/IVF paths at this scale"
-        )
+    q_rows = _bounded_query_rows(q, "cosine_topk_batch")
     spark = corpus.sparkSession
-    out_schema = f"{query_id_col} long, {id_col} long, cosine_sim double"
+    out_schema = T.StructType(
+        [
+            T.StructField(query_id_col, q.schema["__qid"].dataType),
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            T.StructField("cosine_sim", T.DoubleType()),
+        ]
+    )
     if not q_rows:
         return spark.createDataFrame([], out_schema)
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    qids = [r[0] for r in q_rows]
     qmat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     qnorm = np.linalg.norm(qmat, axis=1)
 
@@ -531,31 +529,22 @@ def _exact_topk_arrow(
                 / 1e6
             )
             out = {query_id_col: [], id_col: [], "cosine_sim": []}
-            for j in range(len(qids)):
+            for j, qid in enumerate(qids):
                 col = c6[:, j]
                 if exclude_self:
-                    col = np.where(ids == qids[j], -np.inf, col)
+                    col = np.where(ids == qid, -np.inf, col)
                 # local top-k by (cosine desc, id asc) — lexsort keys
                 # are applied last-key-primary
-                order = np.lexsort((ids, -col))[: min(k, len(ids))]
-                for i in order:
-                    if col[i] == -np.inf:
-                        continue
-                    out[query_id_col].append(int(qids[j]))
-                    out[id_col].append(int(ids[i]))
-                    out["cosine_sim"].append(float(col[i]))
+                order = np.lexsort((ids, -col))[:k]
+                order = order[col[order] != -np.inf]
+                out[query_id_col].extend([qid] * len(order))
+                out[id_col].extend(ids[order])
+                out["cosine_sim"].extend(col[order])
             yield pd.DataFrame(out)
 
-    from reactionetl_etl_spark.functions.vectors import non_null_vectors
-
-    local = (
-        non_null_vectors(corpus, vec_col)  # a NULL vector scores nothing
-        .select(
-            F.col(id_col).cast("long").alias("__id"),
-            as_double_array(vec_col).alias("__v"),
-        )
-        .mapInPandas(score, out_schema)
-    )
+    local = corpus.select(
+        F.col(id_col).alias("__id"), as_double_array(vec_col).alias("__v")
+    ).mapInPandas(score, out_schema)
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine_sim").desc(), F.col(id_col).asc()
     )
@@ -576,18 +565,18 @@ def lsh_cosine_topk_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str | None = None,
-    broadcast_queries: bool = True,
     exclude_self: bool = True,
     multi_probe: bool = True,
     probe_radius: int = 1,
 ) -> DataFrame:
     """Approximate batch top-k: candidates restricted to each query's
     LSH bucket(s), so the corpus×queries cross product becomes an
-    equi-join on the bucket id. With a non-broadcast query side this is
-    a shuffle keyed on 2^bits bucket values on BOTH sides — the shape
-    that survives millions of queries; with broadcast queries the
-    corpus never shuffles for the join at all. Per-query top-k as in
-    `cosine_topk_batch` (WindowGroupLimit partial before the exchange).
+    equi-join on the bucket id. The exploded query side is broadcast,
+    so the corpus never shuffles for the join; an unbounded query set
+    belongs on a persisted index probed with ``broadcast_queries=False``
+    (`probe_ivf_index`, `pq.probe_ivfpq_index`, `pq.probe_pq_index`).
+    Per-query top-k by `_score_and_topk` (WindowGroupLimit partial
+    before the exchange).
 
     ``multi_probe`` (default) expands each query to its bits+1
     Hamming-≤1 buckets (`_probe_buckets`) — candidate volume scales by
@@ -609,10 +598,8 @@ def lsh_cosine_topk_batch(
             F.explode(_probe_buckets(F.col("__qb0"), bits, multi_probe, probe_radius)).alias("__qb"),
         )
     )
-    if broadcast_queries:
-        bq = F.broadcast(bq)
     bc = with_lsh_bucket(corpus, dim, bits, vec_col, out_col="__cb")
-    pairs = bc.join(bq, on=F.col("__cb") == F.col("__qb"), how="inner")
+    pairs = bc.join(F.broadcast(bq), on=F.col("__cb") == F.col("__qb"), how="inner")
     return _score_and_topk(pairs, k, query_id_col, id_col, vec_col, exclude_self)
 
 
@@ -629,7 +616,6 @@ def ivf_cosine_topk_batch(
     query_vec_col: str | None = None,
     centroids: list[list[float]] | None = None,
     train: bool = True,
-    broadcast_queries: bool = True,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate batch top-k over the IVF index: each query explodes
@@ -637,12 +623,14 @@ def ivf_cosine_topk_batch(
     equi-join of (query, probe_cell) against the celled corpus, and
     the per-query top-k window ranks exact cosine within candidates.
 
-    At 100 TB the celled corpus is the persisted inverted index
-    (partitioned by cell); the exploded query side is |queries|·n_probe
-    rows — still tiny relative to the corpus — and the join is keyed
-    on n_cells values, never a cartesian. Queries near cell boundaries
-    are exactly why multi-probe exists; recall scales with n_probe at
-    n_probe/n_cells of the scan cost.
+    The exploded query side is |queries|·n_probe rows — tiny relative
+    to the corpus — and is broadcast; the join is keyed on n_cells
+    values, never a cartesian. At 100 TB the celled corpus is the
+    persisted inverted index (`write_ivf_index`), and an unbounded
+    query set probes it with ``broadcast_queries=False``
+    (`probe_ivf_index`, `pq.probe_ivfpq_index`). Queries near cell
+    boundaries are exactly why multi-probe exists; recall scales with
+    n_probe at n_probe/n_cells of the scan cost.
     """
     if centroids is None and train:
         centroids = train_ivf_centroids(corpus, n_cells, vec_col)
@@ -670,9 +658,9 @@ def ivf_cosine_topk_batch(
         )
         .select("__qid", "__q", F.explode(probe_cells).alias("__probe_cell"))
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    pairs = celled.join(q, on=F.col("ivf_cell") == F.col("__probe_cell"), how="inner")
+    pairs = celled.join(
+        F.broadcast(q), on=F.col("ivf_cell") == F.col("__probe_cell"), how="inner"
+    )
     return _score_and_topk(pairs, k, query_id_col, id_col, vec_col, exclude_self)
 
 

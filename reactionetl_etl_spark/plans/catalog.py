@@ -3299,8 +3299,9 @@ def _batch_queries(emb: DataFrame, n: int = 8) -> DataFrame:
 )
 def cosine_topk_batch_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact BATCH ANN: top-5 neighbours for each of 8 query vectors in
-    one pass — one corpus scan, broadcast query batch, per-query top-k
-    via WindowGroupLimit (map-side partial top-k before the exchange).
+    one pass — one corpus scan through the Arrow scorer, the query batch
+    in its closure, per-query top-k via WindowGroupLimit (map-side
+    partial top-k before the exchange).
     The single-query entry points re-scan the corpus per call; this is
     the shape a 100 TB similarity-search job actually runs."""
     emb = _t(spark, sf_dir, "embeddings")

@@ -122,8 +122,8 @@ class IncomingReactionsDataSource(DataSource):
 # Streaming twin: the same relation as an incremental micro-batch
 # source (SimpleDataSourceStreamReader — driver-side reads, the simple
 # variant of the streaming API; right for low-volume control-plane
-# feeds, while high-volume streams use the partitioned DataSourceStreamReader
-# or the engine's checkpointed file source in streaming/incremental.py).
+# feeds, while high-volume streams use the partitioned DataSourceStreamReader;
+# batch ingest of the same files is `etl.pipeline.ReactionLake.run_once`).
 # ---------------------------------------------------------------------------
 
 

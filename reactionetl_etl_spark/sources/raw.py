@@ -55,7 +55,19 @@ def list_raw_files(root: str, suffix: str) -> list[RawFile]:
     Paths are absolutized so they compare equal to the scheme-stripped
     `input_file_name()` values used for per-file audit counts — a
     relative ``root`` would otherwise audit every file as 0 rows.
+
+    The listing and the header probe read the local filesystem: a
+    ``file:`` root is taken as its plain path, and any other URI scheme
+    (``hdfs://``, ``s3a://``...) raises instead of listing nothing.
     """
+    scheme = re.match(URI_SCHEME_RE, root)
+    if scheme:
+        if not scheme.group(0).lower().startswith("file:"):
+            raise ValueError(
+                f"incoming root {root!r}: only local-filesystem roots (a plain "
+                "path or file:) can be listed"
+            )
+        root = strip_uri_scheme(root)
     out: list[RawFile] = []
     root = os.path.abspath(root)
     if not os.path.isdir(root):

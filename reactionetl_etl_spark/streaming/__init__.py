@@ -1,10 +1,11 @@
 """Structured Streaming surface.
 
-The reference's incrementality is "re-run the batch over whatever new
-files appeared", tracked by directory moves
-(/root/reference/file_manager.py:8-11, README.md:15). Structured
-Streaming file sources subsume that exactly: checkpointed file
-discovery (exactly-once per file), `Trigger.AvailableNow` for the
-run-to-completion batch shape, plus real event-time operators
-(watermarks, tumbling/session windows) the reference never had.
+Ingest is not here: `etl.pipeline.ReactionLake.run_once` is the one
+ingest path, and its audit log is the processed-file registry (a rerun
+processes nothing). This package holds the event-time operators the
+reference never had (`windows`, `joins`: watermarks, tumbling/session
+windows, watermark-bounded interval joins), the foreachBatch sinks
+(`sinks.start_sink` with its batch writers, `packing`) and a progress
+listener that lands micro-batch progress next to the batch audit log
+(`monitor`).
 """

@@ -227,6 +227,34 @@ def test_audit_is_the_processed_file_registry(spark, lake, incoming):
     assert len(per_file) == 10 and {r["count"] for r in per_file} == {1}
 
 
+def test_run_once_file_uri_root_matches_plain_path(spark, tmp_path):
+    """An incoming root given as a file:// URI ingests the same files,
+    with the same terminal audit rows, as the plain path; a root on any
+    other scheme raises instead of listing nothing."""
+    root = tmp_path / "incoming"
+    write_incoming(root, N_ROWS)
+
+    def terminal(root_arg, name):
+        lk = ReactionLake(str(tmp_path / name))
+        lk.run_once(spark, root_arg, now=T0)
+        return sorted(
+            (
+                row["source_file"], row["etl_type"], row["simulation_id"],
+                row["status"], row["error_message"], row["records_inserted"],
+            )
+            for row in lk.audit(spark).collect()
+            if row["status"] != "running"
+        )
+
+    plain = terminal(str(root), "plain_lake")
+    assert len(plain) == 10
+    assert terminal(root.as_uri(), "uri_lake") == plain
+    with pytest.raises(ValueError, match="local-filesystem"):
+        ReactionLake(str(tmp_path / "hdfs_lake")).run_once(
+            spark, "hdfs://namenode/incoming", now=T0
+        )
+
+
 def test_materialize_enrichment_leaves_unfillable_day_untouched(spark, tmp_path):
     """Facts whose metadata never arrives stay NULL, and
     materialize_enrichment does not rewrite their day partition: the

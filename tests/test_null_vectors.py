@@ -252,10 +252,48 @@ def test_batch_topk_null_query_retrieves_nothing(spark):
         id_col="query_id",
         null_ids=(500,),
     )
-    for use_arrow in (True, False):
-        out = cosine_topk_batch(q, clean, k=3, use_arrow=use_arrow)
-        assert out.filter(F.col("query_id") == 500).count() == 0
-        assert out.filter(F.col("query_id") != 500).count() == 6
+    out = cosine_topk_batch(q, clean, k=3)
+    assert out.filter(F.col("query_id") == 500).count() == 0
+    assert out.filter(F.col("query_id") != 500).count() == 6
+
+
+def test_batch_topk_null_ids_take_no_part(spark):
+    """A corpus row with a NULL id is never a candidate, and a query
+    with a NULL id retrieves nothing — with real vectors on both, and
+    ids above 2^53, which a NULL-widened float64 id column would round
+    (so self-exclusion would mask real neighbours)."""
+    from reactionetl_etl_spark.functions.vectors import as_double_array
+    from reactionetl_etl_spark.operators.similarity import (
+        _score_and_topk,
+        cosine_topk_batch,
+    )
+
+    base = 2**60 + 1
+    corpus = (
+        _clean(spark, n=20)
+        .withColumn(
+            "vec_id",
+            F.when(~F.col("vec_id").isin(5, 7, 12), F.col("vec_id") + F.lit(base)),
+        )
+        .coalesce(1)
+    )
+    queries = corpus.filter(
+        F.col("vec_id").isin(base, base + 1, base + 2) | F.col("vec_id").isNull()
+    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    got = cosine_topk_batch(queries, corpus, k=3)
+
+    q = queries.where(F.col("query_id").isNotNull()).select(
+        F.col("query_id").alias("__qid"), as_double_array("embedding").alias("__q")
+    )
+    want = _score_and_topk(
+        corpus.where(F.col("vec_id").isNotNull()).crossJoin(F.broadcast(q)),
+        3, "query_id", "vec_id", "embedding", exclude_self=True,
+    )
+    assert _rows(got) == _rows(want)
+    rows = got.collect()
+    assert len(rows) == 3 * 3
+    assert {r["query_id"] for r in rows} == {base, base + 1, base + 2}
+    assert all(r["vec_id"] is not None and r["vec_id"] != r["query_id"] for r in rows)
 
 
 def test_mnn_and_neardup_lsh_paths_parity(spark):

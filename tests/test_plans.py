@@ -139,28 +139,15 @@ def test_batch_ann_windowgrouplimit_and_broadcast(spark, sf_dir):
     """cosine_topk_batch: the Arrow exact path must (a) score inside a
     distributed Python map stage (the query matrix rides the closure —
     the corpus NEVER shuffles for a join) and (b) finish the per-query
-    rank as WindowGroupLimit over the local-top-k survivors. The
-    legacy HOF path keeps its broadcast-join + WindowGroupLimit shape
-    (the r9 A/B equality test pins the two paths' rows equal)."""
+    rank as WindowGroupLimit over the local-top-k survivors. The Arrow
+    scorer is the only formulation; its rows are pinned equal to the
+    HOF reference (`_score_and_topk` over a broadcast crossJoin) by
+    `test_properties.py::test_arrow_exact_topk_equals_hof_path`."""
     plan = plan_of(spark, sf_dir, "cosine_topk_batch_exact")
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
     assert "Exchange hashpartitioning(__id" not in plan  # corpus unshuffled
-
-    from pyspark.sql import functions as F
-
-    from reactionetl_etl_spark.operators.similarity import cosine_topk_batch
-    from reactionetl_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    hof = cosine_topk_batch(qs, emb, k=5, use_arrow=False)
-    hplan = hof._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in hplan or "BroadcastHashJoin" in hplan
-    assert "WindowGroupLimit" in hplan
 
 
 def test_dense_sequence_is_distributed(spark, sf_dir):

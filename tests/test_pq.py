@@ -482,3 +482,24 @@ def test_pq_probes_max_query_rows_refusal_and_escape_hatch(spark, tmp_path):
     pdf = out.toPandas()
     assert set(pdf["query_id"]) == set(range(120))
     assert (pdf.groupby("query_id").size() == 3).all()
+
+
+def test_pq_cosine_topk_refuses_query_batch_over_bound(spark, monkeypatch):
+    """pq_cosine_topk collects its query batch to build the ADC tables;
+    a batch above `similarity.MAX_QUERY_ROWS` is refused by the bounded
+    probe, while a batch at the bound still runs."""
+    import pytest
+
+    from reactionetl_etl_spark.operators import similarity
+
+    df, rows = _fixture(spark, n=40, dim=32)
+    book = train_pq_codebook(df, dim=32, m=8, k=16)
+    coded = pq_encode(df, book)
+    qs = df.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    monkeypatch.setattr(similarity, "MAX_QUERY_ROWS", 2)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS=2"):
+        pq_cosine_topk(qs, coded, book, k=3)
+    at_bound = pq_cosine_topk(qs.filter(F.col("query_id") < 2), coded, book, k=3)
+    assert at_bound.count() == 2 * 3

@@ -10,6 +10,7 @@ Each property pins a semantic contract with randomized inputs:
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -799,58 +800,97 @@ def test_exact_ann_paths_tolerate_null_vectors(spark):
     )
 
 
-def test_cosine_topk_batch_preserves_nonintegral_ids(spark):
-    """use_arrow=True (the default) must not retype or crash on string
-    ids: the Arrow scorer only handles integral ids, so the batch entry
-    point falls back to the HOF plan and the output id columns keep the
-    caller's types — parity with use_arrow=False."""
-    from pyspark.sql import functions as F
+# The id types cosine_topk_batch must pass through unchanged, each
+# derived from a non-negative bigint id column, with its dtype: bigint
+# above 2^60 is not exact as float64.
+_ID_TYPES = {
+    "bigint": (lambda c: c, "bigint"),
+    "int": (lambda c: c.cast("int"), "int"),
+    "bigint_above_2_60": (lambda c: c + F.lit(2**60), "bigint"),
+    "string": (lambda c: F.concat(F.lit("doc-"), c), "string"),
+    "decimal": (lambda c: (c / 4).cast("decimal(10,2)"), "decimal(10,2)"),
+    "date": (
+        lambda c: F.date_add(F.lit("2000-01-01").cast("date"), c.cast("int")),
+        "date",
+    ),
+}
+_BATCH_SIZES = pytest.mark.parametrize("batch_rows", ["1", "10000"])
+_ID_TYPE_PARAM = pytest.mark.parametrize("id_type", sorted(_ID_TYPES))
 
+
+def _exact_topk_reference(queries, corpus, k):
+    """cosine_topk_batch's rows by the HOF plan: `_score_and_topk` over
+    a broadcast crossJoin, self-exclusion included."""
+    from reactionetl_etl_spark.functions.vectors import as_double_array
+    from reactionetl_etl_spark.operators.similarity import _score_and_topk
+
+    q = queries.select(
+        F.col("query_id").alias("__qid"), as_double_array("embedding").alias("__q")
+    )
+    return _score_and_topk(
+        corpus.crossJoin(F.broadcast(q)), k, "query_id", "vec_id", "embedding",
+        exclude_self=True,
+    )
+
+
+def _assert_matches_reference(queries, corpus, k, id_type):
     from reactionetl_etl_spark.operators.similarity import cosine_topk_batch
 
-    corpus = spark.range(20).select(
-        F.concat(F.lit("doc-"), F.col("id")).alias("vec_id"),
-        F.array(
-            F.sin(F.col("id") * 1.0), F.cos(F.col("id") * 2.0), F.lit(0.5)
-        ).alias("embedding"),
-    )
-    queries = corpus.filter(F.col("vec_id").isin("doc-3", "doc-11")).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    arrow_default = cosine_topk_batch(queries, corpus, k=3)
-    hof = cosine_topk_batch(queries, corpus, k=3, use_arrow=False)
-    assert arrow_default.schema == hof.schema
-    assert dict(arrow_default.dtypes)["vec_id"] == "string"
-    assert sorted(map(tuple, arrow_default.collect())) == sorted(
-        map(tuple, hof.collect())
-    )
-    # integral ids still take the Arrow scorer and agree with the HOF plan
-    icorpus = spark.range(20).select(
+    got = cosine_topk_batch(queries, corpus, k=k)
+    want = _exact_topk_reference(queries, corpus, k)
+    assert got.dtypes == want.dtypes
+    assert dict(got.dtypes)["query_id"] == _ID_TYPES[id_type][1]
+    assert dict(got.dtypes)["vec_id"] == _ID_TYPES[id_type][1]
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, want.collect()))
+    return rows
+
+
+def test_cosine_topk_batch_refuses_query_batch_over_bound(spark, monkeypatch):
+    """The exact batch path collects its queries into the scorer's
+    closure; a batch above MAX_QUERY_ROWS is refused by the bounded
+    probe, while a batch at the bound still runs."""
+    from reactionetl_etl_spark.operators import similarity
+
+    corpus = spark.range(10).select(
         F.col("id").alias("vec_id"),
-        F.array(
-            F.sin(F.col("id") * 1.0), F.cos(F.col("id") * 2.0), F.lit(0.5)
-        ).alias("embedding"),
+        F.array(F.sin(F.col("id") * 1.0), F.lit(0.5)).alias("embedding"),
     )
-    iqueries = icorpus.filter(F.col("vec_id").isin(3, 11)).select(
+    queries = corpus.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    ia = sorted(map(tuple, cosine_topk_batch(iqueries, icorpus, k=3).collect()))
-    ih = sorted(
-        map(tuple, cosine_topk_batch(iqueries, icorpus, k=3, use_arrow=False).collect())
+    monkeypatch.setattr(similarity, "MAX_QUERY_ROWS", 2)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS=2"):
+        similarity.cosine_topk_batch(queries, corpus, k=2)
+    at_bound = queries.filter(F.col("query_id") < 2)
+    assert similarity.cosine_topk_batch(at_bound, corpus, k=2).count() == 2 * 2
+
+
+@_ID_TYPE_PARAM
+@_BATCH_SIZES
+def test_cosine_topk_batch_preserves_nonintegral_ids(
+    spark, session_confs, id_type, batch_rows
+):
+    """cosine_topk_batch keeps the caller's id types and returns the HOF
+    reference's rows for every id type and Arrow batch size. Vectors
+    repeat every 3 ids, so each query has about 13 neighbours at
+    cosine 1, more than k in one partition, and each partition holds
+    its rows in descending id order: the id tie-break alone decides
+    each batch's local cut and the final top-k."""
+    session_confs({"spark.sql.execution.arrow.maxRecordsPerBatch": batch_rows})
+    to_id = _ID_TYPES[id_type][0]
+    base = spark.range(40).repartition(3).sortWithinPartitions(F.desc("id")).select(
+        "id",
+        F.array(
+            F.sin(F.col("id") % 3 * 1.0), F.cos(F.col("id") % 3 * 2.0), F.lit(0.5)
+        ).alias("embedding"),
     )
-    assert ia == ih
-    # narrower integral ids (int32): Arrow path must return the SAME
-    # schema as the HOF path, not silently widen to bigint
-    ncorpus = icorpus.withColumn("vec_id", F.col("vec_id").cast("int"))
-    nqueries = iqueries.withColumn("query_id", F.col("query_id").cast("int"))
-    na = cosine_topk_batch(nqueries, ncorpus, k=3)
-    nh = cosine_topk_batch(nqueries, ncorpus, k=3, use_arrow=False)
-    # dtypes (not full schema): nullability is plan-derived metadata
-    # and the cast-back marks columns nullable where the HOF plan can
-    # prove non-null — types are the contract
-    assert na.dtypes == nh.dtypes
-    assert dict(na.dtypes)["vec_id"] == "int"
-    assert sorted(map(tuple, na.collect())) == sorted(map(tuple, nh.collect()))
+    corpus = base.select(to_id(F.col("id")).alias("vec_id"), "embedding")
+    queries = base.filter(F.col("id") % 9 == 0).select(
+        to_id(F.col("id")).alias("query_id"), "embedding"
+    )
+    rows = _assert_matches_reference(queries, corpus, 4, id_type)
+    assert len(rows) == 5 * 4
 
 
 def test_betweenness_matches_float_brandes(spark, sf_dir):
@@ -925,27 +965,25 @@ def test_betweenness_matches_float_brandes(spark, sf_dir):
         assert abs(got[v] / 1e6 - x) <= tol, (v, got[v] / 1e6, x, tol)
 
 
-def test_arrow_exact_topk_equals_hof_path(spark, sf_dir):
-    """The Arrow matmul scorer and the HOF-fold scorer are the same
-    operator: identical (query, neighbor, rounded cosine) rows on the
-    real embedding corpus, self-exclusion included — so use_arrow is a
-    pure execution switch, never a semantics switch."""
-    from pyspark.sql import functions as F
-
-    from reactionetl_etl_spark.operators.similarity import cosine_topk_batch
+@_ID_TYPE_PARAM
+@_BATCH_SIZES
+def test_arrow_exact_topk_equals_hof_path(
+    spark, sf_dir, session_confs, id_type, batch_rows
+):
+    """The Arrow matmul scorer returns the HOF-fold reference's
+    (query, neighbor, rounded cosine) rows on the real embedding
+    corpus, self-exclusion included, for every id type and Arrow
+    batch size."""
     from reactionetl_etl_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    session_confs({"spark.sql.execution.arrow.maxRecordsPerBatch": batch_rows})
+    to_id = _ID_TYPES[id_type][0]
+    raw = load_table(spark, sf_dir, "embeddings")
+    emb = raw.withColumn("vec_id", to_id(F.col("vec_id")))
+    qs = raw.filter(F.col("vec_id") % 37 == 0).select(
+        to_id(F.col("vec_id")).alias("query_id"), "embedding"
     )
-    arrow = sorted(
-        map(tuple, cosine_topk_batch(qs, emb, k=7, use_arrow=True).collect())
-    )
-    hof = sorted(
-        map(tuple, cosine_topk_batch(qs, emb, k=7, use_arrow=False).collect())
-    )
-    assert arrow == hof
+    _assert_matches_reference(qs, emb, 7, id_type)
 
 
 def test_qte_matches_numpy_order_statistics(spark, sf_dir):

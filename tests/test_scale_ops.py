@@ -1,5 +1,5 @@
 """Tests for scale-oriented operators: salted join, grouped-map
-transforms, and custom stateful streaming."""
+transforms, as-of joins and partitioned upserts."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from reactionetl_etl_spark.operators.grouped import (
 )
 from reactionetl_etl_spark.operators.skew import salted_join
 from reactionetl_etl_spark.sources.tables import load_events, load_table
-from reactionetl_etl_spark.streaming.stateful import running_totals_per_user
 
 
 def test_asof_join_semantics(spark):
@@ -108,47 +107,6 @@ def test_zscore_pandas_equals_window(spark, sf_dir):
         if r["zscore"] is not None
     }
     assert a == b
-
-
-def test_stateful_running_totals(spark, sf_dir, tmp_path):
-    """applyInPandasWithState accumulates across micro-batches: feeding
-    the same users in two batches yields combined running totals."""
-    ev = load_events(spark, sf_dir).select("user_id", "value").limit(2000)
-    src = str(tmp_path / "src")
-    # two separate parquet files → two micro-batches with maxFilesPerTrigger=1
-    ev.limit(1000).coalesce(1).write.mode("append").parquet(src)
-    ev.subtract(ev.limit(1000)).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = running_totals_per_user(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # last emitted row per user = final running totals = batch totals
-    final = spark.sql(
-        """
-        SELECT user_id, n_events, sum_value FROM (
-            SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-            FROM running_totals
-        ) WHERE rn = 1
-        """
-    )
-    expected = ev.groupBy("user_id").agg(
-        F.count("*").alias("n_events"), F.sum("value").alias("sum_value")
-    )
-    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6)) for r in final.collect()}
-    want = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6)) for r in expected.collect()}
-    assert got == want
 
 
 def test_upsert_partitioned_updates_and_inserts(spark, tmp_path):

@@ -1,52 +1,12 @@
-"""Streaming-surface tests: checkpointed AvailableNow ingestion and
-event-time windowed aggregation (batch/stream parity)."""
+"""Streaming-surface tests: foreachBatch sinks, the progress listener
+and event-time windowed aggregation (batch/stream parity)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from reactionetl_etl_spark.sources.tables import load_events
-from reactionetl_etl_spark.streaming.incremental import run_available_now
 from reactionetl_etl_spark.streaming.windows import session_windows, tumbling_event_stats
-
-from tests.fixtures_etl import write_reaction_csv
-
-N_ROWS = 15
-
-
-@pytest.fixture(scope="module")
-def stream_dirs(tmp_path_factory):
-    incoming = tmp_path_factory.mktemp("stream_incoming")
-    out = tmp_path_factory.mktemp("stream_out")
-    write_reaction_csv(str(incoming / "2026-02-01"), 11, N_ROWS)
-    write_reaction_csv(str(incoming / "2026-02-01"), 12, N_ROWS)
-    write_reaction_csv(str(incoming / "2026-02-02"), 13, N_ROWS)
-    return incoming, str(out / "fact"), str(out / "ckpt")
-
-
-def test_available_now_ingests_all_then_nothing(spark, stream_dirs):
-    """Trigger.AvailableNow processes every unseen file exactly once;
-    a second invocation with the same checkpoint ingests nothing
-    (M1/M2 exactly-once, file_manager.py:107-110 without moves)."""
-    incoming, fact_path, ckpt = stream_dirs
-    q = run_available_now(spark, str(incoming), fact_path, ckpt)
-    q.awaitTermination(120)
-    fact = spark.read.parquet(fact_path)
-    assert fact.count() == 3 * N_ROWS
-    assert set(fact.select("day").distinct().toPandas()["day"]) == {"2026-02-01", "2026-02-02"}
-    assert dict(fact.dtypes)["ca"] == "double"
-
-    # no new files → second run appends nothing
-    q2 = run_available_now(spark, str(incoming), fact_path, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(fact_path).count() == 3 * N_ROWS
-
-    # a late-arriving file is picked up, older files are not re-read
-    write_reaction_csv(str(incoming / "2026-02-03"), 14, N_ROWS)
-    q3 = run_available_now(spark, str(incoming), fact_path, ckpt)
-    q3.awaitTermination(120)
-    assert spark.read.parquet(fact_path).count() == 4 * N_ROWS
 
 
 def test_stream_to_jdbc_foreachbatch(spark, tmp_path):
