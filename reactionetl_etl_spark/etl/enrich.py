@@ -25,7 +25,6 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from reactionetl_etl_spark.operators.relational import enrich_with_dim
 from reactionetl_etl_spark.schemas import LAKE_DIM_SCHEMA
@@ -53,13 +52,6 @@ def assign_simulation_nums(rows: Iterable, current_max: int | None) -> list[tupl
         tuple(offset + n if c == "simulation_num" else r[c] for c in LAKE_DIM_SCHEMA.names)
         for n, r in enumerate(kept, 1)
     ]
-
-
-def current_max_simulation_num(dim: DataFrame) -> int:
-    """A1: scalar max() driving the sequence offset
-    (database_manager.py:207,212), NULL-safe."""
-    row = dim.agg(F.coalesce(F.max("simulation_num"), F.lit(0)).alias("m")).first()
-    return int(row["m"])
 
 
 def enrich_fact(fact: DataFrame, dim: DataFrame, broadcast_dim: bool = True) -> DataFrame:

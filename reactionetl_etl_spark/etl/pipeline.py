@@ -69,7 +69,6 @@ from reactionetl_etl_spark.etl.cleanse import (
 )
 from reactionetl_etl_spark.etl.enrich import (
     assign_simulation_nums,
-    current_max_simulation_num,
     enrich_fact,
 )
 from reactionetl_etl_spark.schemas import (
@@ -250,21 +249,25 @@ class ReactionLake:
                 new_meta = new_meta.join(
                     existing_dim.select("simulation_id"), on="simulation_id", how="left_anti"
                 )
-            # one collect: the batch's new clean rows, then the
-            # quarantined files; deduped and numbered on the driver
-            rows = (
-                new_meta.withColumn("ok", F.lit(True))
-                .unionByName(
-                    result.quarantined.select("source_file", F.lit(False).alias("ok")),
+            # one collect: the batch's new clean rows (ok), the
+            # quarantined files (not ok) and the dim's max
+            # simulation_num (ok NULL), the numbering offset; deduped
+            # and numbered on the driver
+            flagged = new_meta.withColumn("ok", F.lit(True)).unionByName(
+                result.quarantined.select("source_file", F.lit(False).alias("ok")),
+                allowMissingColumns=True,
+            )
+            if existing_dim is not None:
+                flagged = flagged.unionByName(
+                    existing_dim.agg(F.max("simulation_num").alias("max_num")),
                     allowMissingColumns=True,
                 )
-                .collect()
-            )
-            offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
+            rows = flagged.collect()
+            offset = next((r["max_num"] for r in rows if r["ok"] is None), None)
             dim_rows = assign_simulation_nums([r for r in rows if r["ok"]], offset)
             src = LAKE_DIM_SCHEMA.names.index("source_file")
             loaded = {strip_uri_scheme(r[src]) for r in dim_rows}
-            bad = {strip_uri_scheme(r["source_file"]) for r in rows if not r["ok"]}
+            bad = {strip_uri_scheme(r["source_file"]) for r in rows if r["ok"] is False}
             local_frame(spark, dim_rows, LAKE_DIM_SCHEMA).coalesce(1).write.mode("append").parquet(
                 self.dim_path
             )

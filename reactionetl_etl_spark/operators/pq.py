@@ -35,6 +35,42 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _id_schema(
+    queries: DataFrame, query_id_col: str, corpus: DataFrame, id_col: str, *rest: T.StructField
+) -> T.StructType:
+    """An output schema whose id columns keep the callers' names and
+    types (string ids pass through as strings), followed by ``rest``."""
+    return T.StructType(
+        [
+            T.StructField(query_id_col, queries.schema[query_id_col].dataType),
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            *rest,
+        ]
+    )
+
+
+_ADC_D2 = T.StructField("adc_d2", T.DoubleType())
+_APPROX = T.StructField("approx_cosine", T.DoubleType())
+_RANK = T.StructField("rank", T.IntegerType())
+
+
+def _rank_adc(scored: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """Keep each query's k nearest rows of ``scored`` (query id,
+    candidate id, ``adc_d2``), ties broken by ascending candidate id.
+    Output: (query id, candidate id, approx_cosine, rank)."""
+    qid, vid = scored.columns[:2]
+    if exclude_self:
+        scored = scored.filter(F.col(qid) != F.col(vid))
+    w = Window.partitionBy(qid).orderBy(F.col("adc_d2").asc(), F.col(vid).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("approx_cosine", 1 - F.col("adc_d2") / 2)
+        .select(qid, vid, "approx_cosine", "rank")
+    )
 
 
 def _normalize(x):
@@ -155,7 +191,8 @@ def pq_cosine_topk(
     EXACT cosine against the full vectors (one keyed join against the
     shortlist only) — the two-stage layout; ``refine=None`` returns raw
     ADC ranking with ``approx_cosine`` = 1 - d²/2.
-    Output: (query_id, vec_id, cosine_sim|approx_cosine, rank ≤ k).
+    Output: (query_id_col, id_col, cosine_sim|approx_cosine, rank ≤ k);
+    both id columns keep the callers' types.
     The query batch is collected to build the ADC tables; one of more
     than `similarity.MAX_QUERY_ROWS` rows is refused before the collect.
 
@@ -177,9 +214,9 @@ def pq_cosine_topk(
         "pq_cosine_topk",
     )
     if not q_rows:
-        sim_col = "cosine_sim" if refine is not None else "approx_cosine"
+        sim = T.StructField("cosine_sim" if refine is not None else "approx_cosine", T.DoubleType())
         return queries.sparkSession.createDataFrame(
-            [], f"query_id long, vec_id long, {sim_col} double, rank int"
+            [], _id_schema(queries, query_id_col, codes, id_col, sim, _RANK)
         )
     qx = _normalize(np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64))
     q_ids = [r[query_id_col] for r in q_rows]
@@ -216,39 +253,32 @@ def pq_cosine_topk(
                 out_q.extend([qid] * len(idx))
                 out_v.extend(ids[idx])
                 out_d.extend(row[idx])
-            yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "adc_d2": out_d})
+            yield pd.DataFrame({query_id_col: out_q, id_col: out_v, "adc_d2": out_d})
 
     partials = codes.mapInPandas(
-        scan, schema="query_id long, vec_id long, adc_d2 double"
+        scan, schema=_id_schema(queries, query_id_col, codes, id_col, _ADC_D2)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
+    if refine is None:
+        return _rank_adc(partials, k, exclude_self=False)  # scan masks self
+    w = Window.partitionBy(query_id_col).orderBy(F.col("adc_d2").asc(), F.col(id_col).asc())
     shortlist = (
         partials.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= shortlist_n)
         .drop("__r")
     )
-    if refine is None:
-        return (
-            shortlist.withColumn("approx_cosine", 1 - F.col("adc_d2") / 2)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("adc_d2")
-        )
     # exact re-rank: join the SHORTLIST (k×refine rows/query) to vectors
     from reactionetl_etl_spark.functions.vectors import cosine_similarity
 
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    cv = codes.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv"))
+    qv = queries.select(query_id_col, F.col(vec_col).alias("__qv"))
+    cv = codes.select(id_col, F.col(vec_col).alias("__cv"))
     scored = (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "vec_id")
+        shortlist.join(F.broadcast(qv), query_id_col)
+        .join(cv, id_col)
         .withColumn("cosine_sim", F.round(cosine_similarity(F.col("__qv"), F.col("__cv")), 6))
         .drop("__qv", "__cv", "adc_d2")
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
+    w2 = Window.partitionBy(query_id_col).orderBy(
+        F.col("cosine_sim").desc(), F.col(id_col).asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w2))
@@ -362,7 +392,8 @@ def probe_pq_index(
     are never read because the index doesn't store them).
     ``n_probe=None`` probes every cell (exact ADC ranking — equals
     `pq_cosine_topk(refine=None)`; the parity test pins this).
-    Output: (query_id, vec_id, approx_cosine, rank ≤ k) — re-rank by
+    Output: (query_id_col, id_col, approx_cosine, rank ≤ k), ids in
+    the callers' types — re-rank by
     joining the shortlist to a full-vector table if exactness matters,
     as `pq_cosine_topk(refine=)` does.
 
@@ -418,10 +449,11 @@ def probe_pq_index(
     spark = queries.sparkSession
     if not q_rows:
         return spark.createDataFrame(
-            [], "query_id long, vec_id long, approx_cosine double, rank int"
+            [], _id_schema(queries, query_id_col, index_codes, id_col, _APPROX, _RANK)
         )
     qx = _normalize(np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64))
-    q_ids = [r[query_id_col] for r in q_rows]
+    # query ids of any type, looked up by the query's position
+    q_ids = pd.Series([r[query_id_col] for r in q_rows]).to_numpy()
     # per-query ADC tables (n_q, m, k) — subspace 0's row also ranks the
     # probe cells: nearest coarse cells == smallest subspace-0 distances
     tables = np.stack(
@@ -439,21 +471,19 @@ def probe_pq_index(
     # the sidecar note in write_pq_index)
     probe = pd.DataFrame(
         [
-            (int(qid), int(c))
-            for qi, qid in enumerate(q_ids)
+            (qi, int(c))
+            for qi in range(len(q_ids))
             for c in np.argsort(tables[qi, 0])[: min(n_probe, n_cells)]
         ],
-        columns=["__qid", "__probe_cell"],
+        columns=["__qi", "__probe_cell"],
     )
     bq = spark.createDataFrame(probe).select(
-        F.col("__qid").cast("long").alias("__qid"),
+        F.col("__qi").cast("int").alias("__qi"),
         F.col("__probe_cell").cast("int").alias("__probe_cell"),
     )
     pairs = index_codes.join(
         F.broadcast(bq), on=F.col("pq_cell") == F.col("__probe_cell"), how="inner"
-    ).select("__qid", id_col, "pq_code")
-
-    tables_by_qid = {int(qid): tables[qi] for qi, qid in enumerate(q_ids)}
+    ).select("__qi", id_col, "pq_code")
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
@@ -462,31 +492,23 @@ def probe_pq_index(
             if not len(pdf):
                 continue
             codes_arr = _np.array(list(pdf["pq_code"]), dtype=_np.int64)
-            qids = pdf["__qid"].to_numpy()
+            qis = pdf["__qi"].to_numpy()
             d = _np.zeros(len(pdf), dtype=_np.float64)
-            # group rows by query id so each ADC table gathers once
-            for qid in _np.unique(qids):
-                sel = qids == qid
-                t = tables_by_qid[int(qid)]
+            # group rows by query so each ADC table gathers once
+            for qi in _np.unique(qis):
+                sel = qis == qi
+                t = tables[qi]
                 dd = _np.zeros(sel.sum(), dtype=_np.float64)
                 sub_codes = codes_arr[sel]
                 for s in range(m):
                     dd += t[s][sub_codes[:, s]]
                 d[sel] = dd
             yield pd.DataFrame(
-                {"query_id": qids, "vec_id": pdf[id_col], "adc_d2": d}
+                {query_id_col: q_ids[qis], id_col: pdf[id_col], "adc_d2": d}
             )
 
-    scored = pairs.mapInPandas(adc, "query_id long, vec_id long, adc_d2 double")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("approx_cosine", 1 - F.col("adc_d2") / 2)
-        .select("query_id", "vec_id", "approx_cosine", "rank")
-    )
+    schema = _id_schema(queries, query_id_col, index_codes, id_col, _ADC_D2)
+    return _rank_adc(pairs.mapInPandas(adc, schema), k, exclude_self)
 
 
 def _probe_pq_unbounded(
@@ -540,9 +562,10 @@ def _probe_pq_unbounded(
     cents = None if centroids is None else np.asarray(centroids, dtype=np.float64)
 
     q_in = non_null_vectors(queries, vec_col).select(
-        F.col(query_id_col).cast("long").alias("__qid"),
+        F.col(query_id_col).alias("__qid"),
         as_double_array(vec_col).alias("__qv"),
     )
+    qid_type = queries.schema[query_id_col].dataType
 
     def pick_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
@@ -567,7 +590,14 @@ def _probe_pq_unbounded(
             )
 
     q_cells = q_in.mapInPandas(
-        pick_cells, "__qid long, __probe_cell int, __qn array<double>"
+        pick_cells,
+        T.StructType(
+            [
+                T.StructField("__qid", qid_type),
+                T.StructField("__probe_cell", T.IntegerType()),
+                T.StructField("__qn", T.ArrayType(T.DoubleType())),
+            ]
+        ),
     )
     pairs = index_codes.join(
         q_cells, on=F.col(cell_join_col) == F.col("__probe_cell"), how="inner"
@@ -605,19 +635,11 @@ def _probe_pq_unbounded(
                     dd += t[s][sub_codes[:, s]]
                 d[idx] = dd
             yield pd.DataFrame(
-                {"query_id": qids, "vec_id": pdf_r[id_col], "adc_d2": d}
+                {query_id_col: qids, id_col: pdf_r[id_col], "adc_d2": d}
             )
 
-    scored = pairs.mapInPandas(adc, "query_id long, vec_id long, adc_d2 double")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("approx_cosine", 1 - F.col("adc_d2") / 2)
-        .select("query_id", "vec_id", "approx_cosine", "rank")
-    )
+    schema = _id_schema(queries, query_id_col, index_codes, id_col, _ADC_D2)
+    return _rank_adc(pairs.mapInPandas(adc, schema), k, exclude_self)
 
 
 # ---------------------------------------------------------------------------
@@ -841,7 +863,8 @@ def probe_ivfpq_index(
     centroid into every entry (t[s][j] = ‖q_s − c_s − book_s[j]‖²), so
     scoring stays m lookups per candidate and the float vectors are
     never read. ``n_probe=None`` probes every cell. Output:
-    (query_id, vec_id, approx_cosine, rank ≤ k); re-rank the shortlist
+    (query_id_col, id_col, approx_cosine, rank ≤ k), ids in the callers'
+    types; re-rank the shortlist
     against a full-vector table if exactness matters.
 
     Query-side contracts (r14): ``broadcast_queries=True`` is the
@@ -886,16 +909,17 @@ def probe_ivfpq_index(
     spark = queries.sparkSession
     if not q_rows:
         return spark.createDataFrame(
-            [], "query_id long, vec_id long, approx_cosine double, rank int"
+            [], _id_schema(queries, query_id_col, index_codes, id_col, _APPROX, _RANK)
         )
     qx = _normalize(np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64))
-    q_ids = [r[query_id_col] for r in q_rows]
+    # query ids of any type, looked up by the query's position
+    q_ids = pd.Series([r[query_id_col] for r in q_rows]).to_numpy()
     coarse_d = ((qx[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
     probe_cells = np.argsort(coarse_d, axis=1)[:, :n_probe]
     # per-(query, probed cell) residual ADC tables: m × k lookups each
     tables: dict[tuple[int, int], "np.ndarray"] = {}
     pairs_rows = []
-    for qi, qid in enumerate(q_ids):
+    for qi in range(len(q_ids)):
         for c in probe_cells[qi]:
             resid_q = qx[qi] - cents[c]
             t = np.stack(
@@ -906,17 +930,17 @@ def probe_ivfpq_index(
                     for s in range(m)
                 ]
             )
-            tables[(int(qid), int(c))] = t
-            pairs_rows.append((int(qid), int(c)))
-    probe = pd.DataFrame(pairs_rows, columns=["__qid", "__probe_cell"])
+            tables[(qi, int(c))] = t
+            pairs_rows.append((qi, int(c)))
+    probe = pd.DataFrame(pairs_rows, columns=["__qi", "__probe_cell"])
     bq = spark.createDataFrame(probe).select(
-        F.col("__qid").cast("long").alias("__qid"),
+        F.col("__qi").cast("int").alias("__qi"),
         F.col("__probe_cell").cast("int").alias("__probe_cell"),
     )
     pairs = index_codes.join(
         F.broadcast(bq), on=F.col("ivf_cell") == F.col("__probe_cell"), how="inner"
     ).select(
-        "__qid", F.col(id_col), "pq_code", F.col("ivf_cell").cast("int").alias("__cell")
+        "__qi", F.col(id_col), "pq_code", F.col("ivf_cell").cast("int").alias("__cell")
     )
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -926,30 +950,20 @@ def probe_ivfpq_index(
             if not len(pdf):
                 continue
             codes_arr = _np.array(list(pdf["pq_code"]), dtype=_np.int64)
-            qids = pdf["__qid"].to_numpy()
+            qis = pdf["__qi"].to_numpy()
             d = _np.zeros(len(pdf), dtype=_np.float64)
-            # group rows by (qid, cell) so each ADC table gathers once;
-            # positional indices, never id arithmetic (ids may be any
-            # int64)
-            grouped = pdf.reset_index(drop=True).groupby(["__qid", "__cell"]).indices
-            for (qid, cell), idx in grouped.items():
-                t = tables[(int(qid), int(cell))]
+            # group rows by (query, cell) so each ADC table gathers once
+            grouped = pdf.reset_index(drop=True).groupby(["__qi", "__cell"]).indices
+            for (qi, cell), idx in grouped.items():
+                t = tables[(int(qi), int(cell))]
                 dd = _np.zeros(len(idx), dtype=_np.float64)
                 sub_codes = codes_arr[idx]
                 for s in range(m):
                     dd += t[s][sub_codes[:, s]]
                 d[idx] = dd
             yield pd.DataFrame(
-                {"query_id": qids, "vec_id": pdf[id_col], "adc_d2": d}
+                {query_id_col: q_ids[qis], id_col: pdf[id_col], "adc_d2": d}
             )
 
-    scored = pairs.mapInPandas(adc, "query_id long, vec_id long, adc_d2 double")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("approx_cosine", 1 - F.col("adc_d2") / 2)
-        .select("query_id", "vec_id", "approx_cosine", "rank")
-    )
+    schema = _id_schema(queries, query_id_col, index_codes, id_col, _ADC_D2)
+    return _rank_adc(pairs.mapInPandas(adc, schema), k, exclude_self)

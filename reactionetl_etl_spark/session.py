@@ -46,6 +46,16 @@ _DEFAULTS = {
     # A batch engine takes the error message without the Python line
     # origin; debugging sessions can flip it back on per-run.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Janino-compiled classes kept per JVM. Spark's default of 100 is
+    # below one unit's working set, so LRU eviction recompiled every
+    # class each time a unit repeated. Distinct classes measured
+    # (CodegenMetrics compile count under an unbounded cache, 4 cores):
+    # perfbench analytics_mix set-up plus three passes 278, an
+    # ingest_incremental run with six cycles 93, bench.py's 51-entry
+    # loop at sf0.1 1110 — the largest, so 4096 is the smallest power
+    # of two at least twice it. A static conf: it takes effect when
+    # the session (and so the JVM's code generator) starts.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
@@ -73,6 +83,13 @@ def cluster_conf(
     - RocksDB state store for streaming: state beyond executor-heap
       scale (sessionization over millions of users) spills to local
       disk instead of OOMing.
+
+    Not overridden here: `_DEFAULTS`' `spark.sql.codegen.cache.maxEntries`.
+    The codegen cache lives in each JVM — the driver and every
+    executor keep their own — and the conf is static, so it must reach
+    every JVM at launch (spark-submit --conf, or the session builder
+    before the SparkContext starts); setting it on a running session
+    changes nothing.
     """
     return {
         "spark.sql.shuffle.partitions": str(max(2 * total_cores, 200)),

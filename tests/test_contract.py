@@ -218,3 +218,34 @@ def test_verify_ledger_orders_never_verified_first():
     keys = [(r["rank"], r["last_green_round"]) for r in ledger]
     assert keys == sorted(keys)
     assert all(r["last_green_round"] == 0 for r in ledger if r["rank"] == 0)
+
+
+# perfbench's analytics_mix queries: one pass over them needs about 150
+# generated classes, more than Spark's default codegen cache holds (100)
+_ANALYTICS_QUERIES = (
+    "pricing_summary", "shipping_priority_top10", "totalprice_percent_rank", "events_hourly_by_type",
+    "asof_click_to_purchase", "text_stats_by_lang", "cosine_topk_bruteforce", "tfidf_top_terms",
+)
+
+
+def test_repeated_unit_compiles_no_code(spark, sf_dir):
+    """Running a unit again compiles no generated code: the session's
+    codegen cache holds the unit's whole working set, so nothing the
+    first run compiled was evicted before the repeat."""
+    from reactionetl_etl_spark.plans.catalog import bench_queries
+
+    specs = bench_queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def unit() -> dict[str, int]:
+        """Classes compiled by each query of the unit."""
+        counts = {}
+        for name in _ANALYTICS_QUERIES:
+            before = compiles.getCount()
+            specs[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            counts[name] = compiles.getCount() - before
+        return counts
+
+    first = unit()
+    repeat = unit()
+    assert not any(repeat.values()), f"the repeat recompiled {repeat}; the first run compiled {first}"

@@ -503,3 +503,64 @@ def test_pq_cosine_topk_refuses_query_batch_over_bound(spark, monkeypatch):
         pq_cosine_topk(qs, coded, book, k=3)
     at_bound = pq_cosine_topk(qs.filter(F.col("query_id") < 2), coded, book, k=3)
     assert at_bound.count() == 2 * 3
+
+
+def test_pq_string_ids_match_long_ids(spark, tmp_path):
+    """String ids under the callers' own column names give the rows the
+    long ids give: every PQ scorer's schema takes the callers' id names
+    and types. The ids are zero-padded, so string and numeric order
+    agree and the id tie-break picks the same rows."""
+    from reactionetl_etl_spark.operators.pq import (
+        probe_ivfpq_index,
+        probe_pq_index,
+        write_ivfpq_index,
+        write_pq_index,
+    )
+
+    df, rows = _fixture(spark, n=200)
+    sdf = df.select(F.format_string("doc-%04d", "vec_id").alias("doc_id"), "embedding")
+    qs = spark.createDataFrame(
+        [(r[0], r[1]) for r in rows[:5]], "query_id long, embedding array<double>"
+    )
+    sqs = qs.select(F.format_string("doc-%04d", "query_id").alias("qid"), "embedding")
+    names = {"query_id_col": "qid", "id_col": "doc_id"}
+
+    def check(got, want):
+        assert dict(got.dtypes)["qid"] == dict(got.dtypes)["doc_id"] == "string"
+        g = sorted(map(tuple, got.select("qid", "doc_id", *got.columns[2:]).collect()))
+        w = sorted(
+            (f"doc-{r[0]:04d}", f"doc-{r[1]:04d}", *r[2:])
+            for r in want.select("query_id", "vec_id", *want.columns[2:]).collect()
+        )
+        assert g and g == w
+
+    book = train_pq_codebook(df, dim=32, m=8, k=16)
+    coded, scoded = pq_encode(df, book), pq_encode(sdf, book)
+    for refine in (8, None):
+        check(
+            pq_cosine_topk(sqs, scoded, book, k=5, refine=refine, **names),
+            pq_cosine_topk(qs, coded, book, k=5, refine=refine),
+        )
+    empty = pq_cosine_topk(sqs.limit(0), scoded, book, k=5, **names)
+    assert empty.count() == 0 and dict(empty.dtypes)["qid"] == "string"
+
+    write_pq_index(df, dim=32, path=str(tmp_path / "pq"), m=8, k=16, codebook=book)
+    write_pq_index(sdf, dim=32, path=str(tmp_path / "pq_s"), m=8, k=16, codebook=book, id_col="doc_id")
+    index, sindex = (spark.read.parquet(str(tmp_path / p / "codes")) for p in ("pq", "pq_s"))
+    for bq in (True, False):
+        check(
+            probe_pq_index(sqs, sindex, book, k=5, n_probe=4, broadcast_queries=bq, **names),
+            probe_pq_index(qs, index, book, k=5, n_probe=4, broadcast_queries=bq),
+        )
+
+    cents, ivf_book = write_ivfpq_index(df, dim=32, path=str(tmp_path / "ivf"), n_cells=8, m=8, k=16)
+    write_ivfpq_index(
+        sdf, dim=32, path=str(tmp_path / "ivf_s"), n_cells=8, m=8, k=16,
+        centroids=cents, codebook=ivf_book, id_col="doc_id",
+    )
+    index, sindex = (spark.read.parquet(str(tmp_path / p / "codes")) for p in ("ivf", "ivf_s"))
+    for bq in (True, False):
+        check(
+            probe_ivfpq_index(sqs, sindex, cents, ivf_book, k=5, n_probe=4, broadcast_queries=bq, **names),
+            probe_ivfpq_index(qs, index, cents, ivf_book, k=5, n_probe=4, broadcast_queries=bq),
+        )
