@@ -283,6 +283,7 @@ def pq_cosine_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, "cosine_sim", "rank")
     )
 
 

@@ -7560,7 +7560,10 @@ def pq_cosine_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return pq_cosine_topk(qs, coded, book, k=5, refine=8)
+    # the pinned column order, candidate id first
+    return pq_cosine_topk(qs, coded, book, k=5, refine=8).select(
+        "vec_id", "query_id", "cosine_sim", "rank"
+    )
 
 
 @_q("pq_index_probe", None, tags=("similarity", "pq", "index", "io"))

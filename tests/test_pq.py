@@ -508,8 +508,9 @@ def test_pq_cosine_topk_refuses_query_batch_over_bound(spark, monkeypatch):
 def test_pq_string_ids_match_long_ids(spark, tmp_path):
     """String ids under the callers' own column names give the rows the
     long ids give: every PQ scorer's schema takes the callers' id names
-    and types. The ids are zero-padded, so string and numeric order
-    agree and the id tie-break picks the same rows."""
+    and types, query id first on every branch. The ids are zero-padded,
+    so string and numeric order agree and the id tie-break picks the
+    same rows."""
     from reactionetl_etl_spark.operators.pq import (
         probe_ivfpq_index,
         probe_pq_index,
@@ -526,12 +527,10 @@ def test_pq_string_ids_match_long_ids(spark, tmp_path):
     names = {"query_id_col": "qid", "id_col": "doc_id"}
 
     def check(got, want):
-        assert dict(got.dtypes)["qid"] == dict(got.dtypes)["doc_id"] == "string"
-        g = sorted(map(tuple, got.select("qid", "doc_id", *got.columns[2:]).collect()))
-        w = sorted(
-            (f"doc-{r[0]:04d}", f"doc-{r[1]:04d}", *r[2:])
-            for r in want.select("query_id", "vec_id", *want.columns[2:]).collect()
-        )
+        assert got.dtypes[:2] == [("qid", "string"), ("doc_id", "string")]
+        assert want.columns == ["query_id", "vec_id", *got.columns[2:]]
+        g = sorted(map(tuple, got.collect()))
+        w = sorted((f"doc-{r[0]:04d}", f"doc-{r[1]:04d}", *r[2:]) for r in want.collect())
         assert g and g == w
 
     book = train_pq_codebook(df, dim=32, m=8, k=16)
@@ -542,7 +541,8 @@ def test_pq_string_ids_match_long_ids(spark, tmp_path):
             pq_cosine_topk(qs, coded, book, k=5, refine=refine),
         )
     empty = pq_cosine_topk(sqs.limit(0), scoded, book, k=5, **names)
-    assert empty.count() == 0 and dict(empty.dtypes)["qid"] == "string"
+    assert empty.count() == 0
+    assert empty.dtypes == [("qid", "string"), ("doc_id", "string"), ("cosine_sim", "double"), ("rank", "int")]
 
     write_pq_index(df, dim=32, path=str(tmp_path / "pq"), m=8, k=16, codebook=book)
     write_pq_index(sdf, dim=32, path=str(tmp_path / "pq_s"), m=8, k=16, codebook=book, id_col="doc_id")
