@@ -73,19 +73,9 @@ class CleanseResult:
             df.unpersist()
 
 
-def cleanse_incoming_csvs(
-    spark: SparkSession, files: list[RawFile], dir_read: bool = False
-) -> CleanseResult:
-    """Clean a batch of incoming simulation CSVs (EP2).
-
-    ``dir_read``: the caller asserts ``files`` covers its day
-    directories (a fresh daily drop), enabling the O(dirs) directory
-    scan in `read_csv_header_group`. Only forwarded when a single
-    header group holds every file — with multiple groups each group's
-    dir scan would re-parse the other groups' files just to drop them."""
-    groups = probe_csv_headers(spark, files)
-    valid, rejected = split_valid_header_groups(groups)
-    dir_read = dir_read and not rejected and len(valid) == 1
+def cleanse_incoming_csvs(spark: SparkSession, files: list[RawFile]) -> CleanseResult:
+    """Clean a batch of incoming simulation CSVs (EP2)."""
+    valid, rejected = split_valid_header_groups(probe_csv_headers(files))
 
     rejected_files: list[tuple[RawFile, str]] = []
     for header, members in rejected.items():
@@ -102,7 +92,7 @@ def cleanse_incoming_csvs(
         # and the quarantine branch is exactly that. MEMORY_AND_DISK so
         # a 100 TB backlog spills instead of OOMing; released by the
         # caller via CleanseResult.release().
-        df = read_csv_header_group(spark, header, members, dir_read=dir_read).persist()
+        df = read_csv_header_group(spark, header, members).persist()
         cached.append(df)
         bad = df.filter(F.col("_corrupt_record").isNotNull())
         good = df.filter(F.col("_corrupt_record").isNull())
@@ -122,29 +112,21 @@ def cleanse_incoming_csvs(
     )
 
 
-def cleanse_metadata_jsons(
-    spark: SparkSession, files: list[RawFile], dir_read: bool = False
-) -> CleanseResult:
-    """Validate + conform metadata JSONs (V3 as column expressions).
-
-    ``dir_read``: see `cleanse_incoming_csvs` — O(dirs) directory scan
-    when the batch covers its day directories."""
+def cleanse_metadata_jsons(spark: SparkSession, files: list[RawFile]) -> CleanseResult:
+    """Validate + conform metadata JSONs (V3 as column expressions)."""
     if not files:
         return CleanseResult(
             clean=local_frame(spark, [], _CLEAN_METADATA_DDL),
             quarantined=local_frame(spark, [], LAKE_QUARANTINE_SCHEMA),
         )
 
-    raw = read_metadata_json(spark, files, dir_read=dir_read)
+    raw = read_metadata_json(spark, files)
     # Cast into side columns (raw strings stay visible for the
     # coercion-failure checks and the quarantine payload).
     # try_cast, not cast: ANSI mode (Spark 4 default) makes a plain cast
     # THROW on 'not-a-float' — we want NULL so the row quarantines.
     # Persisted like the CSV path's parsed scan: the clean and
-    # quarantine branches otherwise each re-run the whole read — and on
-    # the per-path branch that doubles the O(files) plan-construction
-    # resolution too (~1.5 s at 512 files, the dominant cost; the scan
-    # itself packs small files ~16/task and runs in ~0.3 s). Released
+    # quarantine branches otherwise each re-run the whole read. Released
     # by the caller via CleanseResult.release().
     typed = raw.withColumns(
         {f"__t_{c}": F.col(c).try_cast("double") for c in METADATA_DOUBLE_COLS}

@@ -210,20 +210,10 @@ class ReactionLake:
         asymptotically. The audit append is the last write and commits
         the run: a crash before it leaves the files to the next run."""
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-        all_csvs = list_raw_files(incoming_root, ".csv")
-        all_jsons = list_raw_files(incoming_root, ".json")
-        new = self._new_files(spark, all_csvs + all_jsons)
+        listed = list_raw_files(incoming_root, ".csv") + list_raw_files(incoming_root, ".json")
+        new = self._new_files(spark, listed)
         csvs = [f for f in new if f.path.endswith(".csv")]
         jsons = [f for f in new if f.path.endswith(".json")]
-        # Fresh-backlog fast path (the daily-drop norm): when every
-        # listed file is new, the cleanse readers may scan day DIRS with
-        # a glob instead of resolving each path on the driver — O(dirs)
-        # vs O(files) plan construction (~3 ms/path; 2×1.6 s at 512
-        # files, PERF_NOTES r9). The readers pin the exact file set back
-        # with a broadcast semi-join, so partially-processed dirs just
-        # take the per-path read.
-        csv_dir_read = len(csvs) == len(all_csvs)
-        json_dir_read = len(jsons) == len(all_jsons)
         log.info(
             "run_once: %d new reaction CSVs, %d new metadata JSONs under %s",
             len(csvs), len(jsons), incoming_root,
@@ -240,7 +230,7 @@ class ReactionLake:
         # Dims are processed BEFORE the facts so the fact append can
         # pick up this batch's simulation_nums inline.
         if jsons:
-            result = cleanse_metadata_jsons(spark, jsons, dir_read=json_dir_read)
+            result = cleanse_metadata_jsons(spark, jsons)
             existing_dim = self.dim(spark)
             new_meta = result.clean
             if existing_dim is not None:
@@ -290,7 +280,7 @@ class ReactionLake:
 
         # ---- reaction CSVs → fact_sim (EP2 + W2; + inline J1) ----
         if csvs:
-            result = cleanse_incoming_csvs(spark, csvs, dir_read=csv_dir_read)
+            result = cleanse_incoming_csvs(spark, csvs)
             # Clean and quarantined rows per file. The first action over
             # the persisted cleanse scan, so it also fills the cache the
             # fact append reads.

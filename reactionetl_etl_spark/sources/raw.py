@@ -5,11 +5,10 @@ Replaces the reference's per-file pandas loop (EP2,
 Spark scans:
 
 1. Discover `incoming/<day>/*.csv` / `*.json` (S4/S5,
-   file_manager.py:26-27,45,120). Listing is metadata-scale work; the
-   header probe that follows runs as a Spark job so a million-file
-   backlog doesn't serialize on the driver.
-2. Probe each CSV's header line (one tiny read per file) and group
-   files by exact header tuple. Spark's CSV reader binds a single
+   file_manager.py:26-27,45,120). Listing is metadata-scale work,
+   done on the driver.
+2. Probe each CSV's header line (one tiny driver-side read per file)
+   and group files by exact header tuple. Spark's CSV reader binds a single
    schema positionally per scan, so heterogeneous headers (the optional
    pandas `Unnamed: 0` artifact, reordered or missing columns) must be
    scanned per header-group — typically 1-2 groups per backlog, each a
@@ -18,12 +17,19 @@ Spark scans:
    (file_manager.py:55-58, database_manager.py:49-54): a group whose
    header lacks a required column is quarantined whole, never scanned.
 
+Every scan reads its explicit path list, so a batch is exactly its
+listed files whatever else sits in their day directories. A list over
+Spark's 32-path listing threshold is resolved by a listing job of at
+most `spark.sql.sources.parallelPartitionDiscovery.parallelism` tasks
+(`session._DEFAULTS`).
+
 File-lineage columns (`source_file`, `day`, filename-derived
 `simulation_id_from_name`, main.py:23) come from `input_file_name()`.
 """
 
 from __future__ import annotations
 
+import csv
 import os
 import re
 from dataclasses import dataclass
@@ -32,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from reactionetl_etl_spark.io.files import local_frame
 from reactionetl_etl_spark.schemas import (
     CSV_COLUMN_MAP,
     PANDAS_INDEX_ARTIFACT,
@@ -93,76 +98,17 @@ def strip_uri_scheme(path: str) -> str:
     return re.sub(URI_SCHEME_RE, "/", path, count=1)
 
 
-# backlogs at or below this size keep the explicit per-path reader call
-# (construction-time path resolution is cheap); above it, when the
-# caller knows the file set covers its directories, reads switch to
-# directory + pathGlobFilter scans — the driver resolves N paths in
-# O(dirs) instead of O(files) (~3 ms/path: 512 paths cost ~1.6 s of
-# plan construction + the same again at execution, measured r9)
-DIR_READ_MIN_FILES = 64
-
-
-def _exact_file_filter(df: DataFrame, spark: SparkSession, files: list[RawFile]) -> DataFrame:
-    """Restrict a directory-scan DataFrame to EXACTLY the listed files.
-
-    A dir+glob read may see already-processed neighbours or files that
-    appeared between listing and read; the broadcast semi-join on the
-    (scheme-stripped) lineage path guarantees the dir-read plan stays
-    row-identical to the per-path plan. The file frame is
-    listing-sized — the same metadata the driver already holds."""
-    wanted = local_frame(spark, [(f.path,) for f in files], "__wanted_path string")
-    return (
-        df.withColumn("__src_plain", F.regexp_replace("source_file", URI_SCHEME_RE, "/"))
-        .join(
-            F.broadcast(wanted),
-            F.col("__src_plain") == F.col("__wanted_path"),
-            "left_semi",
-        )
-        .drop("__src_plain")
-    )
-
-
-# backlogs at or below this size probe headers on the driver (one
-# first-line read per file is microseconds); larger backlogs fan the
-# probe out as a Spark job so a million-file queue never serializes
-DRIVER_PROBE_MAX_FILES = 4096
-
-
-def _read_header(path: str) -> tuple[str, ...]:
-    import csv as _csv
-
-    with open(path, newline="") as fh:
-        return tuple(next(_csv.reader(fh), []))
-
-
-def probe_csv_headers(spark: SparkSession, files: list[RawFile]) -> dict[tuple[str, ...], list[RawFile]]:
+def probe_csv_headers(files: list[RawFile]) -> dict[tuple[str, ...], list[RawFile]]:
     """Group CSV files by exact header tuple.
 
-    Small backlogs read headers on the driver (this is metadata work —
-    spinning up the executor Python-worker pool costs more than the
-    reads). Large backlogs run the probe as a Spark job: per-partition
-    imperative I/O is justified because it is discovery, not data.
-    """
-    if not files:
-        return {}
-    paths = [f.path for f in files]
-    by_path = {f.path: f for f in files}
-
-    if len(paths) <= DRIVER_PROBE_MAX_FILES:
-        probed = [(p, _read_header(p)) for p in paths]
-    else:
-        def _first_lines(path_iter):
-            for p in path_iter:
-                yield p, _read_header(p)
-
-        n_slices = max(1, min(len(paths) // 64, spark.sparkContext.defaultParallelism))
-        probed = spark.sparkContext.parallelize(paths, n_slices).mapPartitions(
-            _first_lines
-        ).collect()
-
+    Headers are read on the driver, one first-line read per file: this
+    is metadata work, and the listing that precedes it is driver-local
+    too."""
     groups: dict[tuple[str, ...], list[RawFile]] = {}
-    for path, header in probed:
-        groups.setdefault(header, []).append(by_path[path])
+    for f in files:
+        with open(f.path, newline="") as fh:
+            header = tuple(next(csv.reader(fh), []))
+        groups.setdefault(header, []).append(f)
     return groups
 
 
@@ -206,45 +152,25 @@ def read_csv_header_group(
     spark: SparkSession,
     header: tuple[str, ...],
     members: list[RawFile],
-    dir_read: bool = False,
 ) -> DataFrame:
     """One vectorized scan over all files sharing a header.
 
     PERMISSIVE mode with an explicit typed schema: well-typed rows come
     out conformed; rows with malformed values surface in
     `_corrupt_record` and are split off by the cleanse step — the
-    engine's replacement for the reference's crash-on-bad-row COPY.
-
-    ``dir_read`` (caller asserts this group covers its day dirs): scan
-    the parent directories with a glob — O(dirs) driver path resolution
-    instead of O(files) — pinned back to the exact member set by
-    `_exact_file_filter` after the lineage column lands. Rows from a
-    stray neighbour file (another header group, a file that appeared
-    after listing) are dropped by that filter, so the plan stays
-    row-identical to the per-path read."""
-    reader = (
+    engine's replacement for the reference's crash-on-bad-row COPY."""
+    df = (
         spark.read.schema(_group_schema(header))
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .csv([m.path for m in members])
     )
-    if dir_read and len(members) >= DIR_READ_MIN_FILES:
-        dirs = sorted({os.path.dirname(m.path) for m in members})
-        # Glob must be at least as wide as list_raw_files' suffix
-        # filter: a narrower pattern (e.g. "reaction*.csv") would
-        # silently exclude a listed file from the scan, audit it as
-        # success/0 rows and manifest it — unrecoverable skip. The
-        # suffix glob keeps listing and scan in exact agreement;
-        # _exact_file_filter still pins the member set.
-        df = reader.option("pathGlobFilter", "*.csv").csv(dirs)
-    else:
-        dir_read = False
-        df = reader.csv([m.path for m in members])
     rename = {raw: conf for raw, conf in CSV_COLUMN_MAP.items() if raw in header}
     df = df.withColumnsRenamed(rename)
     if PANDAS_INDEX_ARTIFACT in df.columns:  # P2, file_manager.py:61-62
         df = df.drop(PANDAS_INDEX_ARTIFACT)
-    df = df.withColumns(
+    return df.withColumns(
         {
             "source_file": F.input_file_name(),
             # day = parent directory name of the file
@@ -255,41 +181,24 @@ def read_csv_header_group(
             ),
         }
     )
-    return _exact_file_filter(df, spark, members) if dir_read else df
 
 
-def read_metadata_json(
-    spark: SparkSession, files: list[RawFile], dir_read: bool = False
-) -> DataFrame:
+def read_metadata_json(spark: SparkSession, files: list[RawFile]) -> DataFrame:
     """Scan metadata JSONs (S3, database_manager.py:111-112) in one
     multiLine read; aliased raw fields renamed to conformed names
     (the pydantic alias map, database_manager.py:13-22). Typing and
-    row-level validation happen in the cleanse step.
-
-    ``dir_read`` (caller asserts the files cover their day dirs, e.g. a
-    fresh daily drop): read the PARENT DIRECTORIES with a glob filter
-    instead of an explicit path list — O(dirs) driver path resolution
-    instead of O(files) — then pin the exact file set back with
-    `_exact_file_filter`, so the plan stays row-identical."""
+    row-level validation happen in the cleanse step."""
     from reactionetl_etl_spark.schemas import JSON_FIELD_MAP
 
-    reader = (
+    df = (
         spark.read.schema(RAW_METADATA_SCHEMA)
         .option("multiLine", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json([f.path for f in files])
+        .withColumnsRenamed(dict(JSON_FIELD_MAP))
     )
-    if dir_read and len(files) >= DIR_READ_MIN_FILES:
-        dirs = sorted({os.path.dirname(f.path) for f in files})
-        # Suffix-wide glob so listing (list_raw_files ".json") and scan
-        # agree — see read_csv_header_group; exactness comes from
-        # _exact_file_filter, not the glob.
-        df = reader.option("pathGlobFilter", "*.json").json(dirs)
-    else:
-        dir_read = False
-        df = reader.json([f.path for f in files])
-    df = df.withColumnsRenamed(dict(JSON_FIELD_MAP))
-    df = df.withColumns(
+    return df.withColumns(
         {
             "source_file": F.input_file_name(),
             "day": F.element_at(F.split(F.input_file_name(), "/"), -2),
@@ -298,4 +207,3 @@ def read_metadata_json(
             ),
         }
     )
-    return _exact_file_filter(df, spark, files) if dir_read else df

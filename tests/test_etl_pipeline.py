@@ -301,12 +301,10 @@ def test_materialize_enrichment_leaves_unfillable_day_untouched(spark, tmp_path)
 
 def test_run_once_builds_no_python_list_frames(spark, tmp_path, monkeypatch):
     """Every driver-built frame on the ingest path is an Arrow local
-    relation: with createDataFrame refusing Python lists, a dir-read
-    first run and a registry-filtered second run (with a rejected file,
-    a malformed row and invalid metadata) both complete."""
+    relation: with createDataFrame refusing Python lists, a first run
+    and a registry-filtered second run (with a rejected file, a
+    malformed row and invalid metadata) both complete."""
     from pyspark.sql import SparkSession
-
-    from reactionetl_etl_spark.sources import raw as R
 
     create = SparkSession.createDataFrame
 
@@ -316,7 +314,6 @@ def test_run_once_builds_no_python_list_frames(spark, tmp_path, monkeypatch):
         return create(self, data, *args, **kwargs)
 
     monkeypatch.setattr(SparkSession, "createDataFrame", arrow_only)
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
     root = tmp_path / "incoming"
     d1, d2 = str(root / "2026-04-01"), str(root / "2026-04-02")
     for n in (31, 32):
@@ -541,67 +538,36 @@ def test_duplicate_metadata_skipped(spark, lake, incoming, tmp_path_factory):
     assert dim.filter(F.col("simulation_id") == sim_uuid(1)).count() == 1
 
 
-def test_dir_read_pipeline_parity(spark, tmp_path_factory, monkeypatch):
-    """run_once over a fresh all-new backlog takes the O(dirs) dir-read
-    fast path; the resulting lake (facts, dims, audit counts) is
-    identical to the per-path lake, and a later partial-dir increment
-    (which must fall back to per-path) loads exactly the new file."""
-    from reactionetl_etl_spark.sources import raw as R
-
-    root = tmp_path_factory.mktemp("incoming_dirread")
+def test_run_once_new_file_in_processed_day_dir_loads_only_it(spark, tmp_path_factory):
+    """A file that lands in a day dir whose other files are already
+    processed is loaded alone: the batch is the listed new paths, not
+    the directory."""
+    root = tmp_path_factory.mktemp("incoming_increment")
     d1, d2 = str(root / "2026-02-01"), str(root / "2026-02-02")
     for day_dir, day, sims in ((d1, "2026-02-01", (1, 2, 3)), (d2, "2026-02-02", (4, 5))):
         for n in sims:
             write_reaction_csv(day_dir, n, N_ROWS)
             write_metadata_json(day_dir, n, day)
+    lk = ReactionLake(str(tmp_path_factory.mktemp("lake_increment")))
+    assert lk.run_once(spark, str(root), now=T0).files_processed == 10
 
-    def lake_state(lk):
-        fact = sorted(
-            map(tuple, lk.fact(spark).drop("load_ts", "row_id").collect())
-        )
-        dim = sorted(map(tuple, lk.dim(spark).drop("load_ts").collect()))
-        audit = sorted(
-            (r["source_file"].rsplit("/", 1)[-1], r["status"], r["records_inserted"])
-            for r in lk.audit(spark).collect()
-        )
-        return fact, dim, audit
-
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
-    fast = ReactionLake(str(tmp_path_factory.mktemp("lake_fast")))
-    res_fast = fast.run_once(spark, str(root), now=T0)
-
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 10**9)
-    slow = ReactionLake(str(tmp_path_factory.mktemp("lake_slow")))
-    res_slow = slow.run_once(spark, str(root), now=T0)
-
-    assert res_fast.files_processed == res_slow.files_processed == 10
-    assert lake_state(fast) == lake_state(slow)
-
-    # partial-dir increment: one new file lands in an existing day dir;
-    # len(new) != len(listed) so the reader falls back to per-path
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
     write_reaction_csv(d2, 6, N_ROWS)
     write_metadata_json(d2, 6, "2026-02-02")
-    res2 = fast.run_once(spark, str(root), now=T0)
-    assert res2.files_processed == 2
-    assert res2.fact_rows_loaded == N_ROWS
-    assert fast.fact(spark).count() == 6 * N_ROWS
-    assert fast.dim(spark).count() == 6
+    res = lk.run_once(spark, str(root), now=T0)
+    assert res.files_processed == 2
+    assert res.fact_rows_loaded == N_ROWS
+    assert lk.fact(spark).count() == 6 * N_ROWS
+    assert lk.dim(spark).count() == 6
 
 
-def test_dir_read_pipeline_ingests_odd_basename(spark, tmp_path_factory, monkeypatch):
-    """ADVICE-r9 regression, end to end: a *.csv batch member whose
-    basename does not match the reaction* convention must be INGESTED
-    by the dir-read fast path — not silently excluded by a narrow scan
-    glob, audited as success/0 rows, and manifest-blacklisted forever.
-    The odd file here has a valid header and rows, so its fact rows
-    must land and its audit row must carry the true count; a second
-    run_once must find nothing new (the audit recorded it as processed,
-    correctly this time)."""
+def test_run_once_ingests_odd_basename(spark, tmp_path_factory):
+    """A *.csv batch member whose basename does not match the reaction*
+    convention is INGESTED — not audited as success/0 rows and then
+    skipped forever as processed. The odd file has a valid header and
+    rows, so its fact rows must land and its audit row must carry the
+    true count; a second run_once must find nothing new."""
     import os
     import shutil
-
-    from reactionetl_etl_spark.sources import raw as R
 
     root = tmp_path_factory.mktemp("incoming_oddname")
     day = str(root / "2026-02-03")
@@ -612,7 +578,6 @@ def test_dir_read_pipeline_ingests_odd_basename(spark, tmp_path_factory, monkeyp
     odd = os.path.join(day, "legacy_export.csv")
     shutil.move(src, odd)
 
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
     lk = ReactionLake(str(tmp_path_factory.mktemp("lake_oddname")))
     res = lk.run_once(spark, str(root), now=T0)
     assert res.files_processed == 7  # 4 csvs + 3 jsons

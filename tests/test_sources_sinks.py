@@ -387,23 +387,22 @@ def test_snapshot_changes_streaming_source(spark, tmp_path):
     assert {(r["k"], r["v"], r["_change_type"]) for r in spark.read.parquet(out).collect()} == now
 
 
-def test_dir_read_parity_and_exact_file_pinning(spark, tmp_path, monkeypatch):
-    """The O(dirs) dir+glob fast path (fresh-backlog ingest) is
-    row-identical to the per-path read, and the broadcast semi-join
-    pins the EXACT member set — a stray neighbour file in the same day
-    dir (already processed, or landed between listing and read) never
-    leaks rows into the batch."""
+def test_per_path_read_pins_exact_file_set(spark, tmp_path):
+    """The cleanse readers scan exactly the listed files: a stray
+    neighbour file in a listed day dir (already processed, or landed
+    after listing) never leaks rows, and a listed *.csv / *.json whose
+    basename does not follow the reaction*/metadata_* convention is
+    still scanned."""
     import os
+    import shutil
 
-    from tests.fixtures_etl import write_metadata_json, write_reaction_csv
+    from tests.fixtures_etl import sim_uuid, write_metadata_json, write_reaction_csv
 
     from reactionetl_etl_spark.etl.cleanse import (
         cleanse_incoming_csvs,
         cleanse_metadata_jsons,
     )
-    from reactionetl_etl_spark.sources import raw as R
-
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
+    from reactionetl_etl_spark.sources.raw import list_raw_files, strip_uri_scheme
 
     incoming = str(tmp_path / "incoming")
     d1 = os.path.join(incoming, "2026-01-05")
@@ -412,95 +411,69 @@ def test_dir_read_parity_and_exact_file_pinning(spark, tmp_path, monkeypatch):
         for n in sims:
             write_reaction_csv(day_dir, n, n_rows=6)
             write_metadata_json(day_dir, n)
-    # stray neighbours: same glob pattern, same header, NOT in the batch
+    # same header/shape, non-conventional basenames — valid list members
+    shutil.move(write_reaction_csv(d1, 7, n_rows=6), os.path.join(d1, "legacy_export.csv"))
+    shutil.move(write_metadata_json(d2, 8), os.path.join(d2, "sidecar.json"))
+    # stray neighbours: same suffix, same header, NOT in the batch
     write_reaction_csv(d1, 99, n_rows=7)
     write_metadata_json(d2, 98)
 
-    from tests.fixtures_etl import sim_uuid
+    csvs = [f for f in list_raw_files(incoming, ".csv") if sim_uuid(99) not in f.path]
+    jsons = [f for f in list_raw_files(incoming, ".json") if sim_uuid(98) not in f.path]
+    assert len(csvs) == 6 and len(jsons) == 6
 
-    csvs = [f for f in R.list_raw_files(incoming, ".csv") if sim_uuid(99) not in f.path]
-    jsons = [f for f in R.list_raw_files(incoming, ".json") if sim_uuid(98) not in f.path]
-    assert len(csvs) == 5 and len(jsons) == 5
-
-    def rows(result):
-        clean = sorted(map(tuple, result.clean.drop("load_ts").collect()))
-        quar = result.quarantined.count()
+    def scanned(result):
+        rows = result.clean.select("source_file").unionByName(
+            result.quarantined.select("source_file")
+        ).collect()
         result.release()
-        return clean, quar
+        return len(rows), {strip_uri_scheme(r["source_file"]) for r in rows}
 
-    per_path = rows(cleanse_incoming_csvs(spark, csvs, dir_read=False))
-    dir_read = rows(cleanse_incoming_csvs(spark, csvs, dir_read=True))
-    assert dir_read == per_path
-    assert len(per_path[0]) == 5 * 6  # stray file's 7 rows never leak
-
-    mp = rows(cleanse_metadata_jsons(spark, jsons, dir_read=False))
-    md = rows(cleanse_metadata_jsons(spark, jsons, dir_read=True))
-    assert md == mp
-    assert len(mp[0]) == 5
+    # every member's rows, the odd file's included; the stray's 7 never
+    assert scanned(cleanse_incoming_csvs(spark, csvs)) == (6 * 6, {f.path for f in csvs})
+    assert scanned(cleanse_metadata_jsons(spark, jsons)) == (6, {f.path for f in jsons})
 
 
-def test_dir_read_ingests_nonconventional_names(spark, tmp_path, monkeypatch):
-    """Listing (list_raw_files, suffix-filtered) and the dir-read scan
-    glob must agree: a *.csv / *.json file whose basename does NOT
-    follow the reaction*/metadata_* convention is still a listed batch
-    member, so the O(dirs) fast path must ingest it — not silently
-    audit it as success/0-rows and manifest-skip it forever."""
-    import os
-    import shutil
+def test_per_path_cleanse_lists_in_at_most_one_task_per_core(spark, tmp_path):
+    """A per-path read of more than 32 files (Spark's listing threshold)
+    is listed by a Spark job. The session caps that job at its listing
+    parallelism, one task per core, instead of one task per path."""
+    from tests.fixtures_etl import write_reaction_csv
 
-    from tests.fixtures_etl import write_metadata_json, write_reaction_csv
+    from reactionetl_etl_spark.etl.cleanse import cleanse_incoming_csvs
+    from reactionetl_etl_spark.sources.raw import list_raw_files
 
-    from reactionetl_etl_spark.etl.cleanse import (
-        cleanse_incoming_csvs,
-        cleanse_metadata_jsons,
-    )
-    from reactionetl_etl_spark.sources import raw as R
+    incoming = tmp_path / "incoming"
+    for n in range(64):
+        write_reaction_csv(str(incoming / f"2026-01-0{5 + n % 2}"), n + 1, n_rows=2)
+    csvs = list_raw_files(str(incoming), ".csv")
+    assert len(csvs) == 64
 
-    monkeypatch.setattr(R, "DIR_READ_MIN_FILES", 1)
-
-    incoming = str(tmp_path / "incoming")
-    day = os.path.join(incoming, "2026-01-07")
-    for n in (1, 2, 3):
-        write_reaction_csv(day, n, n_rows=4)
-        write_metadata_json(day, n)
-    # same header/shape, non-conventional basenames — valid list members
-    src_csv = write_reaction_csv(day, 7, n_rows=4)
-    odd_csv = os.path.join(day, "legacy_export.csv")
-    shutil.move(src_csv, odd_csv)
-    src_json = write_metadata_json(day, 8)
-    odd_json = os.path.join(day, "sidecar.json")
-    shutil.move(src_json, odd_json)
-
-    csvs = R.list_raw_files(incoming, ".csv")
-    jsons = R.list_raw_files(incoming, ".json")
-    assert odd_csv in {f.path for f in csvs}
-    assert odd_json in {f.path for f in jsons}
-
-    def totals(result):
-        clean = sorted(map(tuple, result.clean.drop("load_ts").collect()))
-        quar = sorted(map(tuple, result.quarantined.drop("load_ts").collect()))
-        result.release()
-        return clean, quar
-
-    pp_csv = totals(cleanse_incoming_csvs(spark, csvs, dir_read=False))
-    dr_csv = totals(cleanse_incoming_csvs(spark, csvs, dir_read=True))
-    assert dr_csv == pp_csv
-    # the odd file's 4 rows are seen by the fast path, not dropped
-    assert len(dr_csv[0]) + len(dr_csv[1]) == 4 * 4
-
-    pp_json = totals(cleanse_metadata_jsons(spark, jsons, dir_read=False))
-    dr_json = totals(cleanse_metadata_jsons(spark, jsons, dir_read=True))
-    assert dr_json == pp_json
-    assert len(dr_json[0]) + len(dr_json[1]) == 4
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "per_path_listing"
+    sc.setJobGroup(group, "per-path listing test")
+    try:
+        cleanse_incoming_csvs(spark, csvs).release()
+        jobs = list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    listing = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism"))
+    assert tasks, "a 64-path read runs a listing job"
+    assert max(tasks) <= listing
+    assert max(tasks) < len(csvs)
 
 
-def test_probe_csv_headers_same_groups_on_driver_and_spark_job(
-    spark, tmp_path, monkeypatch
-):
+def test_probe_csv_headers_groups_by_exact_header(tmp_path):
     """A mixed-header backlog groups by exact header tuple: a valid
     header, the pandas `Unnamed: 0` artifact, and a header missing a
-    required column. The Spark-job branch (backlogs above
-    DRIVER_PROBE_MAX_FILES) returns the same groups as the driver one."""
+    required column."""
     import os
 
     from tests.fixtures_etl import RAW_HEADER, write_reaction_csv
@@ -514,20 +487,17 @@ def test_probe_csv_headers_same_groups_on_driver_and_spark_job(
     files = R.list_raw_files(os.path.dirname(day), ".csv")
     assert len(files) == 4
 
-    driver = R.probe_csv_headers(spark, files)
+    groups = R.probe_csv_headers(files)
     missing_header = tuple(h for h in RAW_HEADER if h != "T (K)")
-    assert {h: {f.path for f in m} for h, m in driver.items()} == {
+    assert {h: {f.path for f in m} for h, m in groups.items()} == {
         tuple(RAW_HEADER): valid,
         ("Unnamed: 0", *RAW_HEADER): artifact,
         missing_header: missing,
     }
-    assert all(f.day == "2026-01-05" for m in driver.values() for f in m)
-    loadable, rejected = R.split_valid_header_groups(driver)
+    assert all(f.day == "2026-01-05" for m in groups.values() for f in m)
+    loadable, rejected = R.split_valid_header_groups(groups)
     assert set(rejected) == {missing_header}
     assert set(loadable) == {tuple(RAW_HEADER), ("Unnamed: 0", *RAW_HEADER)}
-
-    monkeypatch.setattr(R, "DRIVER_PROBE_MAX_FILES", 0)
-    assert R.probe_csv_headers(spark, files) == driver
 
 
 def test_read_if_exists_missing_empty_and_corrupt(spark, tmp_path):
